@@ -245,7 +245,7 @@ case class CosineSim(child: Expression, q: Array[Double], qNorm: Double)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val qr = ctx.addReferenceObj("q", q, "double[]")
     defineCodeGen(ctx, ev, v =>
-      s"graft.expr.ExprOps.cosineSim($v, $isFloat, $qr, ${qNorm}D)")
+      s"graft.expr.ExprOps.cosineSim($v, $isFloat, $qr, ${ExprOps.javaDouble(qNorm)})")
   }
   override protected def withNewChildInternal(c: Expression): CosineSim =
     copy(child = c)
@@ -323,7 +323,7 @@ case class CosineSimLit(child: Expression, q: Array[Double], qNorm: Double)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val qr = ctx.addReferenceObj("q", q, "double[]")
     defineCodeGen(ctx, ev, v =>
-      s"graft.expr.ExprOps.cosineSimLit($v, $isFloat, $qr, ${qNorm}D)")
+      s"graft.expr.ExprOps.cosineSimLit($v, $isFloat, $qr, ${ExprOps.javaDouble(qNorm)})")
   }
   override protected def withNewChildInternal(c: Expression): CosineSimLit =
     copy(child = c)
@@ -529,6 +529,11 @@ case class NearestCosineCid(child: Expression, cids: Array[Long],
 
 /** Static helpers referenced from generated code. */
 object ExprOps {
+  /** Java source for the double `d`, bit-exact for every value: a spliced
+    * `${d}D` is uncompilable for NaN/Infinity ("NaND"), which makes Spark
+    * fall back to interpreted evaluation without a word. */
+  def javaDouble(d: Double): String =
+    s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(d)}L)"
   /** Bucket of `v` given ascending boundaries: the count of bounds <= v. */
   def rangeBucket(bounds: Array[Long], v: Long): Int = {
     val i = java.util.Arrays.binarySearch(bounds, v)

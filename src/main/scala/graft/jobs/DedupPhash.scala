@@ -28,7 +28,7 @@ import graft.table.{DataFileMeta, GraftTable, Snapshot}
  * exact-equal collapse runs first so band buckets stay small, then the band
  * self-join emits candidate pairs, hamming-filtered, and connected
  * components are resolved by iterative min-canonical propagation (the same
- * frontier-loop shape as [[ExpireSnapshots.reachable]]).
+ * frontier-loop shape as [[graft.operators.GraphOps.traverse]]).
  */
 object DedupPhash {
 
@@ -58,6 +58,7 @@ object DedupPhash {
   def run(t: GraftTable,
       hammingThreshold: Int = 0,
       targetBytes: Long = 8L * 1024 * 1024): Result = {
+    val jobT0 = System.nanoTime()
     val spark = t.spark
     val base = t.currentSnapshot
     val files = t.snapshotFiles(base)
@@ -169,7 +170,8 @@ object DedupPhash {
     victimsB.unpersist()
     val snap = t.commit("merge", rewritten, affected.map(_.path).toSet,
       Map("op" -> "dedup", "mode" -> mode, "victims" -> vCount.toString))
-    graft.lineage.Metrics.recordJob(t.root, "dedup", 0, Map(
+    graft.lineage.Metrics.recordJob(t.root, "dedup",
+      (System.nanoTime() - jobT0) / 1000000, Map(
       "mode" -> mode, "groups" -> dupGroups.toString,
       "victims" -> vCount.toString,
       "rewritten-files" -> affected.size.toString))

@@ -3,32 +3,30 @@ package graft.jobs
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.SparkSession
 
 import graft.table.{GraftTable, MetaIO, TableMetadata}
 
 /**
- * Reference-counted snapshot expiration via an iterative reachability
- * DataFrame over the metadata tree (snapshot -> manifest -> data file).
+ * Reference-counted snapshot expiration over the metadata tree
+ * (snapshot -> manifest -> data file).
  *
  * Direct re-grounding of the reference's refcounted orphan cleanup
  * (pipeline/src/indexing/pipeline.ts:263-308: delete entities whose
- * sourceChunkIds refcount drains to zero) and its depth-limited traversal
- * (sqlite-graph-storage.ts:201-226): manifest liveness is computed by
- * frontier expansion over the snapshot->manifest edge DataFrame, and file
- * liveness by a distributed anti-join (U3) of the dead manifests' file
- * entries against the live manifests' — never deleting anything reachable
- * from a retained snapshot, no matter how many snapshots share a manifest.
+ * sourceChunkIds refcount drains to zero): a manifest is live iff a retained
+ * snapshot lists it (the graph is one hop deep), and a data file is dead iff
+ * a dead manifest lists it and no live manifest does — never deleting
+ * anything reachable from a retained snapshot, no matter how many snapshots
+ * share a manifest.
  *
- * Scale design: the live FILE set is never materialized on the driver (at
- * 10^12-row scale manifests hold ~10^6-10^8 file entries — hundreds of MB of
- * path strings). Manifests are read as a distributed JSON scan; liveness is
- * a left-anti join; physical deletion is executor-side (foreachPartition —
- * the natural place for object-store bulk-DELETE batches), with a driver
- * loop only below [[DriverDeleteMax]]. Manifest NAMES (one per ~1000 files)
- * stay driver-side — metadata scale, same as every commit.
+ * Scale design: liveness is plain set work on the driver over manifests read
+ * through the [[MetaIO.readManifest]] cache. That is the same O(live file
+ * entries) driver walk every [[GraftTable.commit]] (and every scan plan)
+ * already does, so expire adds no new driver-scale bound. The one step that
+ * is distributed is physical deletion above [[DriverDeleteMax]] files
+ * (executor-side foreachPartition — the natural place for object-store
+ * bulk-DELETE batches); smaller lists are deleted in a driver loop that
+ * starts no Spark job.
  */
 object ExpireSnapshots {
 
@@ -40,86 +38,47 @@ object ExpireSnapshots {
       deletedBytes: Long,
       orphansSwept: Long)
 
-  /** Generic iterative reachability over an (src, dst) edge DataFrame.
-    * Loops until the frontier is empty; each round is
-    * frontier |><| edges -> new frontier \ visited (left-anti). */
-  def reachable(spark: SparkSession, edges: DataFrame, seeds: DataFrame): DataFrame = {
-    var visited = seeds.select(col("node")).distinct().localCheckpoint(true)
-    var frontier = visited
-    var n = frontier.count()
-    while (n > 0) {
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select(edges("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint(true) // truncate lineage each round (iterative plan growth)
-      visited = visited.union(next).localCheckpoint(true)
-      frontier = next
-      n = frontier.count()
-    }
-    visited
-  }
+  /** Every data-file path that `manifests` list. */
+  private def listedPaths(root: String, manifests: Iterable[String]): Set[String] =
+    manifests.iterator.flatMap(mf => MetaIO.readManifest(root, mf).files.map(_.path)).toSet
 
-  /** (path, fileSizeBytes) of every file entry in `manifests`, read as a
-    * DISTRIBUTED json scan of the manifest files (schema-projected: stats
-    * maps never deserialize). Empty manifest list -> empty frame. */
-  private def manifestFilesDf(t: GraftTable, manifests: Seq[String]): DataFrame = {
-    val spark = t.spark
-    val entry = StructType(Seq(
-      StructField("path", StringType), StructField("fileSizeBytes", LongType)))
-    val sch = StructType(Seq(StructField("files", ArrayType(entry))))
-    if (manifests.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(entry.fields))
-    val paths = manifests.map(m => MetaIO.metadataDir(t.root).resolve(m).toString)
-    spark.read.schema(sch).json(paths: _*)
-      .select(explode(col("files")).as("f"))
-      .select(col("f.path").as("path"), col("f.fileSizeBytes").as("fileSizeBytes"))
-  }
-
-  /** Driver-loop cutoff: deletion lists at or below this stream through
-    * toLocalIterator on the driver (cheaper than a Spark job for tiny N);
-    * above it, deletes run executor-side via foreachPartition. */
+  /** Driver-loop cutoff: deletion lists at or below this are deleted in a
+    * driver loop (no Spark job); above it, deletes run executor-side via
+    * foreachPartition. */
   val DriverDeleteMax = 512
 
-  /** Physically delete `files` (path, fileSizeBytes), returning
-    * (deletedCount, deletedBytes). Distributed by default: each executor
-    * partition deletes its slice (on object storage this is where the bulk
-    * DELETE batch call goes), counts flow back via accumulators; a small
-    * list (<= DriverDeleteMax) short-circuits to a driver loop. At 10^7
-    * dead files the driver-serial alternative is hours of wall clock. */
+  /** Physically delete `files` (root-relative path, fileSizeBytes),
+    * returning (deletedCount, deletedBytes). A small list (<= DriverDeleteMax)
+    * is a driver loop; a larger one is distributed: each executor partition
+    * deletes its slice (on object storage this is where the bulk DELETE
+    * batch call goes), counts flow back via accumulators. At 10^7 dead files
+    * the driver-serial alternative is hours of wall clock. */
   private[graft] def deleteListed(spark: SparkSession, root: String,
-      files: DataFrame): (Long, Long) = {
+      files: Seq[(String, Long)]): (Long, Long) = {
     // Absolutized ON THE DRIVER before the closure captures it: executor JVMs
     // under local-cluster have different working directories, so a relative
     // root would make executor-side deleteIfExists silently no-op.
     val rootAbs = Paths.get(root).toAbsolutePath.toString
-    val work = files.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = work.count()
-      if (n == 0) (0L, 0L)
-      else if (n <= DriverDeleteMax) {
-        var cnt = 0L; var bytes = 0L
-        val it = work.toLocalIterator()
-        while (it.hasNext) {
-          val r = it.next()
-          if (Files.deleteIfExists(Paths.get(rootAbs, r.getString(0)))) {
-            cnt += 1; bytes += r.getLong(1)
-          }
-        }
-        (cnt, bytes)
-      } else {
-        val cnt = spark.sparkContext.longAccumulator("expire.deletedFiles")
-        val bytes = spark.sparkContext.longAccumulator("expire.deletedBytes")
-        work.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
+    if (files.size <= DriverDeleteMax) {
+      var cnt = 0L; var bytes = 0L
+      files.foreach { case (p, b) =>
+        if (Files.deleteIfExists(Paths.get(rootAbs, p))) { cnt += 1; bytes += b }
+      }
+      (cnt, bytes)
+    } else {
+      import spark.implicits._
+      val cnt = spark.sparkContext.longAccumulator("expire.deletedFiles")
+      val bytes = spark.sparkContext.longAccumulator("expire.deletedBytes")
+      files.toDF("path", "fileSizeBytes").foreachPartition {
+        it: Iterator[org.apache.spark.sql.Row] =>
           it.foreach { r =>
             if (Files.deleteIfExists(Paths.get(rootAbs, r.getString(0)))) {
               cnt.add(1); bytes.add(r.getLong(1))
             }
           }
-        }
-        (cnt.value, bytes.value)
       }
-    } finally { work.unpersist(); () }
+      (cnt.value, bytes.value)
+    }
   }
 
   /** Retain set from a declarative policy (Iceberg's retain-last /
@@ -140,8 +99,6 @@ object ExpireSnapshots {
   def run(t: GraftTable, retain: Seq[Long], deleteFiles: Boolean = true,
       sweepOrphans: Boolean = true, orphanMinAgeMs: Long = 60L * 60 * 1000): Result = {
     val jobT0 = System.nanoTime()
-    val spark = t.spark
-    import spark.implicits._
     val m = t.meta
     val retainSet = retain.toSet
     require(m.currentSnapshotId.forall(retainSet.contains),
@@ -149,23 +106,20 @@ object ExpireSnapshots {
     val known = m.snapshots.map(_.snapshotId).toSet
     require(retainSet.subsetOf(known), s"unknown snapshot ids: ${retainSet -- known}")
 
-    // Manifest liveness: reachability over the (small) snapshot->manifest
-    // edge frame. Manifest names are metadata-scale (~1 per 1000 files).
-    val snapManifest = m.snapshots
-      .flatMap(s => s.manifests.map(mf => (s"snap:${s.snapshotId}", s"man:$mf")))
-    val seeds = retainSet.toSeq.map(id => s"snap:$id").toDF("node")
-    val liveManifests = reachable(spark, snapManifest.toDF("src", "dst"), seeds)
-      .as[String].collect().collect { case s if s.startsWith("man:") => s.stripPrefix("man:") }
-      .toSet
-    val allManifests = m.snapshots.flatMap(_.manifests).distinct
-    val deadManifests = allManifests.filterNot(liveManifests.contains)
+    // Manifest liveness: the manifests a retained snapshot lists.
+    val liveManifests = m.snapshots.filter(s => retainSet.contains(s.snapshotId))
+      .flatMap(_.manifests).toSet
+    val deadManifests = m.snapshots.flatMap(_.manifests).distinct
+      .filterNot(liveManifests.contains)
 
-    // File liveness: distributed anti-join; only the DELETION list is
-    // collected, in partition batches. The live set never leaves the cluster.
-    val liveFiles = manifestFilesDf(t, liveManifests.toSeq.sorted)
-    val deadFiles = manifestFilesDf(t, deadManifests)
-      .join(liveFiles, Seq("path"), "left_anti")
-      .groupBy(col("path")).agg(max(col("fileSizeBytes")).as("fileSizeBytes"))
+    // File liveness: dead manifests' entries minus every path a live manifest
+    // lists, one entry per path (max size, should manifests disagree).
+    val livePaths = listedPaths(t.root, liveManifests)
+    val deadFiles: Seq[(String, Long)] = deadManifests
+      .flatMap(mf => MetaIO.readManifest(t.root, mf).files)
+      .filterNot(f => livePaths.contains(f.path))
+      .groupMapReduce(_.path)(_.fileSizeBytes)(math.max)
+      .toSeq.sorted
 
     // Commit new metadata first (CAS), then physically delete: a crash
     // between the two only leaves sweepable orphans, never dangling refs.
@@ -211,21 +165,16 @@ object ExpireSnapshots {
       if (attempts > 20) throw new IllegalStateException("expire: CAS contention")
     }
 
-    var deletedBytes = 0L
-    var deletedFiles = 0L
-    if (!deleteFiles) {
-      // Dry run: report the PLANNED reclamation so callers can preview.
-      val planned = deadFiles.agg(count(lit(1)), coalesce(sum(col("fileSizeBytes")), lit(0L))).head()
-      deletedFiles = planned.getLong(0)
-      deletedBytes = planned.getLong(1)
-    }
-    if (deleteFiles) {
-      val (n, b) = deleteListed(spark, t.root,
-        deadFiles.select(col("path"), col("fileSizeBytes")))
-      deletedFiles = n; deletedBytes = b
-      deadManifests.foreach(mf =>
-        Files.deleteIfExists(MetaIO.metadataDir(t.root).resolve(mf)))
-    }
+    val (deletedFiles, deletedBytes) =
+      if (!deleteFiles) {
+        // Dry run: report the PLANNED reclamation so callers can preview.
+        (deadFiles.size.toLong, deadFiles.map(_._2).sum)
+      } else {
+        val deleted = deleteListed(t.spark, t.root, deadFiles)
+        deadManifests.foreach(mf =>
+          Files.deleteIfExists(MetaIO.metadataDir(t.root).resolve(mf)))
+        deleted
+      }
 
     // Manifest-orphan sweep: manifest files on disk referenced by no
     // snapshot at all (lost CAS attempts write manifests first) — metadata
@@ -247,8 +196,7 @@ object ExpireSnapshots {
 
     // Orphan sweep: data files on disk referenced by NO manifest of any
     // retained snapshot (e.g. outputs of killed, never-committed units).
-    // The disk listing is driver-side (a storage-API LIST); liveness is the
-    // same distributed anti-join, so the live set again stays distributed.
+    // The disk listing is driver-side (a storage-API LIST).
     var orphans = 0L
     if (sweepOrphans && deleteFiles) {
       val dataDir = Paths.get(t.root, "data")
@@ -272,12 +220,9 @@ object ExpireSnapshots {
           // sweep references files absent from the old live set, and the
           // min-age guard alone must not be their only protection
           // (orphanMinAgeMs=0 is a supported single-writer mode).
-          val freshManifests = t.meta.snapshots.flatMap(_.manifests).distinct
-          val freshLive = manifestFilesDf(t, freshManifests)
-          val sweepList = onDisk.toDF("path")
-            .join(freshLive.select("path"), Seq("path"), "left_anti")
-            .select(col("path"), lit(0L).as("fileSizeBytes"))
-          orphans = deleteListed(spark, t.root, sweepList)._1
+          val freshLive = listedPaths(t.root, t.meta.snapshots.flatMap(_.manifests).distinct)
+          orphans = deleteListed(t.spark, t.root,
+            onDisk.filterNot(freshLive.contains).map(_ -> 0L))._1
         }
       }
     }

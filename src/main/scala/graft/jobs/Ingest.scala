@@ -89,6 +89,7 @@ object Ingest {
   def run(t: GraftTable, dir: String,
       include: Seq[String] = Nil, exclude: Seq[String] = Nil): Result = {
     import graft.expr.functions._
+    val jobT0 = System.nanoTime()
     val files = scan(t, dir, include, exclude)
     // The scanned-file count is a listing-only action (count() prunes the
     // content column, so binaryFile never opens file bodies) — it is what
@@ -119,7 +120,8 @@ object Ingest {
     if (out.isEmpty) return Result(None, filesScanned, 0, 0, 0)
     val rows = out.map(_.rowCount).sum
     val snap = t.commit("append", out, Set.empty, Map("ingest-dir" -> dir))
-    graft.lineage.Metrics.recordJob(t.root, "ingest", 0, Map(
+    graft.lineage.Metrics.recordJob(t.root, "ingest",
+      (System.nanoTime() - jobT0) / 1000000, Map(
       "dir" -> dir, "files-scanned" -> filesScanned.toString,
       "files-written" -> out.size.toString,
       "skipped" -> (filesScanned - rows).toString,

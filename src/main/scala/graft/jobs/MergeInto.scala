@@ -70,6 +70,7 @@ object MergeInto {
   def run(t: GraftTable, source0: DataFrame,
       broadcastThresholdBytes: Long = 64L * 1024 * 1024,
       targetBytes: Long = 8L * 1024 * 1024): Result = {
+    val jobT0 = System.nanoTime()
     val spark = t.spark
     val base = t.currentSnapshot
     val files = t.snapshotFiles(base)
@@ -200,7 +201,8 @@ object MergeInto {
     val snap = t.commit("merge", updatedFilesMeta ++ insertFiles,
       affected.map(_.path).toSet,
       Map("strategy" -> strategy, "source-rows" -> srcCount.toString))
-    graft.lineage.Metrics.recordJob(t.root, "merge", 0, Map(
+    graft.lineage.Metrics.recordJob(t.root, "merge",
+      (System.nanoTime() - jobT0) / 1000000, Map(
       "strategy" -> strategy, "matched-files" -> affected.size.toString,
       "inserted-rows" -> insertedRows.toString))
     Result(Some(snap), srcCount - insertedRows, affected.size, insertedRows,
@@ -222,6 +224,7 @@ object MergeInto {
     * ~0.1% of it; keys join under AQE (broadcast when small). */
   def deleteMatched(t: GraftTable, keys: DataFrame,
       targetBytes: Long = 8L * 1024 * 1024): DeleteResult = {
+    val jobT0 = System.nanoTime()
     val spark = t.spark
     val base = t.currentSnapshot
     val files = t.snapshotFiles(base)
@@ -252,7 +255,8 @@ object MergeInto {
     val deleted = affected.map(_.rowCount).sum - out.map(_.rowCount).sum
     val snap = t.commit("delete", out, affected.map(_.path).toSet,
       Map("deleted-rows" -> deleted.toString))
-    graft.lineage.Metrics.recordJob(t.root, "delete", 0, Map(
+    graft.lineage.Metrics.recordJob(t.root, "delete",
+      (System.nanoTime() - jobT0) / 1000000, Map(
       "deleted-rows" -> deleted.toString,
       "rewritten-files" -> affected.size.toString))
     DeleteResult(Some(snap), deleted, affected.size)

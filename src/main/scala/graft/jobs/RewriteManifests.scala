@@ -26,6 +26,7 @@ object RewriteManifests {
 
   def run(t: GraftTable, targetFilesPerManifest: Int = 1000,
       recomputeStats: Boolean = false): Result = {
+    val jobT0 = System.nanoTime()
     // The whole derive-and-commit is retried from a FRESH base on CAS loss:
     // committing manifests built from a stale file set would silently drop
     // files a concurrent commit added (or resurrect ones it removed) — a
@@ -89,7 +90,8 @@ object RewriteManifests {
       val nm = m.copy(currentSnapshotId = Some(snap.snapshotId),
         snapshots = m.snapshots :+ snap)
       if (MetaIO.tryCommit(t.root, v, nm)) {
-        graft.lineage.Metrics.recordJob(t.root, "rewrite-manifests", 0, Map(
+        graft.lineage.Metrics.recordJob(t.root, "rewrite-manifests",
+          (System.nanoTime() - jobT0) / 1000000, Map(
           "before" -> before.toString, "after" -> names.size.toString,
           "files" -> files.size.toString))
         return Result(Some(snap), skippedUnchanged = false, before, names.size,

@@ -23,6 +23,7 @@ object Transcode {
 
   def run(t: GraftTable, from: String = "png", to: String = "jpg",
       targetBytes: Long = 8L * 1024 * 1024): Result = {
+    val jobT0 = System.nanoTime()
     val spark = t.spark
     val base = t.currentSnapshot
     val affected = t.planFiles(Seq(graft.table.EqString("fmt", from)))
@@ -63,7 +64,8 @@ object Transcode {
     }
     val snap = t.commit("transcode", files, affected.map(_.path).toSet,
       Map("from" -> from, "to" -> to))
-    graft.lineage.Metrics.recordJob(t.root, "transcode", 0, Map(
+    graft.lineage.Metrics.recordJob(t.root, "transcode",
+      (System.nanoTime() - jobT0) / 1000000, Map(
       "from" -> from, "to" -> to, "files" -> affected.size.toString))
     Result(Some(snap), files.map(_.rowCount).sum, affected.size)
   }

@@ -262,13 +262,15 @@ object MetaIO {
 
   def load(root: String): Option[(Int, TableMetadata)] =
     currentVersion(root).map { v =>
-      val sz = Files.size(versionFile(root, v))
-      val cached = metaCache.get((root, v, sz))
+      val key = (root, v, Files.size(versionFile(root, v)))
+      val cached = metaCache.get(key)
       if (cached != null) (v, cached)
       else {
-        val s = new String(Files.readAllBytes(versionFile(root, v)), StandardCharsets.UTF_8)
-        val m = TableJson.read[TableMetadata](s)
-        metaCache.put((root, v, s.getBytes(StandardCharsets.UTF_8).length.toLong), m)
+        // Version files are immutable: the file read here has the size the
+        // key was built from, so the put key is the lookup key.
+        val m = TableJson.read[TableMetadata](
+          new String(Files.readAllBytes(versionFile(root, v)), StandardCharsets.UTF_8))
+        metaCache.put(key, m)
         (v, m)
       }
     }

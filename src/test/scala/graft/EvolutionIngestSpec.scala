@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.images.{ImageCodec, ImageGen}
-import graft.jobs.{Compact, Ingest}
+import graft.jobs.{Cluster, Compact, DedupPhash, ExpireSnapshots, Ingest, MergeInto,
+  RewriteManifests, Transcode}
 import graft.lineage.Metrics
 import graft.table.{GraftTable, SchemaEvolution}
 
@@ -233,6 +234,30 @@ class EvolutionIngestSpec extends GraftSuite {
     val queries = events.filter(_.kind == "query")
     assert(queries.nonEmpty)
     assert(queries.exists(_.durationMs >= 0))
+  }
+
+  test("observability: every maintenance job kind records a non-zero duration") {
+    import spark.implicits._
+    val t = TestFixtures.freshTable("metrics-durations")
+    val dir = TestFixtures.workRoot.resolve("metrics-durations-src")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve("one.png"), ImageGen.row(1, seed = 13L)._2)
+    Compact.run(t, targetBytes = 4L * 1024 * 1024)
+    Cluster.run(t, curve = "zorder", mode = "global", targetBytes = 192L * 1024)
+    MergeInto.run(t, Seq(("img-000000000001", "a fixed caption")).toDF("image_id", "caption"))
+    MergeInto.deleteMatched(t, Seq("img-000000000002").toDF("image_id"))
+    DedupPhash.run(t)
+    Transcode.run(t, "png", "jpg")
+    Ingest.run(t, dir.toString)
+    RewriteManifests.run(t)
+    ExpireSnapshots.run(t, retain = Seq(t.currentSnapshot.snapshotId))
+    val jobs = Metrics.events(t.root).filter(_.kind == "job")
+    Seq("compact", "cluster", "merge", "delete", "dedup", "transcode", "ingest",
+      "rewrite-manifests", "expire").foreach { k =>
+      val recs = jobs.filter(_.name == k)
+      assert(recs.nonEmpty, s"no $k job record in ${jobs.map(_.name)}")
+      assert(recs.forall(_.durationMs > 0), s"$k: ${recs.map(_.durationMs)}")
+    }
   }
 
   test("metrics tail: bounded recent-events view returns the N latest in ts order") {

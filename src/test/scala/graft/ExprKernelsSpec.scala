@@ -69,6 +69,31 @@ class ExprKernelsSpec extends GraftSuite {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"$g != $w") }
   }
 
+  test("cosine kernels: codegen equals interpreted for NaN, +Inf and 0.0 query norms") {
+    // An isolated session so the conf below stays within this test. With
+    // codegen fallback off, generated Java that fails to compile throws
+    // instead of silently running interpreted.
+    def run(codegen: Boolean): Seq[Long] = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.fallback", "false")
+      s.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      s.conf.set("spark.sql.codegen.factoryMode", if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      import s.implicits._
+      val q = Array(0.5, -1.25, 3.0, 0.125)
+      // An RDD source, not a local relation: the optimizer would otherwise
+      // evaluate the projection itself and no Java would be generated.
+      val df = s.sparkContext.parallelize(Seq(Seq(1f, 2f, 3f, 4f), Seq(-0.5f, 0.25f, 0f, 8f)), 1)
+        .toDF("v")
+      Seq(Double.NaN, Double.PositiveInfinity, 0.0).flatMap { qn =>
+        df.select(gf.cosine_sim(col("v"), q, qn), gf.cosine_sim_lit(col("v"), q, qn))
+          .collect().flatMap(r => Seq(r.getDouble(0), r.getDouble(1)))
+      }.map(java.lang.Double.doubleToLongBits)
+    }
+    val (cg, interp) = (run(codegen = true), run(codegen = false))
+    assert(cg.size == 12)
+    assert(cg == interp)
+  }
+
   test("sum_long_array equals posexplode sums under grouping; all-null group is null") {
     import spark.implicits._
     val df = Seq(

@@ -188,10 +188,9 @@ object Cluster {
               val g = groups(gi)
               val t0 = System.nanoTime()
               val n = math.max(1, math.ceil(g.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt)
-              def read() = t.spark.read.schema(t.schema).parquet(g.map(_.absPath(t.root)): _*)
-              val bounds = curveBoundaries(read().select(curveCol(curve).as("__ck")),
+              val bounds = curveBoundaries(t.readFiles(g).select(curveCol(curve).as("__ck")),
                 n, g.map(_.rowCount).sum)
-              val df = read().withColumn("__ck", curveCol(curve))
+              val df = t.readFiles(g).withColumn("__ck", curveCol(curve))
               val out = t.writeDataFiles(
                 rangeExchange(df, col("__ck"), bounds)
                   .sortWithinPartitions(col("__ck")).drop("__ck"))
@@ -270,8 +269,7 @@ object Cluster {
       val n = capN.fold(n0)(c => math.min(n0, math.max(1, c)))
       val sample = strideSample(files.sortBy(_.path), BoundsSampleFiles)
       curveBoundaries(
-        t.spark.read.schema(t.schema).parquet(sample.map(_.absPath(t.root)): _*)
-          .select(curveCol(curve).as("__ck")),
+        t.readFiles(sample).select(curveCol(curve).as("__ck")),
         n, sample.map(_.rowCount).sum)
     }
     val ck = curveCol(curve)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
-import graft.table.{DataFileMeta, GraftTable, Snapshot}
+import graft.table.{GraftTable, Snapshot}
 
 /**
  * Phash-based image deduplication as a copy-on-write delete — the "dedup
@@ -58,17 +58,17 @@ object DedupPhash {
   def run(t: GraftTable,
       hammingThreshold: Int = 0,
       targetBytes: Long = 8L * 1024 * 1024): Result = {
-    val jobT0 = System.nanoTime()
-    val spark = t.spark
-    val base = t.currentSnapshot
-    val files = t.snapshotFiles(base)
+    val cow = new CopyOnWrite(t, "dedup")
     val mode = if (hammingThreshold == 0) "exact" else s"near<=$hammingThreshold"
 
     // Projection-only candidate scan: image_id, phash, caption. Parquet
     // column pruning keeps the binary payload on disk.
-    val cand = t.scan(Some(base.snapshotId)).select("image_id", "phash", "caption")
+    val cand = t.readFiles(cow.files).select("image_id", "phash", "caption")
 
-    val exactCanon = canonicalByPhash(cand).filter(col("cnt") > 1)
+    // Materialised once: the victims join and the group count both read it
+    // (unpersisted, the count would re-scan the snapshot and re-run both
+    // aggregation stages after the rewrite).
+    val exactCanon = canonicalByPhash(cand).filter(col("cnt") > 1).localCheckpoint()
 
     // Victims of exact collapse: same phash, not the canonical.
     val exactVictims = cand
@@ -144,34 +144,14 @@ object DedupPhash {
     // Affected files (paths only to the driver), then COW rewrite minus
     // victims — same anti-join shape as the reference's refcount delete
     // (indexing/pipeline.ts:276-297).
-    val rootAbs = java.nio.file.Paths.get(t.root).toAbsolutePath
-    val affectedUris = t.scan(Some(base.snapshotId))
-      .select(col("image_id"), input_file_name().as("__file"))
-      .join(victimsB, Seq("image_id"), "left_semi")
-      .select("__file").distinct().collect().map(_.getString(0))
-    val affectedRel = affectedUris.map { u =>
-      rootAbs.relativize(java.nio.file.Paths.get(java.net.URI.create(
-        if (u.startsWith("file:")) u else s"file:$u")).toAbsolutePath).toString
-    }.toSet
-    val affected = files.filter(f => affectedRel.contains(f.path))
-
-    val kept = spark.read.schema(t.schema).parquet(affected.map(_.absPath(t.root)): _*)
-      .join(victimsB, Seq("image_id"), "left_anti")
-    val rewritten: Seq[DataFileMeta] =
-      if (kept.isEmpty) Nil
-      else Cluster.activeCurve(t, base) match {
-        case Some(cv) => t.writeDataFiles(
-          Cluster.shapeForCurve(t, affected, kept, cv, targetBytes))
-        case None => t.writeDataFiles(kept, targetFiles = Some(math.max(1,
-          math.ceil(affected.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt)))
-      }
+    val affected = cow.affected(cow.keyScan(cow.files), victimsB)
+    val rewritten = cow.rewrite(affected, targetBytes)(
+      _.join(victimsB, Seq("image_id"), "left_anti"))
 
     val dupGroups = exactCanon.count()
     victimsB.unpersist()
-    val snap = t.commit("merge", rewritten, affected.map(_.path).toSet,
-      Map("op" -> "dedup", "mode" -> mode, "victims" -> vCount.toString))
-    graft.lineage.Metrics.recordJob(t.root, "dedup",
-      (System.nanoTime() - jobT0) / 1000000, Map(
+    val snap = cow.commit("merge", rewritten, affected,
+      Map("op" -> "dedup", "mode" -> mode, "victims" -> vCount.toString), Map(
       "mode" -> mode, "groups" -> dupGroups.toString,
       "victims" -> vCount.toString,
       "rewritten-files" -> affected.size.toString))

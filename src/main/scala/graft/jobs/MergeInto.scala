@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
@@ -28,8 +28,8 @@ import graft.table.{DataFileMeta, GraftTable, Snapshot}
  *    AQE skew-split enabled; because image_id is the unique natural key the
  *    SMJ is well-distributed, and hot phash buckets only arise in the dedup
  *    variant ([[DedupPhash]]) where explicit salting is applied.
- *  - Only matched files are rewritten (COW); untouched files are carried by
- *    manifest reuse.
+ *  - Only matched files are rewritten, through [[CopyOnWrite]]; untouched
+ *    files are carried by manifest reuse.
  */
 object MergeInto {
 
@@ -41,13 +41,6 @@ object MergeInto {
       rewrittenBytes: Long,
       strategy: String)
 
-  /** Root-relative path of an input_file_name() URI. */
-  private def uriToRel(root: String, uri: String): String = {
-    val p = java.nio.file.Paths.get(java.net.URI.create(
-      if (uri.startsWith("file:")) uri else s"file:$uri"))
-    java.nio.file.Paths.get(root).toAbsolutePath.relativize(p.toAbsolutePath).toString
-  }
-
   /** Files whose image_id stats admit any key in [klo, khi] — the manifest-
     * stats prune that keeps a narrow-key MERGE from scanning every file's
     * key column. Null bounds (empty source) or stat-less files keep. */
@@ -57,23 +50,12 @@ object MergeInto {
     else files.filter(f => graft.table.PruneFilter.mayMatch(f,
       graft.table.RangeString("image_id", klo, khi)))
 
-  /** Projection-friendly scan over an explicit candidate-file list (empty
-    * list -> empty frame with the table schema). */
-  private def readKeyed(t: GraftTable, cand: Seq[DataFileMeta]): DataFrame =
-    if (cand.isEmpty)
-      t.spark.createDataFrame(
-        t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
-    else t.spark.read.schema(t.schema).parquet(cand.map(_.absPath(t.root)): _*)
-
   /** `source` columns: image_id (required), caption/bytes nullable; absent
     * columns are treated as all-null (keep target values). */
   def run(t: GraftTable, source0: DataFrame,
       broadcastThresholdBytes: Long = 64L * 1024 * 1024,
       targetBytes: Long = 8L * 1024 * 1024): Result = {
-    val jobT0 = System.nanoTime()
-    val spark = t.spark
-    val base = t.currentSnapshot
-    val files = t.snapshotFiles(base)
+    val cow = new CopyOnWrite(t, "merge")
 
     // Normalize source: ensure caption/bytes columns exist; natural-key dedup
     // (reference J5: dropDuplicates on natural keys; last wins is arbitrary
@@ -109,7 +91,7 @@ object MergeInto {
     // that range, so BOTH the affected-file discovery and the insert
     // anti-join below read candidates only. A 10-row targeted merge on a
     // key-ordered table opens ~its files, not every file's key column.
-    val candidates = candidateFiles(files, srcStats.getString(3), srcStats.getString(4))
+    val candidates = candidateFiles(cow.files, srcStats.getString(3), srcStats.getString(4))
 
     // 1. ONE projection-only key scan serves BOTH the affected-file
     // discovery and the insert anti-join below (they used to scan the key
@@ -117,28 +99,25 @@ object MergeInto {
     // no benefit). The persisted frame is two thin columns (image_id +
     // source file), MEMORY_AND_DISK so a giant candidate set spills rather
     // than evicting; Parquet reads just image_id, once, at materialization.
-    val keyScan = readKeyed(t, candidates)
-      .select(col("image_id"), input_file_name().as("__file"))
+    val keyScan = cow.keyScan(candidates)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // try/finally: a merge that throws mid-rewrite (disk full, corrupt
     // source bytes) must not leak the pinned key-column cache for the rest
     // of the session.
     val (affected, updatedFilesMeta, insertFiles) = try {
-    val affectedUris = keyScan
-      .join(srcKeyed.select("image_id"), Seq("image_id"), "left_semi")
-      .select("__file").distinct().collect().map(_.getString(0)).toSet
-    val affectedRel = affectedUris.map(uriToRel(t.root, _))
-    val affected = files.filter(f => affectedRel.contains(f.path))
+    val affected = cow.affected(keyScan, srcKeyed)
 
-    // 2. Rewrite matched files with source columns folded in.
+    // 2. Rewrite matched files with source columns folded in. A merge
+    // carrying replacement bytes can change fmt (and with it a fmt partition
+    // value); caption-only merges can't.
     val updatedFilesMeta: Seq[DataFileMeta] =
       if (affected.isEmpty) Nil
-      else {
-        val tgt = spark.read.schema(t.schema).parquet(affected.map(_.absPath(t.root)): _*)
-        val joined = tgt.join(srcKeyed, Seq("image_id"), "left_outer")
+      else cow.rewrite(affected, targetBytes,
+          partitionMayChange = srcStats.getLong(1) > 0) { tgt =>
+        tgt.join(srcKeyed, Seq("image_id"), "left_outer")
           .withColumn("__wh", when(col("src_bytes").isNotNull,
             gf.decode_wh(col("src_bytes"))))
-        val rewritten = joined.select(Seq(
+          .select(Seq(
           col("image_id"),
           coalesce(col("src_bytes"), col("bytes")).as("bytes"),
           coalesce(col("__wh.w"), col("w")).as("w"),
@@ -149,19 +128,6 @@ object MergeInto {
           // Schema-evolved extra columns pass through from the target —
           // a COW rewrite must never drop columns it does not transform.
           ++ t.schema.fieldNames.toSeq.filterNot(GraftTable.BaseColumns).map(col): _*)
-        // Clustered base: preserve curve order through the rewrite (else
-        // merge traffic silently erodes the layout q-pruning depends on).
-        Cluster.activeCurve(t, base) match {
-          case Some(cv) => t.writeDataFiles(
-            // A merge carrying replacement bytes can change fmt (and with it
-            // a fmt partition value) — caption-only merges can't, and get
-            // the slim overflow block.
-            Cluster.shapeForCurve(t, affected, rewritten, cv, targetBytes,
-              partitionMayChange = srcStats.getLong(1) > 0))
-          case None => t.writeDataFiles(rewritten,
-            targetFiles = Some(math.max(1, math.ceil(
-              affected.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt)))
-        }
       }
 
     // 3. Inserts: source keys not in the target at all (left-anti on the
@@ -198,11 +164,8 @@ object MergeInto {
     if (affected.isEmpty && insertFiles.isEmpty)
       return Result(None, 0, 0, 0, 0, strategy)
 
-    val snap = t.commit("merge", updatedFilesMeta ++ insertFiles,
-      affected.map(_.path).toSet,
-      Map("strategy" -> strategy, "source-rows" -> srcCount.toString))
-    graft.lineage.Metrics.recordJob(t.root, "merge",
-      (System.nanoTime() - jobT0) / 1000000, Map(
+    val snap = cow.commit("merge", updatedFilesMeta ++ insertFiles, affected,
+      Map("strategy" -> strategy, "source-rows" -> srcCount.toString), Map(
       "strategy" -> strategy, "matched-files" -> affected.size.toString,
       "inserted-rows" -> insertedRows.toString))
     Result(Some(snap), srcCount - insertedRows, affected.size, insertedRows,
@@ -224,39 +187,20 @@ object MergeInto {
     * ~0.1% of it; keys join under AQE (broadcast when small). */
   def deleteMatched(t: GraftTable, keys: DataFrame,
       targetBytes: Long = 8L * 1024 * 1024): DeleteResult = {
-    val jobT0 = System.nanoTime()
-    val spark = t.spark
-    val base = t.currentSnapshot
-    val files = t.snapshotFiles(base)
+    val cow = new CopyOnWrite(t, "delete")
     val k = keys.select("image_id").distinct()
 
     // Manifest-stats prune on the key range first (one tiny agg): a
     // targeted delete on a key-ordered table reads ~its files' key columns.
     val kr = k.agg(min(col("image_id")).as("klo"), max(col("image_id")).as("khi")).head()
-    val candidates = candidateFiles(files, kr.getString(0), kr.getString(1))
-    val scanWithFile = readKeyed(t, candidates)
-      .select(col("image_id"), input_file_name().as("__file"))
-    val affectedUris = scanWithFile
-      .join(k, Seq("image_id"), "left_semi")
-      .select("__file").distinct().collect().map(_.getString(0)).toSet
-    val affectedRel = affectedUris.map(uriToRel(t.root, _))
-    val affected = files.filter(f => affectedRel.contains(f.path))
+    val candidates = candidateFiles(cow.files, kr.getString(0), kr.getString(1))
+    val affected = cow.affected(cow.keyScan(candidates), k)
     if (affected.isEmpty) return DeleteResult(None, 0, 0)
 
-    val tgt = spark.read.schema(t.schema).parquet(affected.map(_.absPath(t.root)): _*)
-    val kept = tgt.join(k, Seq("image_id"), "left_anti")
-    val out = Cluster.activeCurve(t, base) match {
-      case Some(cv) => t.writeDataFiles(
-        Cluster.shapeForCurve(t, affected, kept, cv, targetBytes))
-      case None => t.writeDataFiles(kept,
-        targetFiles = Some(math.max(1, math.ceil(
-          affected.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt)))
-    }
+    val out = cow.rewrite(affected, targetBytes)(_.join(k, Seq("image_id"), "left_anti"))
     val deleted = affected.map(_.rowCount).sum - out.map(_.rowCount).sum
-    val snap = t.commit("delete", out, affected.map(_.path).toSet,
-      Map("deleted-rows" -> deleted.toString))
-    graft.lineage.Metrics.recordJob(t.root, "delete",
-      (System.nanoTime() - jobT0) / 1000000, Map(
+    val snap = cow.commit("delete", out, affected,
+      Map("deleted-rows" -> deleted.toString), Map(
       "deleted-rows" -> deleted.toString,
       "rewritten-files" -> affected.size.toString))
     DeleteResult(Some(snap), deleted, affected.size)

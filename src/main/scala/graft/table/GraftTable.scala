@@ -220,7 +220,9 @@ class GraftTable(val root: String, val spark: SparkSession) {
       .flatMap(n => MetaIO.readManifest(root, n).files)
       .filter(f => filters.forall(PruneFilter.mayMatch(f, _)))
 
-  private def readFiles(files: Seq[DataFileMeta]): DataFrame =
+  /** The table's one reader of an explicit file list (empty list -> empty
+    * frame with the table schema). */
+  private[graft] def readFiles(files: Seq[DataFileMeta]): DataFrame =
     if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(files.map(_.absPath(root)): _*)
 

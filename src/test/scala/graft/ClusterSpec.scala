@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
 import graft.jobs.Cluster
-import graft.table.{GraftTable, RangeLong}
+import graft.table.{GraftTable, PruneFilter, RangeLong}
 
 class ClusterSpec extends GraftSuite {
 
@@ -136,34 +136,69 @@ class ClusterSpec extends GraftSuite {
 
   private val GraftTable = graft.table.GraftTable
 
-  test("COW merge preserves the clustered layout: phash-range scans still prune") {
+  // Every copy-on-write job, each with the same file sizing as the cluster
+  // layout. Merge and delete touch rows SPREAD across the table (every 20th
+  // image_id), dedup's victims and transcode's png rows are spread too: the
+  // affected set covers most files, so a rewrite that round-robined rows
+  // would widen every output file's phash range and kill pruning entirely.
+  // Each entry runs its job and reports whether it committed with its
+  // effect visible in the current rows.
+  private val cowJobs: Seq[(String, GraftTable => Boolean)] = {
     import spark.implicits._
-    val t = TestFixtures.freshTable("cluster-cow-preserve")
-    Cluster.run(t, curve = "zorder", mode = "global", targetBytes = 96L * 1024)
-    val span = RangeLong("phash", Long.MinValue / 16, Long.MaxValue / 16)
-    assert(t.planFiles(Seq(span)).size < t.currentFiles.size)
-    // A caption-only merge touching rows SPREAD across the table (every
-    // 20th image_id): the affected set covers most files, so a rewrite that
-    // round-robined rows would widen every output file's phash range and
-    // kill pruning entirely.
-    val ids = t.scan().select("image_id").as[String].collect().sorted
-      .zipWithIndex.collect { case (id, i) if i % 20 == 0 => id }.toSeq
-    val before = snapshotReplay(t)
-    val res = graft.jobs.MergeInto.run(t,
-      ids.map(id => (id, s"cow-cap-$id")).toDF("image_id", "caption"),
-      targetBytes = 96L * 1024) // same file sizing as the cluster layout
-    assert(res.snapshot.isDefined)
-    val total = t.currentFiles.size
-    val pruned = t.planFiles(Seq(span)).size
-    assert(pruned < total,
-      s"clustered layout must survive the COW rewrite ($pruned/$total)")
-    // Replay parity everywhere except the merged captions.
-    assert(canon(t.scanWhere(Seq(span))) ==
-      canon(t.scan().filter(col("phash") >= span.lo && col("phash") <= span.hi)))
-    assert(t.scan().filter(col("caption").startsWith("cow-cap-")).count() ==
-      ids.size.toLong)
-    assert(before.keySet == snapshotReplay(t).keySet)
+    import graft.jobs.{DedupPhash, MergeInto, Transcode}
+    val target = 96L * 1024
+    def spread(t: GraftTable): Seq[String] = t.scan().select("image_id").as[String]
+      .collect().sorted.zipWithIndex.collect { case (id, i) if i % 20 == 0 => id }.toSeq
+    Seq(
+      "merge" -> { t =>
+        val ids = spread(t)
+        MergeInto.run(t, ids.map(id => (id, s"cow-cap-$id")).toDF("image_id", "caption"),
+          targetBytes = target).snapshot.isDefined &&
+          t.scan().filter(col("caption").startsWith("cow-cap-")).count() == ids.size
+      },
+      "delete" -> { t =>
+        val ids = spread(t)
+        MergeInto.deleteMatched(t, ids.toDF("image_id"), target).snapshot.isDefined &&
+          t.scan().filter(col("image_id").isin(ids: _*)).count() == 0
+      },
+      "dedup" -> { t =>
+        DedupPhash.run(t, targetBytes = target).snapshot.isDefined &&
+          t.scan().select("phash").distinct().count() == t.scan().count()
+      },
+      "transcode" -> { t =>
+        Transcode.run(t, "png", "jpg", target).snapshot.isDefined &&
+          t.scan().filter(col("fmt") === "png").count() == 0
+      })
   }
+
+  for ((job, run) <- cowJobs)
+    test(s"COW $job preserves the clustered layout: phash-range scans still prune") {
+      val t = TestFixtures.freshTable(s"cluster-cow-$job")
+      Cluster.run(t, curve = "zorder", mode = "global", targetBytes = 96L * 1024)
+      val span = RangeLong("phash", Long.MinValue / 16, Long.MaxValue / 16)
+      assert(t.planFiles(Seq(span)).size < t.currentFiles.size)
+      // The same job on the unclustered table: the layout may differ, the
+      // rows may not.
+      val plain = TestFixtures.freshTable(s"cluster-cow-$job-plain")
+      val untouched = t.currentFiles.map(_.path).toSet
+      assert(run(t) && run(plain))
+      val total = t.currentFiles.size
+      val pruned = t.planFiles(Seq(span)).size
+      assert(pruned < total,
+        s"clustered layout must survive the COW $job rewrite ($pruned/$total)")
+      // The rewritten files themselves must be curve-tight: a lookup of their
+      // median phash keeps only the file(s) around it, where round-robined
+      // output (every file spanning the whole range) would keep them all.
+      val written = t.currentFiles.filterNot(f => untouched(f.path))
+      val ph = t.readFiles(written).select("phash").collect().map(_.getLong(0)).sorted
+      val mid = RangeLong("phash", ph(ph.length / 2), ph(ph.length / 2))
+      val writtenKept = written.count(PruneFilter.mayMatch(_, mid))
+      assert(writtenKept < written.size,
+        s"COW $job output must be curve-shaped ($writtenKept/${written.size} kept)")
+      assert(canon(t.scanWhere(Seq(span))) ==
+        canon(t.scan().filter(col("phash") >= span.lo && col("phash") <= span.hi)))
+      assert(canon(t.scan()) == canon(plain.scan()))
+    }
 
   test("curve expressions agree with the pure-Scala functions on table data") {
     val t = TestFixtures.baseTable

@@ -227,12 +227,44 @@ class MergeDedupSpec extends GraftSuite {
       s"canonical must keep the longest caption, got ${kept.toSeq}")
   }
 
+  test("dedup drops a file whose rows are all victims and commits no zero-row file") {
+    import spark.implicits._
+    val root = TestFixtures.workRoot.resolve("dedup-whole-file").toString
+    val t = graft.table.GraftTable.create(root, spark)
+    val png = ImageCodec.encodePng(ImageGen.drawBase(16, 16, new scala.util.Random(3)))
+    def rows(ids: Seq[String], caption: String, phashes: Seq[Long]) =
+      ids.zip(phashes).map { case (id, p) => (id, png, 16, 16, "png", caption, p) }
+        .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    // File A: three canonicals (longest captions) plus one unrelated row.
+    // File B: a shorter-captioned duplicate of each canonical, so every row
+    // of B is a victim and the rewrite keeps no row at all.
+    graft.table.GraftTable.append(t, rows(Seq("a-0", "a-1", "a-2", "a-3"),
+      "the canonical longer caption", Seq(11L, 22L, 33L, 44L)), targetFiles = Some(1))
+    val fileA = t.currentFiles.map(_.path).toSet
+    graft.table.GraftTable.append(t, rows(Seq("b-0", "b-1", "b-2"), "dup",
+      Seq(11L, 22L, 33L)), targetFiles = Some(1))
+    val fileB = t.currentFiles.map(_.path).toSet -- fileA
+    assert(fileA.size == 1 && fileB.size == 1)
+
+    val res = DedupPhash.run(t)
+    assert(res.snapshot.exists(_.operation == "merge"))
+    assert(res.dupGroups == 3 && res.victims == 3 && res.rewrittenFiles == 1)
+    assert(res.snapshot.get.summary("added-files") == "0")
+    assert(t.currentFiles.map(_.path).toSet == fileA, "B is removed, A is untouched")
+    assert(t.currentFiles.forall(_.rowCount > 0), "no zero-row file is committed")
+    assert(t.scan().count() == 4)
+    assert(t.scan().select("image_id").as[String].collect().sorted.toSeq ==
+      Seq("a-0", "a-1", "a-2", "a-3"))
+  }
+
   test("transcode png->jpg keeps captions byte-equal and pixels above 40dB PSNR") {
     val t = TestFixtures.freshTable("transcode")
     val before = t.scan().select("image_id", "caption", "fmt", "bytes")
       .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getAs[Array[Byte]](3))).toMap
     val res = Transcode.run(t, "png", "jpg")
-    assert(res.transcodedRows > 0)
+    // Only the png rows count: affected files also carry jpg rows that pass
+    // through untouched.
+    assert(res.transcodedRows == before.values.count(_._2 == "png"))
     val after = t.scan().select("image_id", "caption", "fmt", "bytes").collect()
     assert(after.length == before.size)
     after.foreach { r =>

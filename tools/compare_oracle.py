@@ -9,13 +9,18 @@ import sys, os, json, glob, math
 import duckdb
 
 
+def sql_str(s):
+    """`s` as a SQL string literal: a quote inside is doubled, so a path
+    containing ' cannot end the literal early."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 def load_tables(con, sf_dir):
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[: -len(".parquet")]
+        src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
         con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{p}/*.parquet')"
-            if os.path.isdir(p)
-            else f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{p}')"
+            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet({sql_str(src)})"
         )
 
 
@@ -58,7 +63,8 @@ def main():
             o_cols = [d[0] for d in cur.description]
             o_rows = rows_of(cur)
             cur2 = con.execute(
-                f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')"
+                "SELECT * FROM read_parquet("
+                + sql_str(os.path.join(spark_dir, "*.parquet")) + ")"
             )
             s_cols = [d[0] for d in cur2.description]
             s_rows = rows_of(cur2)

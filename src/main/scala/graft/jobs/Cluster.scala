@@ -128,9 +128,7 @@ object Cluster {
           // 1024-file fixture) that grows with file count at 10^12 rows.
           val sampleFiles = strideSample(g.sortBy(_.path), BoundsSampleFiles)
           val bounds = curveBoundaries(
-            t.spark.read.schema(t.schema)
-              .parquet(sampleFiles.map(_.absPath(t.root)): _*)
-              .select(curveCol(curve).as("__ck")),
+            t.readFiles(sampleFiles).select(curveCol(curve).as("__ck")),
             numFiles, sampleFiles.map(_.rowCount).sum)
           graft.lineage.Metrics.recordJob(t.root, "cluster-bounds",
             (System.nanoTime() - t0) / 1000000,
@@ -142,9 +140,7 @@ object Cluster {
           // reducers (each map task materializes one segment per reducer),
           // and the extra file churn measured ~40% slower at 8 cores on the
           // 1.48 GB fixture.
-          val df = t.spark.read.schema(t.schema)
-            .parquet(g.map(_.absPath(t.root)): _*)
-            .withColumn("__ck", curveCol(curve))
+          val df = t.readFiles(g).withColumn("__ck", curveCol(curve))
           val out = t.writeDataFiles(
             rangeExchange(df, col("__ck"), bounds)
               .sortWithinPartitions(col("__ck"))

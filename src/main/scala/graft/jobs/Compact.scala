@@ -5,8 +5,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.functions.col
-
 import graft.lineage.{Lineage, UnitLineage}
 import graft.table.{DataFileMeta, GraftTable, Snapshot}
 
@@ -127,6 +125,7 @@ object Compact {
     // Wave jobs need Union to CONCATENATE child partitions (see
     // GraftSession); set defensively for externally-built sessions.
     t.spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+    val sch = t.schema
     val pool = Executors.newFixedThreadPool(math.max(1, maxConcurrentBins))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val executed = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -134,24 +133,9 @@ object Compact {
       val futures = waves.map { waveBins =>
         Future {
           val t0 = System.nanoTime()
-          // Child construction is driver CPU (one InMemoryFileIndex + plan
-          // per bin, ~5-20 ms each): build them on a bounded pool so a
-          // 100-bin wave costs ~the longest child, not the sum — this is
-          // part of the fixed driver constant that does not shrink with
-          // executors (BENCH/BASELINE.md).
-          val cpool = Executors.newFixedThreadPool(
-            math.min(16, math.max(1, waveBins.size)))
-          val children =
-            try {
-              waveBins.map { binIdx =>
-                cpool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-                  def call(): org.apache.spark.sql.DataFrame =
-                    t.spark.read.schema(t.schema)
-                      .parquet(bins(binIdx).map(_.absPath(t.root)): _*)
-                      .coalesce(1)
-                })
-              }.map(_.get())
-            } finally cpool.shutdown()
+          // Each child plans from its bin's manifest entries: no file-system
+          // call, so a wave of many small bins is cheap to build.
+          val children = waveBins.map(binIdx => t.readFiles(bins(binIdx), sch).coalesce(1))
           val waveDf = children.reduce(_ unionAll _)
           val out = t.writeDataFiles(waveDf) // sorted by path = part index order
           require(out.size == waveBins.size,

@@ -50,11 +50,8 @@ object RewriteManifests {
       var recomputed = 0
       val files =
         if (recomputeStats) {
-          val byDir = files0.groupBy(f => f.path.substring(0, f.path.lastIndexOf('/')))
-          byDir.flatMap { case (dir, fs) =>
-            val fresh = t.collectStats(dir).map(f => f.path -> f).toMap
-            fs.map { f => fresh.get(f.path).map { nf => recomputed += 1; nf }.getOrElse(f) }
-          }.toSeq
+          val fresh = t.collectStats(files0).map(f => f.path -> f).toMap
+          files0.map { f => fresh.get(f.path).map { nf => recomputed += 1; nf }.getOrElse(f) }
         } else files0
 
       // Partitioned tables: group by partition value FIRST (one manifest

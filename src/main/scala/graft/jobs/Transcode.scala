@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
@@ -25,9 +26,9 @@ object Transcode {
     val cow = new CopyOnWrite(t, "transcode")
     val affected = t.planFiles(Seq(graft.table.EqString("fmt", from)))
     if (affected.isEmpty) return Result(None, 0, 0)
-    // Rows actually re-encoded: an affected file may also hold rows of other
-    // formats, which pass through. Reads the fmt column only.
-    val transcodedRows = t.readFiles(affected).filter(col("fmt") === lit(from)).count()
+    // Rows actually re-encoded (an affected file may also hold rows of other
+    // formats, which pass through), counted by the rewrite's own write job.
+    val reencoded = new Observation()
 
     val reenc = udf((b: Array[Byte]) => to match {
       // q=0.98 + 4:4:4: measured min PSNR ~47dB on the synthetic fixture,
@@ -40,7 +41,8 @@ object Transcode {
     // fmt-partitioned table every affected row changes format, so the whole
     // rewrite lands in the overflow block (partitionMayChange).
     val files = cow.rewrite(affected, targetBytes, partitionMayChange = true)(
-      _.withColumn("__nb", when(col("fmt") === lit(from), reenc(col("bytes")))
+      _.observe(reencoded, count_if(col("fmt") === lit(from)).as("rows"))
+      .withColumn("__nb", when(col("fmt") === lit(from), reenc(col("bytes")))
         .otherwise(col("bytes")))
       .select(Seq(
         col("image_id"),
@@ -54,6 +56,6 @@ object Transcode {
         ++ t.schema.fieldNames.toSeq.filterNot(GraftTable.BaseColumns).map(col): _*))
     val snap = cow.commit("transcode", files, affected, Map("from" -> from, "to" -> to),
       Map("from" -> from, "to" -> to, "files" -> affected.size.toString))
-    Result(Some(snap), transcodedRows, affected.size)
+    Result(Some(snap), reencoded.get("rows").asInstanceOf[Long], affected.size)
   }
 }

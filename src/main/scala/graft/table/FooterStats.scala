@@ -1,5 +1,7 @@
 package graft.table
 
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
@@ -25,11 +27,13 @@ object FooterStats {
   private val TruncationGuard = 4000 // bytes; parquet-mr may truncate beyond this
 
   def read(absPath: String, schema: StructType): Option[DataFileMeta] = {
-    // Pure-NIO input file: a fresh Hadoop Configuration per footer costs
-    // ~200ms (measured); LocalInputFile reads the footer in ~1ms.
+    // Pure-NIO input file and a plain (non-Hadoop) configuration: a Hadoop
+    // `Configuration` parses core-default.xml again for every footer
+    // (measured 17.9 ms CPU per footer, 0.43 ms without one), and the
+    // default read options build one.
     val p = java.nio.file.Paths.get(absPath)
-    val in = new LocalInputFile(p)
-    val reader = ParquetFileReader.open(in)
+    val reader = ParquetFileReader.open(new LocalInputFile(p),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks

@@ -5,6 +5,8 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -134,10 +136,10 @@ class GraftTable(val root: String, val spark: SparkSession) {
   def version: Int = MetaIO.currentVersion(root)
     .getOrElse(throw new IllegalStateException(s"no table at $root"))
 
-  def schema: StructType = StructType.fromDDL(meta.schemaDdl)
+  def schema: StructType = schemaOf(meta)
+  private def schemaOf(m: TableMetadata): StructType = StructType.fromDDL(m.schemaDdl)
 
-  def currentSnapshot: Snapshot = meta.currentSnapshot
-    .getOrElse(throw new IllegalStateException(s"table at $root has no snapshot"))
+  def currentSnapshot: Snapshot = resolveSnapshot(meta, None)
 
   def snapshotFiles(s: Snapshot): Seq[DataFileMeta] =
     s.manifests.flatMap(m => MetaIO.readManifest(root, m).files)
@@ -151,14 +153,17 @@ class GraftTable(val root: String, val spark: SparkSession) {
     * maintenance commits do not change what this DataFrame reads —
     * the engine's analog of the reference's namespace isolation
     * (core/src/namespace.ts:17-23). */
-  def scan(snapshotId: Option[Long] = None): DataFrame =
-    readFiles(snapshotFiles(resolveSnapshot(snapshotId)))
+  def scan(snapshotId: Option[Long] = None): DataFrame = {
+    val m = meta
+    readFiles(snapshotFiles(resolveSnapshot(m, snapshotId)), schemaOf(m))
+  }
 
-  private def resolveSnapshot(snapshotId: Option[Long]): Snapshot =
+  private def resolveSnapshot(m: TableMetadata, snapshotId: Option[Long]): Snapshot =
     snapshotId match {
-      case None => currentSnapshot
-      case Some(id) => meta.snapshot(id).getOrElse(throw new IllegalArgumentException(
-        s"unknown snapshot id $id (known: ${meta.snapshots.map(_.snapshotId).mkString(",")})"))
+      case None => m.currentSnapshot
+        .getOrElse(throw new IllegalStateException(s"table at $root has no snapshot"))
+      case Some(id) => m.snapshot(id).getOrElse(throw new IllegalArgumentException(
+        s"unknown snapshot id $id (known: ${m.snapshots.map(_.snapshotId).mkString(",")})"))
     }
 
   /** Time travel by timestamp: the latest snapshot committed at or before
@@ -190,9 +195,13 @@ class GraftTable(val root: String, val spark: SparkSession) {
     * the snapshot) refute whole manifests without reading them — the coarse
     * prune that runs before any per-file stats walk. */
   def planManifests(filters: Seq[PruneFilter],
-      snapshotId: Option[Long] = None): Seq[String] = {
-    val s = resolveSnapshot(snapshotId)
-    meta.partitionSpec match {
+      snapshotId: Option[Long] = None): Seq[String] =
+    planManifests(meta, filters, snapshotId)
+
+  private def planManifests(m: TableMetadata, filters: Seq[PruneFilter],
+      snapshotId: Option[Long]): Seq[String] = {
+    val s = resolveSnapshot(m, snapshotId)
+    m.partitionSpec match {
       case None => s.manifests
       case Some(spec) => s.manifests.filter { name =>
         s.partitionOfManifest(name) match {
@@ -203,28 +212,35 @@ class GraftTable(val root: String, val spark: SparkSession) {
     }
   }
 
-  /** Pruned scan: skip whole manifests via the partition spec, then drop
-    * files whose min/max stats refute the filters, then apply the filters
-    * row-level (Parquet row-group pruning + codegen handle the rest). */
-  def scanWhere(filters: Seq[PruneFilter], snapshotId: Option[Long] = None): DataFrame = {
-    val files = planManifests(filters, snapshotId)
+  /** Files a pruned scan of `m` opens: manifests refuted by the partition
+    * spec are skipped, then files whose min/max stats refute a filter. */
+  private def planFiles(m: TableMetadata, filters: Seq[PruneFilter],
+      snapshotId: Option[Long]): Seq[DataFileMeta] =
+    planManifests(m, filters, snapshotId)
       .flatMap(n => MetaIO.readManifest(root, n).files)
       .filter(f => filters.forall(PruneFilter.mayMatch(f, _)))
-    val df = readFiles(files)
+
+  /** Pruned scan: skip whole manifests via the partition spec, then drop
+    * files whose min/max stats refute the filters, then apply the filters
+    * row-level (Parquet row-group pruning + codegen handle the rest). One
+    * metadata load plans the whole read. */
+  def scanWhere(filters: Seq[PruneFilter], snapshotId: Option[Long] = None): DataFrame = {
+    val m = meta
+    val df = readFiles(planFiles(m, filters, snapshotId), schemaOf(m))
     filters.foldLeft(df)((d, f) => d.filter(PruneFilter.toColumn(f)))
   }
 
   /** How many files a pruned scan would open (observability for tests/bench). */
-  def planFiles(filters: Seq[PruneFilter]): Seq[DataFileMeta] =
-    planManifests(filters)
-      .flatMap(n => MetaIO.readManifest(root, n).files)
-      .filter(f => filters.forall(PruneFilter.mayMatch(f, _)))
+  def planFiles(filters: Seq[PruneFilter]): Seq[DataFileMeta] = planFiles(meta, filters, None)
 
-  /** The table's one reader of an explicit file list (empty list -> empty
-    * frame with the table schema). */
-  private[graft] def readFiles(files: Seq[DataFileMeta]): DataFrame =
-    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(_.absPath(root)): _*)
+  /** The table's one reader of data files: a Parquet relation over a
+    * [[ManifestFileIndex]] of `files`, planned from their manifest entries
+    * with no file-system call (an empty list reads as an empty frame).
+    * Columns are nullable, as for any file-source read. */
+  private[graft] def readFiles(files: Seq[DataFileMeta], sch: StructType = schema): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(root, files),
+      partitionSchema = new StructType(), dataSchema = sch.toNullable, bucketSpec = None,
+      fileFormat = new ParquetFileFormat(), options = Map.empty)(spark))
 
   // --------------------------------------------------------------- writes
 
@@ -277,11 +293,12 @@ class GraftTable(val root: String, val spark: SparkSession) {
     } finally pool.shutdown()
   }
 
-  /** Per-file stats in one distributed pass. Reads only the stats columns
+  /** Per-file stats of `files` in one distributed pass (the reference the
+    * footer stats are tested against). Reads only the stats columns
     * (binary payload column skipped via Parquet column pruning), groups by
-    * input_file_name — file-level metadata only comes back to the driver. */
-  def collectStats(relDir: String): Seq[DataFileMeta] = {
-    val dir = s"$root/$relDir"
+    * input_file_name — file-level metadata only comes back to the driver.
+    * Zero-row files yield no entry. */
+  def collectStats(files: Seq[DataFileMeta]): Seq[DataFileMeta] = {
     val sch = schema
     val statCols = sch.fields.filterNot(_.dataType == BinaryType).map(_.name)
     val aggs = statCols.flatMap { c =>
@@ -289,7 +306,7 @@ class GraftTable(val root: String, val spark: SparkSession) {
           max(col(c)).cast(StringType).as(s"max_$c"),
           sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
     }
-    val rows = spark.read.schema(sch).parquet(dir)
+    val rows = readFiles(files, sch)
       .groupBy(input_file_name().as("__file"))
       .agg(count(lit(1)).as("__rows"), aggs.toIndexedSeq: _*)
       .collect()

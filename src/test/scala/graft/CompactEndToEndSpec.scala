@@ -29,6 +29,20 @@ class CompactEndToEndSpec extends GraftSuite {
       assert(after(name) == rows, s"replay query '$name' changed after compaction")
   }
 
+  test("compacting one bin of 40+ tiny files starts one Spark job per wave and no listing job") {
+    val t = TestFixtures.freshTable("compact-one-bin")
+    val target = 4L * 1024 * 1024
+    val bins = Compact.plan(t.currentFiles, target)
+    assert(bins.size == 1 && bins.head.size >= 40, s"bins: ${bins.map(_.size)}")
+    val (res, jobs) = sparkJobsDuring(Compact.run(t, targetBytes = target))
+    assert(res.binsExecuted == 1 && res.filesIn == bins.head.size)
+    // The bin's files plan from its manifest entries; Spark would list more
+    // than 32 paths in a job of its own.
+    assert(jobs.size == 1, s"expected the wave's write job only, got: $jobs")
+    assert(!jobs.exists(_.startsWith("Listing leaf files")))
+    assert(t.currentFiles.map(_.rowCount).sum == TestFixtures.BaseRows)
+  }
+
   test("snapshot isolation: a pinned pre-compaction scan is unaffected by the commit") {
     val t = TestFixtures.freshTable("compact-isolation")
     val pinned = t.currentSnapshot.snapshotId

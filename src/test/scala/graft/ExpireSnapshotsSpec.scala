@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalacheck.{Gen, Prop, Test}
 
 import graft.jobs.{Compact, ExpireSnapshots, RewriteManifests}
@@ -14,30 +12,6 @@ import graft.table.{DataFileMeta, GraftTable}
 /** Refcount-cascade fixtures (FIXTURES.md §2; reference behavior:
   * pipeline.test.ts:641-853 refcount delete variants). */
 class ExpireSnapshotsSpec extends GraftSuite {
-
-  /** Runs `body` and counts the Spark jobs it started: a marker job run
-    * afterwards flushes the listener queue, since listener events arrive
-    * asynchronously but in order. */
-  private def sparkJobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      sc.setJobGroup("jobs-during-marker", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("jobs-during-marker") && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains("jobs-during-marker"), "listener never saw the marker job")
-      (r, groups.size - 1)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def dataFilesOnDisk(root: String): Set[String] = {
     val dir = Paths.get(root, "data")
@@ -138,7 +112,7 @@ class ExpireSnapshotsSpec extends GraftSuite {
     }
     val ((cnt, bytes), jobs) = sparkJobsDuring(
       ExpireSnapshots.deleteListed(spark, root.toString, listed))
-    assert(jobs >= 1, "above the cutoff deletion must run executor-side")
+    assert(jobs.nonEmpty, "above the cutoff deletion must run executor-side")
     assert(cnt == n.toLong, s"expected $n deletions, got $cnt")
     assert(bytes == 3L * n)
     assert(listed.forall { case (r, _) => !Files.exists(root.resolve(r)) })
@@ -154,7 +128,7 @@ class ExpireSnapshotsSpec extends GraftSuite {
       retain = Seq(t.currentSnapshot.snapshotId), orphanMinAgeMs = 0L))
     assert(res.deletedDataFiles > 0 && res.deletedDataFiles <= ExpireSnapshots.DriverDeleteMax)
     assert(res.orphansSwept > 0, "the uncommitted files go through the sweep")
-    assert(jobs == 0, s"expire started $jobs Spark jobs")
+    assert(jobs.isEmpty, s"expire started Spark jobs: $jobs")
   }
 
   // ------------------------------------------------- generated histories

@@ -32,6 +32,15 @@ class RewriteManifestsSpec extends GraftSuite {
     assert(!r3.skippedUnchanged)
   }
 
+  test("recomputed stats match the footer stats of every file, in one distributed pass") {
+    val t = TestFixtures.freshTable("manifests-recompute")
+    GraftTable_appendTwice(t)
+    val before = t.currentFiles.map(f => f.path -> f).toMap
+    val r = RewriteManifests.run(t, recomputeStats = true)
+    assert(r.statsRecomputed == before.size)
+    assert(t.currentFiles.map(f => f.path -> f).toMap == before)
+  }
+
   private def GraftTable_appendTwice(t: graft.table.GraftTable): Unit = {
     GraftTable.append(t, graft.images.ImageGen.df(spark, 20, seed = 1L, partitions = 1))
     GraftTable.append(t, graft.images.ImageGen.df(spark, 20, seed = 2L, partitions = 1))

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,6 +60,35 @@ object TestFixtures {
 
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `body` and returns the Spark jobs it started, each as its job
+    * description (else its short call site): a marker job run afterwards
+    * flushes the listener queue, since listener events arrive
+    * asynchronously but in order. */
+  def sparkJobsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val Marker = "jobs-during-marker"
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        jobs.add((prop("spark.jobGroup.id").orNull,
+          prop("spark.job.description").orElse(prop("callSite.short")).getOrElse("")))
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      sc.setJobGroup(Marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      def seen = jobs.asScala.exists(_._1 == Marker)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen, "listener never saw the marker job")
+      (r, jobs.asScala.toSeq.filterNot(_._1 == Marker).map(_._2))
+    } finally sc.removeSparkListener(l)
+  }
 
   /** Deterministic canonical form of a scan result for rowset equality:
     * sorted by image_id, bytes hashed (so comparisons are cheap), all other

@@ -8,8 +8,9 @@ import graft.table.GraftTable
 /**
  * spark-submit scaling probe over REAL separate executor JVMs
  * (`--master local-cluster[N,cores,mem]`): the closest in-sandbox analog of
- * the north rule's "N vs 4N executors" criterion. Unlike [[EngineBench]] it
- * takes the master (and thus executor topology) from spark-submit.
+ * the north rule's "N vs 4N executors" criterion. Unlike the thread-mode
+ * [[ScalingBench]] it takes the master (and thus executor topology) from
+ * spark-submit.
  *
  *   spark-submit --master local-cluster[2,4,8192] --class graft.SubmitBench \
  *     flowragspark.jar <pregen-src-dir> <workdir> <targetMB>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
-import graft.lineage.{Lineage, Metrics, UnitLineage}
+import graft.lineage.{Lineage, Metrics}
 import graft.operators.KMeans
 import graft.table.{DataFileMeta, GraftTable, InLong, MetaIO, PartitionSpec}
 
@@ -47,9 +47,9 @@ import graft.table.{DataFileMeta, GraftTable, InLong, MetaIO, PartitionSpec}
  *  - The bucket -> representative router is one O(1)-per-row codegen'd
  *    expression ([[graft.expr.IvfRep]]: binary search + salt hash), not an
  *    O(k) chained `when`.
- *  - LINEAGE-RESUMABLE, two unit shapes: the trained centroids are the
- *    job's first durable artifact (a killed 100 TB build never retrains),
- *    then
+ *  - LINEAGE-RESUMABLE through [[UnitJob]], two unit shapes: the trained
+ *    centroids are the job's first durable artifact (a killed 100 TB build
+ *    never retrains), then
  *      * [[runFiles]] (the production path for file-backed sources):
  *        units are FFD-packed INPUT-FILE groups — each unit reads only
  *        its own files (zero read amplification, the Compact/Cluster
@@ -153,8 +153,8 @@ object BuildIvf {
     * append's); an expired build snapshot falls back to the lineage
     * units' totals. No manifest re-read either way. */
   private def completedResult(spark: SparkSession, root: String,
-      jid: String): Option[Result] =
-    Lineage.committedSnapshot(root, jid).map { sid =>
+      job: UnitJob): Option[Result] =
+    job.committed.map { sid =>
       val t = GraftTable.load(root, spark)
       val k = t.meta.properties(KProp).toInt
       t.meta.snapshot(sid) match {
@@ -162,7 +162,7 @@ object BuildIvf {
           s.summary.get("added-rows").map(_.toLong).getOrElse(0L),
           s.summary.get("added-files").map(_.toInt).getOrElse(0))
         case None =>
-          val units = Lineage.committedUnits(root, jid).values
+          val units = job.resumed.values
           Result(t, k, units.map(_.rows).sum, units.map(_.filesOut.size).sum)
       }
     }
@@ -209,7 +209,7 @@ object BuildIvf {
     * returns Left when our own commit raced the kill (snapshot durable,
     * marker not yet written) so the caller recognizes it instead of
     * appending a duplicate. */
-  private def attachTable(spark: SparkSession, root: String, jid: String,
+  private def attachTable(spark: SparkSession, root: String, job: UnitJob,
       sorted: Seq[(Long, Array[Long])]): Either[Result, GraftTable] = {
     val k = sorted.size
     if (MetaIO.currentVersion(root).isDefined) {
@@ -218,8 +218,8 @@ object BuildIvf {
           .contains(encodeCentroids(sorted)),
         s"$root holds a different table; refusing to resume an IVF build into it")
       ex.meta.currentSnapshot
-        .filter(_.summary.get("job-id").contains(jid)).foreach { s =>
-          Lineage.markCommitted(root, jid, s.snapshotId)
+        .filter(_.summary.get("job-id").contains(job.jobId)).foreach { s =>
+          job.markCommitted(s.snapshotId)
           return Left(Result(ex, k,
             s.summary.get("added-rows").map(_.toLong).getOrElse(0L),
             s.summary.get("added-files").map(_.toInt).getOrElse(0)))
@@ -243,17 +243,12 @@ object BuildIvf {
 
   /** Final phase: fold every committed unit's files into ONE snapshot,
     * mark the job done, record metrics. */
-  private def finish(t: GraftTable, root: String, jid: String, k: Int,
-      jobT0: Long, detail: Map[String, String]): Result = {
-    val added = Lineage.committedUnits(root, jid).values.toSeq
-      .sortBy(_.unit).flatMap(_.filesOut)
-    val snap = t.commit("append", added, Set.empty,
-      summary = Map("job" -> "build-ivf", "job-id" -> jid))
-    Lineage.markCommitted(root, jid, snap.snapshotId)
-    Metrics.recordJob(root, "build-ivf",
-      (System.nanoTime() - jobT0) / 1000000, detail ++ Map(
-        "k" -> k.toString, "files" -> added.size.toString,
-        "rows" -> added.map(_.rowCount).sum.toString))
+  private def finish(t: GraftTable, job: UnitJob, units: Int, k: Int,
+      detail: Map[String, String]): Result = {
+    val (_, added) = job.finish(t, units, "append", Set.empty,
+      Map("job" -> "build-ivf", "job-id" -> job.jobId), "build-ivf") { added =>
+      detail ++ Map("k" -> k.toString, "files" -> added.size.toString,
+        "rows" -> added.map(_.rowCount).sum.toString) }
     Result(t, k, added.map(_.rowCount).sum, added.size)
   }
 
@@ -275,18 +270,18 @@ object BuildIvf {
     // same way Compact's input list does; a non-file source falls back to
     // the parameter signature alone.
     val inputs = scala.util.Try(vectors.inputFiles.toSeq).getOrElse(Nil)
-    val jid = Compact.jobId("build-ivf", 0L,
+    val job = new UnitJob(root, UnitJob.id("build-ivf", 0L,
       s"$idCol|$vecCol|${initIds.sorted.mkString(",")}|$iters|$targetBytes|$waves",
-      inputs)
-    completedResult(spark, root, jid).foreach(r => return r)
+      inputs), jobT0)
+    completedResult(spark, root, job).foreach(r => return r)
     Files.createDirectories(Paths.get(root))
-    preTrainingGuard(spark, root, jid)
+    preTrainingGuard(spark, root, job.jobId)
     val (cents, sizes) =
-      fitOrResume(vectors, idCol, vecCol, initIds, iters, root, jid)
+      fitOrResume(vectors, idCol, vecCol, initIds, iters, root, job.jobId)
     val sorted = cents.sortBy(_._1)
     val k = sorted.size
     val sub = subBucketCounts(sorted, sizes, targetBytes)
-    val t = attachTable(spark, root, jid, sorted) match {
+    val t = attachTable(spark, root, job, sorted) match {
       case Left(done) => return done
       case Right(tbl) => tbl
     }
@@ -310,26 +305,15 @@ object BuildIvf {
         out.toSeq.map(_.sorted)
       }
     }
-    val already = Lineage.committedUnits(root, jid)
-    var executed = already.size
-    waveSets.indices.filterNot(already.contains).foreach { wi =>
-      failAfterUnits.foreach { n =>
-        if (executed >= n)
-          throw new RuntimeException(s"injected failure after $n units")
-      }
-      val tU = System.nanoTime()
+    job.run(waveSets.size, poolSize = 1, failAfterUnits) { _.map { wi =>
       val waveCids = waveSets(wi)
       val a = assign(vectors, idCol, vecCol, sorted)
       val waveDf =
         if (waveSets.size == 1) a
         else a.filter(col("bucket").isin(waveCids.map(Long.box): _*))
-      val out = t.writeDataFiles(route(waveDf, waveCids.toArray, sub))
-      Lineage.commitUnit(root, UnitLineage(jid, wi, Nil, out,
-        out.map(_.rowCount).sum, out.map(_.fileSizeBytes).sum,
-        (System.nanoTime() - tU) / 1000000))
-      executed += 1
-    }
-    finish(t, root, jid, k, jobT0, Map("waves" -> waveSets.size.toString))
+      (Nil, t.writeDataFiles(route(waveDf, waveCids.toArray, sub)))
+    } }
+    finish(t, job, waveSets.size, k, Map("waves" -> waveSets.size.toString))
   }
 
   /** File-group-resumable build — the production 100 TB path for
@@ -349,17 +333,17 @@ object BuildIvf {
       failAfterUnits: Option[Int] = None): Result = {
     val jobT0 = System.nanoTime()
     require(srcFiles.nonEmpty, "no input files")
-    val jid = Compact.jobId("build-ivf-files", 0L,
+    val job = new UnitJob(root, UnitJob.id("build-ivf-files", 0L,
       s"$idCol|$vecCol|${initIds.sorted.mkString(",")}|$iters|$targetBytes",
-      srcFiles)
-    completedResult(spark, root, jid).foreach(r => return r)
+      srcFiles), jobT0)
+    completedResult(spark, root, job).foreach(r => return r)
     Files.createDirectories(Paths.get(root))
-    preTrainingGuard(spark, root, jid)
-    val (cents, sizes) = fitOrResume(
-      spark.read.parquet(srcFiles: _*), idCol, vecCol, initIds, iters, root, jid)
+    preTrainingGuard(spark, root, job.jobId)
+    val (cents, sizes) = fitOrResume(spark.read.parquet(srcFiles: _*),
+      idCol, vecCol, initIds, iters, root, job.jobId)
     val sorted = cents.sortBy(_._1)
     val k = sorted.size
-    val t = attachTable(spark, root, jid, sorted) match {
+    val t = attachTable(spark, root, job, sorted) match {
       case Left(done) => return done
       case Right(tbl) => tbl
     }
@@ -385,47 +369,23 @@ object BuildIvf {
         math.max(1L, (n.toDouble * unitBytes / totalBytes).toLong)).toMap,
       targetBytes)
 
-    val already = Lineage.committedUnits(root, jid)
     // Resume soundness: the job id pins file PATHS but not sizes, and the
     // FFD grouping orders by size — if a source file was rewritten between
     // kill and resume, the recomputed groups no longer line up with the
     // committed units' recorded inputs, and trusting the indices would
     // ingest some files twice and others never. Fail loudly instead.
-    already.foreach { case (gi, u) =>
+    job.resumed.foreach { case (gi, u) =>
       require(gi < groups.size && groups(gi).map(_.path).toSet == u.filesIn.toSet,
         s"input files changed since the killed run (unit $gi's group no " +
-          s"longer matches its lineage); delete $root/lineage/$jid to rebuild")
+          s"longer matches its lineage); delete $root/lineage/${job.jobId} to rebuild")
     }
-    val executed = new java.util.concurrent.atomic.AtomicInteger(already.size)
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(math.max(1, maxConcurrentUnits))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fs = groups.indices.filterNot(already.contains).map { gi =>
-        Future {
-          failAfterUnits.foreach { n =>
-            if (executed.incrementAndGet() > n)
-              throw new RuntimeException(s"injected failure after $n units")
-          }
-          val g = groups(gi)
-          val tU = System.nanoTime()
-          val src = spark.read.parquet(g.map(_.path): _*)
-          val out = t.writeDataFiles(route(assign(src, idCol, vecCol, sorted),
-            sorted.map(_._1).toArray, unitSub(g.map(_.fileSizeBytes).sum)))
-          Lineage.commitUnit(root, UnitLineage(jid, gi, g.map(_.path), out,
-            out.map(_.rowCount).sum, out.map(_.fileSizeBytes).sum,
-            (System.nanoTime() - tU) / 1000000))
-        }
-      }
-      // On a failed unit, stop QUEUED units from starting before
-      // rethrowing (the Cluster pattern): in-flight units finish and their
-      // commitUnit is idempotent for the resume.
-      try Await.result(Future.sequence(fs), Duration.Inf)
-      catch { case e: Throwable => pool.shutdownNow(); throw e }
-    } finally pool.shutdown()
-    finish(t, root, jid, k, jobT0, Map("units" -> groups.size.toString))
+    job.run(groups.size, maxConcurrentUnits, failAfterUnits) { _.map { gi =>
+      val g = groups(gi)
+      val src = spark.read.parquet(g.map(_.path): _*)
+      (g.map(_.path), t.writeDataFiles(route(assign(src, idCol, vecCol, sorted),
+        sorted.map(_._1).toArray, unitSub(g.map(_.fileSizeBytes).sum))))
+    } }
+    finish(t, job, groups.size, k, Map("units" -> groups.size.toString))
   }
 
   /** Incremental index maintenance: assign NEW vectors with the STORED

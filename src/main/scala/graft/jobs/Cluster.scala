@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
-import graft.lineage.{Lineage, UnitLineage}
 import graft.table.{DataFileMeta, GraftTable, Snapshot}
 
 /**
@@ -75,143 +74,92 @@ object Cluster {
     val files = only.getOrElse(t.snapshotFiles(base))
     if (files.isEmpty) return Result(None, "", mode, curve, 0, 0, 0, 0)
     val bytesIn = files.map(_.fileSizeBytes).sum
-    val jid = Compact.jobId(s"cluster-$mode-$curve", base.snapshotId,
-      targetBytes.toString, files.map(_.path))
-    Lineage.committedSnapshot(t.root, jid).foreach { sid =>
-      return Result(t.meta.snapshot(sid), jid, mode, curve, files.size, 0, bytesIn, 0)
+    val job = new UnitJob(t.root, UnitJob.id(s"cluster-$mode-$curve", base.snapshotId,
+      targetBytes.toString, files.map(_.path)), jobT0)
+    job.committed.foreach { sid =>
+      return Result(t.meta.snapshot(sid), job.jobId, mode, curve, files.size, 0, bytesIn, 0)
     }
 
-    val added: Seq[DataFileMeta] = mode match {
-      case "global" =>
-        // PARTITION-PRESERVING: on a partitioned table, the full re-sort
-        // range-exchanges WITHIN each partition value (files grouped by
-        // partitionOf), so every output file stays partition-pure and the
-        // commit re-derives valued manifests — a single whole-table exchange
-        // would mix partition values into each output file, silently
-        // demoting the declared spec's manifest pruning to zero. Each
-        // partition group is an independently resumable lineage unit.
-        val spec = t.meta.partitionSpec
-        val pgroups: Seq[Seq[DataFileMeta]] = spec match {
-          case None => Seq(files)
-          case Some(sp) => files
-            .groupBy(f => graft.table.PartitionSpec.partitionOf(sp, f))
-            .toSeq.sortBy(_._1.getOrElse("")).map(_._2)
-        }
-        // Partition-value groups run on the SAME bounded pool as groups
-        // mode (they are independent lineage units): a table with many
-        // SMALL partition values must not serialize many under-parallel
-        // exchanges — each small value's job leaves most task slots idle,
-        // and pooling overlaps them. Big values saturate the cluster alone
-        // and simply queue.
-        val already = Lineage.committedUnits(t.root, jid)
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(math.max(1, maxConcurrentGroups))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try {
-          val fs = pgroups.indices.filterNot(already.contains).map { gi => Future {
-          val g = pgroups(gi)
-          val gBytes = g.map(_.fileSizeBytes).sum
-          val numFiles = alignToSlots(
-            math.max(1, math.ceil(gBytes.toDouble / targetBytes).toInt),
-            t.spark.sparkContext.defaultParallelism)
-          val t0 = System.nanoTime()
-          // Boundary pass on a PROJECTION of the curve key only: Parquet
-          // column pruning never reads the image payload, so the table's
-          // bytes are read once, in the rewrite pass — repartitionByRange's
-          // sampling would execute the payload-bearing child a second time.
-          // The pass reads a deterministic stratified FILE sample (every
-          // k-th by path, ~32 files): boundaries only steer partition
-          // balance, never correctness, and a full-table key scan is a
-          // non-scaling fixed cost (~1.5 s at any core count on the
-          // 1024-file fixture) that grows with file count at 10^12 rows.
-          val sampleFiles = strideSample(g.sortBy(_.path), BoundsSampleFiles)
-          val bounds = curveBoundaries(
-            t.readFiles(sampleFiles).select(curveCol(curve).as("__ck")),
-            numFiles, sampleFiles.map(_.rowCount).sum)
-          graft.lineage.Metrics.recordJob(t.root, "cluster-bounds",
-            (System.nanoTime() - t0) / 1000000,
-            Map("parts" -> numFiles.toString, "bounds" -> bounds.length.toString))
-          // NOTE (measured, do not "fix"): leaving the scan at the default
-          // 128 MB packing beats shrinking partitions to 4x-cores
-          // granularity. More map tasks looks like better utilization, but
-          // the bypass-merge shuffle writer's cost scales with mapTasks x
-          // reducers (each map task materializes one segment per reducer),
-          // and the extra file churn measured ~40% slower at 8 cores on the
-          // 1.48 GB fixture.
-          val df = t.readFiles(g).withColumn("__ck", curveCol(curve))
-          val out = t.writeDataFiles(
-            rangeExchange(df, col("__ck"), bounds)
-              .sortWithinPartitions(col("__ck"))
-              .drop("__ck"))
-          Lineage.commitUnit(t.root, UnitLineage(jid, gi, g.map(_.path), out,
-            out.map(_.rowCount).sum, out.map(_.fileSizeBytes).sum,
-            (System.nanoTime() - t0) / 1000000))
-          } }
-          // On a failed unit, stop QUEUED units from starting (shutdownNow)
-          // before rethrowing — otherwise they keep running as zombies and
-          // race a caller's immediate lineage-resume retry. In-flight Spark
-          // jobs finish their current unit (their commitUnit is idempotent
-          // and the retry skips committed units).
-          try Await.result(Future.sequence(fs), Duration.Inf)
-          catch { case e: Throwable => pool.shutdownNow(); throw e }
-        } finally pool.shutdown()
-        Lineage.committedUnits(t.root, jid).values.flatMap(_.filesOut)
-          .toSeq.sortBy(_.path)
-      case "groups" =>
-        // Pack input files into ~4x-target groups; each group is an
-        // independently sorted, independently resumable unit. Partitioned
-        // tables pack within partition values (same invariant as Compact:
-        // rewrites must not mix partitions or the outputs lose their value).
-        val spec = t.meta.partitionSpec
-        val groups = packGroups(files, targetBytes * 4,
-          groupOf = f => spec.flatMap(graft.table.PartitionSpec.partitionOf(_, f)))
-        val already = Lineage.committedUnits(t.root, jid)
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(math.max(1, maxConcurrentGroups))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val executed = new java.util.concurrent.atomic.AtomicInteger(already.size)
-        try {
-          val fs = groups.indices.filterNot(already.contains).map { gi =>
-            Future {
-              failAfterUnits.foreach { k =>
-                if (executed.incrementAndGet() > k)
-                  throw new RuntimeException(s"injected failure after $k units")
-              }
-              val g = groups(gi)
-              val t0 = System.nanoTime()
-              val n = math.max(1, math.ceil(g.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt)
-              val bounds = curveBoundaries(t.readFiles(g).select(curveCol(curve).as("__ck")),
-                n, g.map(_.rowCount).sum)
-              val df = t.readFiles(g).withColumn("__ck", curveCol(curve))
-              val out = t.writeDataFiles(
-                rangeExchange(df, col("__ck"), bounds)
-                  .sortWithinPartitions(col("__ck")).drop("__ck"))
-              Lineage.commitUnit(t.root, UnitLineage(jid, gi, g.map(_.path), out,
-                out.map(_.rowCount).sum, out.map(_.fileSizeBytes).sum,
-                (System.nanoTime() - t0) / 1000000))
-            }
+    val spec = t.meta.partitionSpec
+    // A unit is a file group and the curve-key bounds of its range exchange.
+    val (units, boundsOf): (Seq[Seq[DataFileMeta]], Seq[DataFileMeta] => Array[Long]) =
+      mode match {
+        case "global" =>
+          // PARTITION-PRESERVING: on a partitioned table, the full re-sort
+          // range-exchanges WITHIN each partition value (files grouped by
+          // partitionOf), so every output file stays partition-pure and the
+          // commit re-derives valued manifests — a single whole-table
+          // exchange would mix partition values into each output file,
+          // silently demoting the declared spec's manifest pruning to zero.
+          // Each partition group is an independently resumable unit, on the
+          // SAME bounded pool as groups mode: a table with many SMALL
+          // partition values must not serialize many under-parallel
+          // exchanges — each small value's job leaves most task slots idle,
+          // and pooling overlaps them. Big values saturate the cluster
+          // alone and simply queue.
+          val pgroups = spec match {
+            case None => Seq(files)
+            case Some(sp) => files
+              .groupBy(f => graft.table.PartitionSpec.partitionOf(sp, f))
+              .toSeq.sortBy(_._1.getOrElse("")).map(_._2)
           }
-          // Same queued-unit cancellation as global mode (see above).
-          try Await.result(Future.sequence(fs), Duration.Inf)
-          catch { case e: Throwable => pool.shutdownNow(); throw e }
-        } finally pool.shutdown()
-        Lineage.committedUnits(t.root, jid).values.flatMap(_.filesOut).toSeq.sortBy(_.path)
-      case other => throw new IllegalArgumentException(s"unknown mode: $other")
-    }
+          (pgroups, { g =>
+            val numFiles = alignToSlots(
+              math.max(1, math.ceil(g.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt),
+              t.spark.sparkContext.defaultParallelism)
+            val t0 = System.nanoTime()
+            // Boundary pass on a PROJECTION of the curve key only: Parquet
+            // column pruning never reads the image payload, so the table's
+            // bytes are read once, in the rewrite pass — repartitionByRange's
+            // sampling would execute the payload-bearing child a second
+            // time. The pass reads a deterministic stratified FILE sample
+            // (every k-th by path, ~32 files): boundaries only steer
+            // partition balance, never correctness, and a full-table key
+            // scan is a non-scaling fixed cost (~1.5 s at any core count on
+            // the 1024-file fixture) that grows with file count at 10^12
+            // rows.
+            val sampleFiles = strideSample(g.sortBy(_.path), BoundsSampleFiles)
+            val bounds = curveBoundaries(
+              t.readFiles(sampleFiles).select(curveCol(curve).as("__ck")),
+              numFiles, sampleFiles.map(_.rowCount).sum)
+            graft.lineage.Metrics.recordJob(t.root, "cluster-bounds",
+              (System.nanoTime() - t0) / 1000000,
+              Map("parts" -> numFiles.toString, "bounds" -> bounds.length.toString))
+            bounds
+          })
+        case "groups" =>
+          // Pack input files into ~4x-target groups; each group is an
+          // independently sorted, independently resumable unit. Partitioned
+          // tables pack within partition values (same invariant as Compact:
+          // rewrites must not mix partitions or the outputs lose their value).
+          (packGroups(files, targetBytes * 4,
+            groupOf = f => spec.flatMap(graft.table.PartitionSpec.partitionOf(_, f))),
+            g => curveBoundaries(t.readFiles(g).select(curveCol(curve).as("__ck")),
+              math.max(1, math.ceil(g.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt),
+              g.map(_.rowCount).sum))
+        case other => throw new IllegalArgumentException(s"unknown mode: $other")
+      }
+    job.run(units.size, maxConcurrentGroups, failAfterUnits) { _.map { u =>
+      val g = units(u)
+      val bounds = boundsOf(g)
+      // NOTE (measured, do not "fix"): leaving the scan at the default
+      // 128 MB packing beats shrinking partitions to 4x-cores
+      // granularity. More map tasks looks like better utilization, but
+      // the bypass-merge shuffle writer's cost scales with mapTasks x
+      // reducers (each map task materializes one segment per reducer),
+      // and the extra file churn measured ~40% slower at 8 cores on the
+      // 1.48 GB fixture.
+      val df = t.readFiles(g).withColumn("__ck", curveCol(curve))
+      (g.map(_.path), t.writeDataFiles(rangeExchange(df, col("__ck"), bounds)
+        .sortWithinPartitions(col("__ck")).drop("__ck")))
+    } }
 
-    val snap = t.commit("cluster", added, files.map(_.path).toSet, Map(
-      "job-id" -> jid, "curve" -> curve, "mode" -> mode))
-    Lineage.markCommitted(t.root, jid, snap.snapshotId)
-    graft.lineage.Metrics.recordJob(t.root, "cluster",
-      (System.nanoTime() - jobT0) / 1000000, Map(
-        "job-id" -> jid, "curve" -> curve, "mode" -> mode,
+    val (snap, added) = job.finish(t, units.size, "cluster", files.map(_.path).toSet, Map(
+      "job-id" -> job.jobId, "curve" -> curve, "mode" -> mode), "cluster") { added => Map(
+        "job-id" -> job.jobId, "curve" -> curve, "mode" -> mode,
         "files-in" -> files.size.toString, "files-out" -> added.size.toString,
-        "bytes-in" -> bytesIn.toString))
-    Result(Some(snap), jid, mode, curve, files.size, added.size, bytesIn,
+        "bytes-in" -> bytesIn.toString) }
+    Result(Some(snap), job.jobId, mode, curve, files.size, added.size, bytesIn,
       added.map(_.rowCount).sum)
   }
 
@@ -358,16 +306,10 @@ object Cluster {
   /** Exact range exchange: bucket each row by driver-computed `bounds`
     * (codegen'd binary search) and hash-repartition on a REPRESENTATIVE value
     * chosen so bucket i lands exactly at partition i — a range partitioning
-    * with zero sampling executions of the child.
-    *
-    * GRAFT_CLUSTER_EXCHANGE=rbr switches to Spark's repartitionByRange for
-    * same-day A/B benchmarking only (its sampling executes the
-    * payload-bearing child twice — never the default). */
+    * with zero sampling executions of the child. */
   def rangeExchange(df: DataFrame, ck: Column, bounds: Array[Long]): DataFrame = {
     val n = bounds.length + 1
     if (n == 1) return df.repartition(1)
-    if (sys.env.get("GRAFT_CLUSTER_EXCHANGE").contains("rbr"))
-      return df.repartitionByRange(n, ck)
     df.withColumn("__rep", gf.range_rep(ck, bounds, partitionReps(n)))
       .repartition(n, col("__rep"))
       .drop("__rep")
@@ -390,7 +332,9 @@ object Cluster {
     reps
   }
 
-  /** Greedy size-ordered grouping (first-fit) of files into rewrite groups;
+  /** First-fit-decreasing grouping of files into rewrite groups of at most
+    * `capacity` bytes (a larger file gets a group of its own); candidates
+    * sorted by (size desc, path), so the grouping is deterministic.
     * `groupOf` keeps groups within one partition value (see Compact.plan). */
   def packGroups(files: Seq[DataFileMeta], capacity: Long,
       groupOf: DataFileMeta => Option[String] = _ => None): Seq[Seq[DataFileMeta]] =

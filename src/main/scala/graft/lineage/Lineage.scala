@@ -9,7 +9,10 @@ import graft.table.{DataFileMeta, TableJson}
 /**
  * Per-partition lineage checkpointing (north rule: every stage checkpoints
  * (files-in, files-out, rows, bytes) to a resumable manifest so a killed run
- * restarts at partition granularity).
+ * restarts at partition granularity). The protocol over these records is
+ * run in one place, [[graft.jobs.UnitJob]], for compact, cluster and the IVF
+ * build; its single injected kill point falls between a unit's durable
+ * output and its lineage row.
  *
  * Re-grounds the reference's hash-after-success commit-marker ordering
  * (pipeline/src/indexing/pipeline.ts:93-94) and its skip-unchanged planning

@@ -311,6 +311,39 @@ class PartitionSpecSpec extends GraftSuite {
       "partition pruning effective after the pooled global cluster")
   }
 
+  test("killed global-mode cluster resumes at partition-value granularity") {
+    val root = TestFixtures.workRoot.resolve("part-global-kill").toString
+    val t = GraftTable.create(root, spark,
+      partitionSpec = Some(PartitionSpec("fmt", "identity")))
+    val all = ImageGen.df(spark, 240, seed = 34L, partitions = 4).cache()
+    GraftTable.append(t, all.filter(col("fmt") === "png"), targetFiles = Some(3))
+    GraftTable.append(t, all.filter(col("fmt") === "jpg"), targetFiles = Some(3))
+    all.unpersist()
+    val before = snapshotReplay(t)
+    val baseId = t.currentSnapshot.snapshotId
+    def cluster(fail: Option[Int]) = graft.jobs.Cluster.run(t, curve = "zorder",
+      mode = "global", targetBytes = 64L * 1024, maxConcurrentGroups = 1,
+      failAfterUnits = fail)
+
+    // Two partition values, so two units; the kill lands after unit 1's
+    // files are written and before its lineage.
+    intercept[RuntimeException] { cluster(Some(1)) }
+    assert(t.currentSnapshot.snapshotId == baseId, "no snapshot must commit on kill")
+    val jid = graft.jobs.UnitJob.id("cluster-global-zorder", baseId,
+      (64L * 1024).toString, t.currentFiles.map(_.path))
+    val killed = graft.lineage.Lineage.committedUnits(root, jid)
+    assert(killed.keySet == Set(0), s"exactly unit 0 committed: ${killed.keySet}")
+
+    val res = cluster(None)
+    assert(res.jobId == jid && res.snapshot.exists(_.operation == "cluster"))
+    assert(killed(0).filesOut.map(_.path).toSet.subsetOf(t.currentFiles.map(_.path).toSet),
+      "unit 0's outputs are reused, not rewritten")
+    assert(graft.lineage.Lineage.committedUnits(root, jid).keySet == Set(0, 1))
+    assert(snapshotReplay(t) == before)
+    val snap = t.currentSnapshot
+    assert(snap.manifests.flatMap(snap.partitionOfManifest).toSet == Set("png", "jpg"))
+  }
+
   test("RangeString prunes files by string-key stats and manifests under identity only") {
     import graft.table.RangeString
     val f = file(Map("image_id" -> ColStats(Some("img-0010"), Some("img-0020"), 0)))

@@ -12,12 +12,9 @@ import org.apache.spark.sql.SparkSession
   * surface (Bench/Verify over the driver's text-heavy parquet) passes true:
   * its shuffles are compressible strings/aggregates, and the engine-wide
   * false default was the prime suspect for round 3's unexplained 2.8x
-  * q18_minhash_bands regression. SPARK_GRAFT_SHUFFLE_COMPRESS overrides both
-  * for A/B runs. */
+  * q18_minhash_bands regression. */
 object GraftSession {
-  def builder(cores: Int, shuffleCompress: Boolean = false): SparkSession.Builder = {
-    val compress = sys.env.get("SPARK_GRAFT_SHUFFLE_COMPRESS")
-      .map(_.toBoolean).getOrElse(shuffleCompress)
+  def builder(cores: Int, shuffleCompress: Boolean = false): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
@@ -32,11 +29,10 @@ object GraftSession {
       .config("spark.sql.unionOutputPartitioning", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.shuffle.compress", compress.toString)
-      .config("spark.shuffle.spill.compress", compress.toString)
+      .config("spark.shuffle.compress", shuffleCompress.toString)
+      .config("spark.shuffle.spill.compress", shuffleCompress.toString)
       .config("spark.reducer.maxSizeInFlight", "96m")
       .config("spark.ui.enabled", "false")
-  }
 
   def get(cores: Int = Runtime.getRuntime.availableProcessors(),
       shuffleCompress: Boolean = false): SparkSession = {

@@ -204,18 +204,14 @@ object Main {
           println(s"cluster snapshot=${r.snapshot.map(_.snapshotId).getOrElse(-1)} curve=${r.curve} mode=${r.mode} filesIn=${r.filesIn} filesOut=${r.filesOut} rows=${r.rows}")
         case "lineage" =>
           val t = GraftTable.load(root, spark)
-          val jobs = java.nio.file.Files.list(
-            java.nio.file.Paths.get(root, "lineage")).iterator()
-          while (jobs.hasNext) {
-            val j = jobs.next().getFileName.toString
-            if (j.startsWith("_")) () else {
-            val units = graft.lineage.Lineage.committedUnits(root, j)
-            val snap = graft.lineage.Lineage.committedSnapshot(root, j)
-            println(s"job=$j units=${units.size} committedSnapshot=${snap.getOrElse("-")}" +
-              s" rows=${units.values.map(_.rows).sum} bytes=${units.values.map(_.bytes).sum}" +
-              s" filesIn=${units.values.map(_.filesIn.size).sum} filesOut=${units.values.map(_.filesOut.size).sum}")
+          graft.util.Fs.list(java.nio.file.Paths.get(root, "lineage"))
+            .map(_.getFileName.toString).filterNot(_.startsWith("_")).foreach { j =>
+              val units = graft.lineage.Lineage.committedUnits(root, j)
+              val snap = graft.lineage.Lineage.committedSnapshot(root, j)
+              println(s"job=$j units=${units.size} committedSnapshot=${snap.getOrElse("-")}" +
+                s" rows=${units.values.map(_.rows).sum} bytes=${units.values.map(_.bytes).sum}" +
+                s" filesIn=${units.values.map(_.filesIn.size).sum} filesOut=${units.values.map(_.filesOut.size).sum}")
             }
-          }
         case "rewrite-manifests" =>
           val t = GraftTable.load(root, spark)
           val r = RewriteManifests.run(t,

@@ -28,24 +28,12 @@ object SubmitBench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // zstd = engine default (storage-optimal). SPARK_GRAFT_CODEC=snappy
-      // for the A/B in BENCH/BASELINE.md: on already-compressed image bytes
-      // snappy buys ~15% single-node throughput for +30% storage; the
-      // 8-core throughput floor is codec-independent (streaming-bandwidth
-      // bound), so the scaling efficiency is unchanged.
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"))
-      // Engine default (see GraftSession): image payloads are already
-      // compressed, shuffle lz4 is wasted CPU. SPARK_GRAFT_SHUFFLE_COMPRESS
-      // re-enables for A/B.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      // Fetch concurrency A/B knob for the exchange-reduce attribution
-      // (BENCH/BASELINE.md §4): default 96m; SPARK_GRAFT_MAX_SIF overrides.
-      .config("spark.reducer.maxSizeInFlight",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SIF", "96m"))
+      // Engine defaults (see GraftSession): zstd, and no shuffle compression
+      // (image payloads are already compressed, so lz4 is wasted CPU).
+      .config("spark.sql.parquet.compression.codec", "zstd")
+      .config("spark.shuffle.compress", "false")
+      .config("spark.shuffle.spill.compress", "false")
+      .config("spark.reducer.maxSizeInFlight", "96m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // defaultParallelism is 2 until executors register; for

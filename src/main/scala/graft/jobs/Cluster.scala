@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{functions => gf}
-import graft.table.{DataFileMeta, GraftTable, Snapshot}
+import graft.table.{DataFileMeta, GraftTable, PartitionSpec, Snapshot}
 
 /**
  * Multi-dimensional clustering: rewrite data files in space-filling-curve
@@ -80,30 +80,24 @@ object Cluster {
       return Result(t.meta.snapshot(sid), job.jobId, mode, curve, files.size, 0, bytesIn, 0)
     }
 
-    val spec = t.meta.partitionSpec
+    val groups = PartitionSpec.group(t.meta.partitionSpec, files)
     // A unit is a file group and the curve-key bounds of its range exchange.
     val (units, boundsOf): (Seq[Seq[DataFileMeta]], Seq[DataFileMeta] => Array[Long]) =
       mode match {
         case "global" =>
           // PARTITION-PRESERVING: on a partitioned table, the full re-sort
-          // range-exchanges WITHIN each partition value (files grouped by
-          // partitionOf), so every output file stays partition-pure and the
-          // commit re-derives valued manifests — a single whole-table
-          // exchange would mix partition values into each output file,
-          // silently demoting the declared spec's manifest pruning to zero.
+          // range-exchanges WITHIN each partition value, so every output
+          // file stays partition-pure and the commit re-derives valued
+          // manifests — a single whole-table exchange would mix partition
+          // values into each output file, silently demoting the declared
+          // spec's manifest pruning to zero.
           // Each partition group is an independently resumable unit, on the
           // SAME bounded pool as groups mode: a table with many SMALL
           // partition values must not serialize many under-parallel
           // exchanges — each small value's job leaves most task slots idle,
           // and pooling overlaps them. Big values saturate the cluster
           // alone and simply queue.
-          val pgroups = spec match {
-            case None => Seq(files)
-            case Some(sp) => files
-              .groupBy(f => graft.table.PartitionSpec.partitionOf(sp, f))
-              .toSeq.sortBy(_._1.getOrElse("")).map(_._2)
-          }
-          (pgroups, { g =>
+          (groups.map(_._2), { g =>
             val numFiles = alignToSlots(
               math.max(1, math.ceil(g.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt),
               t.spark.sparkContext.defaultParallelism)
@@ -132,8 +126,7 @@ object Cluster {
           // independently sorted, independently resumable unit. Partitioned
           // tables pack within partition values (same invariant as Compact:
           // rewrites must not mix partitions or the outputs lose their value).
-          (packGroups(files, targetBytes * 4,
-            groupOf = f => spec.flatMap(graft.table.PartitionSpec.partitionOf(_, f))),
+          (groups.flatMap { case (_, fs) => packGroups(fs, targetBytes * 4) },
             g => curveBoundaries(t.readFiles(g).select(curveCol(curve).as("__ck")),
               math.max(1, math.ceil(g.map(_.fileSizeBytes).sum.toDouble / targetBytes).toInt),
               g.map(_.rowCount).sum))
@@ -217,15 +210,12 @@ object Cluster {
         n, sample.map(_.rowCount).sum)
     }
     val ck = curveCol(curve)
-    t.meta.partitionSpec match {
-      case Some(sp)
-          if affected.nonEmpty &&
-            affected.forall(f => graft.table.PartitionSpec.partitionOf(sp, f).isDefined) =>
-        val pvCol = graft.table.PartitionSpec.toColumn(sp)
-        val perValue = affected
-          .groupBy(f => graft.table.PartitionSpec.partitionOf(sp, f).get)
-          .toSeq.sortBy(_._1)
-          .map { case (pv, g) => (pv, boundsFor(g)) }
+    val spec = t.meta.partitionSpec
+    val groups = PartitionSpec.group(spec, affected)
+    spec match {
+      case Some(sp) if groups.nonEmpty && groups.forall(_._1.isDefined) =>
+        val pvCol = PartitionSpec.toColumn(sp)
+        val perValue = groups.map { case (pv, g) => (pv.get, boundsFor(g)) }
         // The OVERFLOW block catches rows whose partition value is NULL or
         // differs from every affected file's value — a rewrite may CHANGE
         // the partition column (transcode on a fmt-partitioned table maps
@@ -334,19 +324,15 @@ object Cluster {
 
   /** First-fit-decreasing grouping of files into rewrite groups of at most
     * `capacity` bytes (a larger file gets a group of its own); candidates
-    * sorted by (size desc, path), so the grouping is deterministic.
-    * `groupOf` keeps groups within one partition value (see Compact.plan). */
-  def packGroups(files: Seq[DataFileMeta], capacity: Long,
-      groupOf: DataFileMeta => Option[String] = _ => None): Seq[Seq[DataFileMeta]] =
-    files.groupBy(groupOf).toSeq.sortBy(_._1.getOrElse(""))
-      .flatMap { case (_, group) =>
-        val sorted = group.sortBy(f => (-f.fileSizeBytes, f.path))
-        val out = scala.collection.mutable.ArrayBuffer[(scala.collection.mutable.ArrayBuffer[DataFileMeta], Long)]()
-        for (f <- sorted) {
-          val i = out.indexWhere { case (_, used) => used + f.fileSizeBytes <= capacity }
-          if (i >= 0) { val (b, u) = out(i); b += f; out(i) = (b, u + f.fileSizeBytes) }
-          else out += ((scala.collection.mutable.ArrayBuffer(f), f.fileSizeBytes))
-        }
-        out.map(_._1.toSeq).toSeq
-      }
+    * sorted by (size desc, path), so the grouping is deterministic. Callers
+    * pack each partition value's files separately ([[PartitionSpec.group]]). */
+  def packGroups(files: Seq[DataFileMeta], capacity: Long): Seq[Seq[DataFileMeta]] = {
+    val out = scala.collection.mutable.ArrayBuffer[(scala.collection.mutable.ArrayBuffer[DataFileMeta], Long)]()
+    for (f <- files.sortBy(f => (-f.fileSizeBytes, f.path))) {
+      val i = out.indexWhere { case (_, used) => used + f.fileSizeBytes <= capacity }
+      if (i >= 0) { val (b, u) = out(i); b += f; out(i) = (b, u + f.fileSizeBytes) }
+      else out += ((scala.collection.mutable.ArrayBuffer(f), f.fileSizeBytes))
+    }
+    out.map(_._1.toSeq).toSeq
+  }
 }

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.table.{DataFileMeta, GraftTable, Snapshot}
+import graft.table.{DataFileMeta, GraftTable, PartitionSpec, Snapshot}
 
 /**
  * Bin-packing small-file compaction (north star: greedy first-fit-decreasing
@@ -35,21 +35,22 @@ object Compact {
       bytesOut: Long,
       rows: Long)
 
-  /** First-fit-decreasing pack of the compaction candidates into bins of
-    * capacity `targetBytes` ([[Cluster.packGroups]]). Only files <
-    * smallFileThreshold participate; singleton bins are dropped (rewriting
-    * one file alone buys nothing). Deterministic, so a resumed run
-    * re-derives the identical plan. `groupOf` keeps bins within one group
-    * (the table's partition value): a partitioned table's compaction must
-    * not merge files across partitions, or the outputs would lose their
-    * partition value and with it manifest-level pruning. */
-  def plan(files: Seq[DataFileMeta], targetBytes: Long,
-      smallFileFraction: Double = 0.75,
-      groupOf: DataFileMeta => Option[String] = _ => None): Seq[Seq[DataFileMeta]] = {
-    val threshold = (targetBytes * smallFileFraction).toLong
-    Cluster.packGroups(files.filter(_.fileSizeBytes < threshold), targetBytes, groupOf)
+  /** The small-file rule: a file below 3/4 of the target size is a
+    * compaction candidate (also what streaming upkeep counts). */
+  def isSmall(f: DataFileMeta, targetBytes: Long): Boolean =
+    f.fileSizeBytes < (targetBytes * 3) / 4
+
+  /** First-fit-decreasing pack of the compaction candidates ([[isSmall]])
+    * into bins of capacity `targetBytes` ([[Cluster.packGroups]]); singleton
+    * bins are dropped (rewriting one file alone buys nothing).
+    * Deterministic, so a resumed run re-derives the identical plan. `files`
+    * is one group: [[run]] plans each partition value separately, since a
+    * partitioned table's compaction must not merge files across partitions,
+    * or the outputs would lose their partition value and with it
+    * manifest-level pruning. */
+  def plan(files: Seq[DataFileMeta], targetBytes: Long): Seq[Seq[DataFileMeta]] =
+    Cluster.packGroups(files.filter(isSmall(_, targetBytes)), targetBytes)
       .filter(_.size >= 2)
-  }
 
   /** Execute bins grouped into WAVES: each wave is ONE Spark job built as a
     * union of per-bin coalesce(1) children, so partition i of the wave reads
@@ -72,9 +73,8 @@ object Compact {
       waveSize: Int = 0): Result = {
     val jobT0 = System.nanoTime()
     val base = t.currentSnapshot
-    val spec = t.meta.partitionSpec
-    val bins = plan(t.snapshotFiles(base), targetBytes,
-      groupOf = f => spec.flatMap(graft.table.PartitionSpec.partitionOf(_, f)))
+    val bins = PartitionSpec.group(t.meta.partitionSpec, t.snapshotFiles(base))
+      .flatMap { case (_, fs) => plan(fs, targetBytes) }
     val job = new UnitJob(t.root, UnitJob.id("compact", base.snapshotId,
       targetBytes.toString, bins.flatten.map(_.path)), jobT0)
     val removed = bins.flatten.map(_.path).toSet

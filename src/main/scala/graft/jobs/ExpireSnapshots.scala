@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 import graft.table.{GraftTable, MetaIO, TableMetadata}
+import graft.util.Fs
 
 /**
  * Reference-counted snapshot expiration over the metadata tree
@@ -127,11 +128,7 @@ object ExpireSnapshots {
     // planning are preserved (they descend from a retained snapshot, so
     // their manifests/files are live by construction), and the refreshed
     // current pointer is re-validated each attempt.
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      val (v, cur) = MetaIO.load(t.root).get
+    MetaIO.casRetry(t.root, "expire") { (_, cur) =>
       val keep = cur.snapshots.filter(s =>
         retainSet.contains(s.snapshotId) || !known.contains(s.snapshotId))
       require(cur.currentSnapshotId.forall(id => keep.exists(_.snapshotId == id)),
@@ -159,10 +156,7 @@ object ExpireSnapshots {
           k -> math.max(vs.map(_._2).max,
             cur.properties.get(k).map(_.toLong).getOrElse(Long.MinValue)).toString
         }
-      val nm: TableMetadata = cur.copy(snapshots = keep,
-        properties = cur.properties ++ legacyWm)
-      committed = MetaIO.tryCommit(t.root, v, nm)
-      if (attempts > 20) throw new IllegalStateException("expire: CAS contention")
+      Some(cur.copy(snapshots = keep, properties = cur.properties ++ legacyWm))
     }
 
     val (deletedFiles, deletedBytes) =
@@ -182,16 +176,13 @@ object ExpireSnapshots {
     // flag exists precisely to protect in-flight writers' not-yet-committed
     // artifacts, and a pre-CAS manifest is exactly such an artifact.
     if (sweepOrphans && deleteFiles) {
-      val mdDir = MetaIO.metadataDir(t.root)
       val referenced = t.meta.snapshots.flatMap(_.manifests).toSet
       val now = System.currentTimeMillis()
-      val listing = Files.list(mdDir)
-      try listing.iterator().asScala
+      Fs.list(MetaIO.metadataDir(t.root))
         .filter(p => p.getFileName.toString.startsWith("manifest-") &&
           !referenced.contains(p.getFileName.toString) &&
           now - Files.getLastModifiedTime(p).toMillis >= orphanMinAgeMs)
         .foreach(Files.deleteIfExists(_))
-      finally listing.close()
     }
 
     // Orphan sweep: data files on disk referenced by NO manifest of any

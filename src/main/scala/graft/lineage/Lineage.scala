@@ -1,10 +1,10 @@
 package graft.lineage
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
-import scala.jdk.CollectionConverters._
 
 import graft.table.{DataFileMeta, TableJson}
+import graft.util.Fs
 
 /**
  * Per-partition lineage checkpointing (north rule: every stage checkpoints
@@ -38,41 +38,27 @@ object Lineage {
   private def doneFile(root: String, jobId: String): Path =
     dir(root, jobId).resolve("COMMITTED")
 
-  /** Durably record a finished unit (tmp write + atomic rename). */
-  def commitUnit(root: String, e: UnitLineage): Unit = {
-    val d = dir(root, e.jobId)
-    Files.createDirectories(d)
-    val tmp = d.resolve(f".unit-${e.unit}%06d.tmp")
-    Files.write(tmp, TableJson.write(e).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, unitFile(root, e.jobId, e.unit), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Durably record a finished unit. */
+  def commitUnit(root: String, e: UnitLineage): Unit =
+    Fs.writeAtomic(unitFile(root, e.jobId, e.unit), TableJson.write(e))
 
-  def committedUnits(root: String, jobId: String): Map[Int, UnitLineage] = {
-    val d = dir(root, jobId)
-    if (!Files.exists(d)) return Map.empty
-    Files.list(d).iterator().asScala
+  def committedUnits(root: String, jobId: String): Map[Int, UnitLineage] =
+    Fs.list(dir(root, jobId))
       .filter(p => p.getFileName.toString.startsWith("unit-"))
       .map { p =>
         val e = TableJson.read[UnitLineage](
           new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
         e.unit -> e
       }.toMap
-  }
 
-  /** Durably persist a named job ARTIFACT (tmp write + atomic rename): a
-    * phase output that later phases — and a resumed run — reuse instead of
-    * recomputing (e.g. BuildIvf's trained centroids, so a killed 100 TB
-    * index build never retrains). Artifact names must not collide with the
-    * `unit-*` / `COMMITTED` lineage files. */
+  /** Durably persist a named job ARTIFACT: a phase output that later
+    * phases — and a resumed run — reuse instead of recomputing (e.g.
+    * BuildIvf's trained centroids, so a killed 100 TB index build never
+    * retrains). Artifact names must not collide with the `unit-*` /
+    * `COMMITTED` lineage files. */
   def putArtifact(root: String, jobId: String, name: String, content: String): Unit = {
     require(!name.startsWith("unit-") && name != "COMMITTED", s"reserved name: $name")
-    val d = dir(root, jobId)
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".$name.tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, d.resolve(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Fs.writeAtomic(dir(root, jobId).resolve(name), content)
   }
 
   def getArtifact(root: String, jobId: String, name: String): Option[String] = {
@@ -84,14 +70,8 @@ object Lineage {
 
   /** Mark the whole job's snapshot commit done (idempotence guard: a restart
     * after the table commit but before cleanup must not re-commit). */
-  def markCommitted(root: String, jobId: String, snapshotId: Long): Unit = {
-    val d = dir(root, jobId)
-    Files.createDirectories(d)
-    val tmp = d.resolve(".COMMITTED.tmp")
-    Files.write(tmp, snapshotId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, doneFile(root, jobId), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def markCommitted(root: String, jobId: String, snapshotId: Long): Unit =
+    Fs.writeAtomic(doneFile(root, jobId), snapshotId.toString)
 
   def committedSnapshot(root: String, jobId: String): Option[Long] = {
     val f = doneFile(root, jobId)

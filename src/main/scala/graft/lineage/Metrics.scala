@@ -193,12 +193,7 @@ object Metrics {
     val d = dir(root)
     if (!Files.exists(d)) return Nil
     import scala.jdk.CollectionConverters._
-    val files = {
-      val listing = Files.list(d)
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".jsonl")).toList
-      finally listing.close()
-    }
+    val files = graft.util.Fs.list(d).filter(_.getFileName.toString.endsWith(".jsonl"))
     val all = scala.collection.mutable.ArrayBuffer[QueryEvent]()
     // tail = Some(n): min-heap of the n largest timestamps —
     // O(total log n) time, O(n) memory.

@@ -104,8 +104,7 @@ object StreamingIngest {
           // Maintenance still runs when the batch itself was a replayed
           // duplicate — the small-file population it reacts to is real.
           idempotentAppend(t, batch, checkpointDir, batchId)
-          val small = t.currentFiles
-            .count(_.fileSizeBytes < (targetBytes * 3) / 4)
+          val small = t.currentFiles.count(graft.jobs.Compact.isSmall(_, targetBytes))
           if (small >= maintainEveryFiles) {
             graft.jobs.Compact.run(t, targetBytes)
             graft.jobs.Cluster.runIncremental(t, curve, targetBytes): Unit

@@ -2,7 +2,6 @@ package graft.table
 
 import java.nio.file.{Files, Paths}
 import java.util.UUID
-import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
@@ -270,15 +269,10 @@ class GraftTable(val root: String, val spark: SparkSession) {
     * job — the writer already computed them). Zero-row files are dropped.
     * Footers are independent; read them on a bounded parallel pool. */
   def footerStats(relDir: String): Seq[DataFileMeta] = {
-    import scala.jdk.CollectionConverters._
     val dir = Paths.get(s"$root/$relDir")
     val sch = schema
     val rootAbs = Paths.get(root).toAbsolutePath
-    val listing = Files.list(dir)
-    val paths =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      finally listing.close()
+    val paths = graft.util.Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, math.max(1, paths.size)))
     try {
@@ -364,65 +358,34 @@ class GraftTable(val root: String, val spark: SparkSession) {
       attempts += 1
       // Manifests are (re)derived from the FRESH base each attempt: a lost
       // race must never re-commit manifest sets built from a stale file set.
-      val spec = m.partitionSpec
       val parent = m.currentSnapshot
-      val baseManifests = parent.map(_.manifests).getOrElse(Nil)
-      val keptManifests = mutable.ArrayBuffer[String]()
-      val pvals = mutable.Map[String, String]()
-      for (name <- baseManifests) {
+      val kept = parent.toSeq.flatMap(_.manifests).flatMap { name =>
         val data = MetaIO.readManifest(root, name)
         // Removal never widens a manifest's value set, so the partition
         // value carries through rewrites unchanged.
         val pv = parent.flatMap(_.partitionOfManifest(name)).orElse(data.partition)
-        val kept = data.files.filterNot(f => removedPaths.contains(f.path))
-        if (kept.size == data.files.size) {
-          keptManifests += name
-          pv.foreach(v => pvals += name -> v)
-        } else if (kept.nonEmpty) {
-          val nn = s"manifest-${UUID.randomUUID().toString.take(12)}.json"
-          MetaIO.writeManifest(root, nn, ManifestData(kept, pv))
-          keptManifests += nn
-          pv.foreach(v => pvals += nn -> v)
-        } // fully-removed manifest: dropped
+        val files = data.files.filterNot(f => removedPaths.contains(f.path))
+        if (files.size == data.files.size) Some(name -> pv)
+        else if (files.nonEmpty) Some(MetaIO.writeManifest(root, files, pv) -> pv)
+        else None // fully-removed manifest: dropped
       }
       // Added files GROUP BY partition value (one manifest per value) when a
       // spec is declared — the grouping that makes manifest-level pruning
       // real. Files that span partitions (or lack stats) go into one
       // unpartitioned manifest that every filtered scan still opens.
-      val newManifests =
-        if (added.isEmpty) Nil
-        else {
-          val groups: Seq[(Option[String], Seq[DataFileMeta])] = spec match {
-            case None => Seq((None, added))
-            case Some(sp) => added.groupBy(f => PartitionSpec.partitionOf(sp, f))
-              .toSeq.sortBy(_._1.getOrElse(""))
-          }
-          groups.map { case (pv, fs) =>
-            val nn = s"manifest-${UUID.randomUUID().toString.take(12)}.json"
-            MetaIO.writeManifest(root, nn, ManifestData(fs.sortBy(_.path), pv))
-            pv.foreach(v => pvals += nn -> v)
-            nn
-          }
-        }
-      val snap = Snapshot(
-        snapshotId = m.nextSnapshotId,
-        parentId = parent.map(_.snapshotId),
-        timestampMs = System.currentTimeMillis(),
-        operation = operation,
-        manifests = (keptManifests ++ newManifests).toSeq,
-        summary = summary ++ Map(
-          "added-files" -> added.size.toString,
-          "removed-files" -> removedPaths.size.toString,
-          "added-bytes" -> added.map(_.fileSizeBytes).sum.toString,
-          "added-rows" -> added.map(_.rowCount).sum.toString),
-        partitionValues = if (pvals.isEmpty) None else Some(pvals.toMap))
-      result = snap
+      val fresh = PartitionSpec.group(m.partitionSpec, added).map { case (pv, fs) =>
+        MetaIO.writeManifest(root, fs.sortBy(_.path), pv) -> pv
+      }
       // propertiesUpdate rides the SAME CAS as the snapshot: a caller's
       // watermark (e.g. the streaming batch-id guard) and its data commit
       // are atomic — no window where one is visible without the other.
-      Some(m.copy(currentSnapshotId = Some(snap.snapshotId),
-        snapshots = m.snapshots :+ snap,
-        properties = m.properties ++ propertiesUpdate))
+      val nm = m.appendSnapshot(operation, kept ++ fresh, summary ++ Map(
+        "added-files" -> added.size.toString,
+        "removed-files" -> removedPaths.size.toString,
+        "added-bytes" -> added.map(_.fileSizeBytes).sum.toString,
+        "added-rows" -> added.map(_.rowCount).sum.toString))
+      result = nm.currentSnapshot.get
+      Some(nm.copy(properties = nm.properties ++ propertiesUpdate))
     }
     graft.lineage.Metrics.recordJob(root, "commit",
       (System.nanoTime() - t0) / 1000000, Map(

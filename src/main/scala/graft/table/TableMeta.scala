@@ -1,9 +1,12 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
+import java.util.UUID
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
+
+import graft.util.Fs
 
 /**
  * Iceberg-style table metadata, from scratch on Parquet + JSON.
@@ -94,6 +97,19 @@ object PartitionSpec {
       }
     }
 
+  /** `files` grouped by partition value, groups in value order (None —
+    * mixed or stat-less files — first) and files in input order within a
+    * group: the one grouping behind manifest writes and every partition-
+    * preserving rewrite. Without a spec all files form one None group; no
+    * files form no group. */
+  def group(spec: Option[PartitionSpec],
+      files: Seq[DataFileMeta]): Seq[(Option[String], Seq[DataFileMeta])] =
+    if (files.isEmpty) Nil
+    else spec match {
+      case None => Seq((None, files))
+      case Some(sp) => files.groupBy(partitionOf(sp, _)).toSeq.sortBy(_._1)
+    }
+
   /** Can a manifest whose files all carry partition value `pv` contain rows
     * matching `f`? Only filters on the partition column prune; unknown
     * shapes keep. Under truncate[N], `pv` covers the value interval
@@ -152,7 +168,7 @@ case class Snapshot(
     snapshotId: Long,
     parentId: Option[Long],
     timestampMs: Long,
-    operation: String, // append | compact | cluster | rewrite-manifests | merge | expire | transcode
+    operation: String, // append | compact | cluster | rewrite-manifests | merge | delete | transcode
     manifests: Seq[String], // metadata-relative manifest file names
     summary: Map[String, String],
     // manifest name -> partition value, for manifests whose files all share
@@ -180,6 +196,18 @@ case class TableMetadata(
 
   def nextSnapshotId: Long =
     if (snapshots.isEmpty) 1L else snapshots.map(_.snapshotId).max + 1L
+
+  /** This metadata with a new current snapshot, child of the current one,
+    * listing `manifests` (name, partition value) in order. The one place a
+    * snapshot is made: every commit goes through here. */
+  def appendSnapshot(operation: String, manifests: Seq[(String, Option[String])],
+      summary: Map[String, String]): TableMetadata = {
+    val pvals = manifests.collect { case (name, Some(pv)) => name -> pv }.toMap
+    val snap = Snapshot(nextSnapshotId, currentSnapshot.map(_.snapshotId),
+      System.currentTimeMillis(), operation, manifests.map(_._1), summary,
+      if (pvals.isEmpty) None else Some(pvals))
+    copy(currentSnapshotId = Some(snap.snapshotId), snapshots = snapshots :+ snap)
+  }
 }
 
 /** Filesystem-level metadata IO with an optimistic-CAS commit protocol:
@@ -203,23 +231,10 @@ object MetaIO {
       else None
     // The hint is only a hint: scan for any later version a crashed writer
     // committed after the CAS but before the hint swap.
-    val dir = metadataDir(root)
-    if (!Files.exists(dir)) return None
-    val scanned = {
-      val listing = Files.list(dir)
-      try {
-        val it = listing.iterator()
-        var mx = -1
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          if (n.startsWith("v") && n.endsWith(".metadata.json")) {
-            scala.util.Try(n.stripPrefix("v").stripSuffix(".metadata.json").toInt)
-              .toOption.foreach(v => if (v > mx) mx = v)
-          }
-        }
-        if (mx >= 0) Some(mx) else None
-      } finally listing.close()
-    }
+    val scanned = Fs.list(metadataDir(root)).iterator.map(_.getFileName.toString)
+      .filter(n => n.startsWith("v") && n.endsWith(".metadata.json"))
+      .flatMap(n => n.stripPrefix("v").stripSuffix(".metadata.json").toIntOption)
+      .maxOption
     (hinted.toSeq ++ scanned.toSeq).maxOption
   }
 
@@ -276,8 +291,9 @@ object MetaIO {
     }
 
   /** Attempt to commit `meta` as version `base + 1`. Returns true iff this
-    * writer won the CAS. */
-  def tryCommit(root: String, base: Int, meta: TableMetadata): Boolean = {
+    * writer won the CAS. Only table creation calls it directly; every
+    * mutation goes through [[casRetry]]. */
+  private[table] def tryCommit(root: String, base: Int, meta: TableMetadata): Boolean = {
     Files.createDirectories(metadataDir(root))
     val target = versionFile(root, base + 1)
     val body = TableJson.write(meta).getBytes(StandardCharsets.UTF_8)
@@ -287,10 +303,7 @@ object MetaIO {
       case _: java.nio.file.FileAlreadyExistsException => return false
     }
     metaCache.put((root, base + 1, body.length.toLong), meta)
-    val tmp = metadataDir(root).resolve(s".version-hint.${base + 1}.tmp")
-    Files.write(tmp, String.valueOf(base + 1).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, hintFile(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Fs.writeAtomic(hintFile(root), String.valueOf(base + 1))
     true
   }
 
@@ -316,13 +329,15 @@ object MetaIO {
     throw new IllegalStateException("unreachable")
   }
 
-  def writeManifest(root: String, name: String, m: ManifestData): Unit = {
-    Files.createDirectories(metadataDir(root))
-    val tmp = metadataDir(root).resolve(s".$name.tmp")
-    Files.write(tmp, TableJson.write(m).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metadataDir(root).resolve(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** Write `files` as a new manifest carrying partition value `pv` and
+    * return its name — the one manifest writer. Manifests are immutable
+    * under a fresh name, so the parse is cached at write time. */
+  def writeManifest(root: String, files: Seq[DataFileMeta], pv: Option[String]): String = {
+    val name = s"manifest-${UUID.randomUUID().toString.take(12)}.json"
+    val m = ManifestData(files, pv)
+    Fs.writeAtomic(metadataDir(root).resolve(name), TableJson.write(m))
     manifestCache.put((root, name), m)
+    name
   }
 
   def readManifest(root: String, name: String): ManifestData = {

@@ -1,9 +1,13 @@
 package graft.util
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.{Comparator, UUID}
+import scala.jdk.CollectionConverters._
 
-/** Small filesystem helpers shared by the bench/test harnesses. */
+/** The engine's filesystem primitives: every directory listing and every
+  * durable small-file write (metadata, manifests, lineage) goes through
+  * here, so each has one implementation to harden or fault-inject. */
 object Fs {
   /** Depth-first recursive delete; closes the walk stream (an unclosed
     * Files.walk leaks a directory file descriptor per call — noticeable in
@@ -16,6 +20,29 @@ object Fs {
     finally walk.close()
   }
 
+  /** The entries directly under `dir` (empty if it is not a directory). The
+    * directory stream is closed before returning: an unclosed Files.list
+    * holds a file descriptor until the stream is collected. */
+  def list(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.toVector finally listing.close()
+    }
+
+  /** Replace `target` with `content` atomically: write a uniquely named tmp
+    * sibling, then ATOMIC_MOVE it over `target`, so a reader sees the old
+    * file or the whole new one, never a torn write. Creates the parent
+    * directory. Tmp names start with "." and so match no listing filter. */
+  def writeAtomic(target: Path, content: String): Unit = {
+    val dir = target.getParent
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
+    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
   /** Sorted *.parquet files directly under `dir`; a plain-file `dir` is
     * returned as itself (the one-file dataset case). The single listing
     * implementation behind BuildIvf.runFiles call sites — extend here
@@ -23,12 +50,6 @@ object Fs {
   def listParquet(dir: String): Seq[String] = {
     val p = java.nio.file.Paths.get(dir)
     if (!Files.isDirectory(p)) return Seq(dir)
-    val listing = Files.list(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted
-    } finally listing.close()
+    list(p).filter(_.getFileName.toString.endsWith(".parquet")).map(_.toString).sorted
   }
 }

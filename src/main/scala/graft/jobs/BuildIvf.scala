@@ -195,8 +195,7 @@ object BuildIvf {
       case None =>
         val tFit = System.nanoTime()
         val fit = KMeans.fit(vectors, vecCol, idCol, initIds, iters)
-        Metrics.recordJob(root, "kmeans-fit",
-          (System.nanoTime() - tFit) / 1000000,
+        Metrics.recordJob(root, "kmeans-fit", tFit,
           Map("k" -> fit.centroids.size.toString, "iters" -> iters.toString))
         Lineage.putArtifact(root, jid, FitArtifact,
           encodeCentroids(fit.centroids) + "\n" + encodeSizes(fit.sizes))
@@ -411,8 +410,7 @@ object BuildIvf {
     val snap = GraftTable.append(t, route(a, cents.map(_._1).toArray, sub),
       summary = Map("job" -> "ivf-append"))
     val addedRows = snap.summary.get("added-rows").map(_.toLong).getOrElse(0L)
-    Metrics.recordJob(t.root, "ivf-append",
-      (System.nanoTime() - t0) / 1000000,
+    Metrics.recordJob(t.root, "ivf-append", t0,
       Map("rows" -> addedRows.toString,
         "files" -> snap.summary.getOrElse("added-files", "0")))
     addedRows

@@ -116,8 +116,7 @@ object Cluster {
             val bounds = curveBoundaries(
               t.readFiles(sampleFiles).select(curveCol(curve).as("__ck")),
               numFiles, sampleFiles.map(_.rowCount).sum)
-            graft.lineage.Metrics.recordJob(t.root, "cluster-bounds",
-              (System.nanoTime() - t0) / 1000000,
+            graft.lineage.Metrics.recordJob(t.root, "cluster-bounds", t0,
               Map("parts" -> numFiles.toString, "bounds" -> bounds.length.toString))
             bounds
           })

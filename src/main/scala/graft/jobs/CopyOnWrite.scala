@@ -69,8 +69,7 @@ final class CopyOnWrite(t: GraftTable, job: String) {
   def commit(operation: String, added: Seq[DataFileMeta], removed: Seq[DataFileMeta],
       summary: Map[String, String], detail: Map[String, String]): Snapshot = {
     val snap = t.commit(operation, added, removed.map(_.path).toSet, summary)
-    graft.lineage.Metrics.recordJob(t.root, job,
-      (System.nanoTime() - jobT0) / 1000000, detail)
+    graft.lineage.Metrics.recordJob(t.root, job, jobT0, detail)
     snap
   }
 }

@@ -82,6 +82,25 @@ object ExpireSnapshots {
     }
   }
 
+  /** Delete each commit directory holding one of `paths` (root-relative
+    * data files just deleted) once only Spark's `_SUCCESS` marker and `.crc`
+    * checksums remain in it. A commit directory belongs to one write, so no
+    * writer can still be adding to one whose data files are dead. */
+  private def deleteEmptiedDirs(root: String, paths: Seq[String]): Unit = {
+    val dataDir = Paths.get(root, "data").toAbsolutePath
+    paths.map(p => Paths.get(root, p).toAbsolutePath.getParent).distinct
+      .filter(_.getParent == dataDir).foreach { d =>
+        val left = Fs.list(d)
+        if (left.forall { e =>
+              val n = e.getFileName.toString
+              n == "_SUCCESS" || n.endsWith(".crc")
+            }) {
+          left.foreach(Files.deleteIfExists(_))
+          Files.deleteIfExists(d)
+        }
+      }
+  }
+
   /** Retain set from a declarative policy (Iceberg's retain-last /
     * max-snapshot-age): the current snapshot always, plus the newest
     * `keepLast` snapshots, plus every snapshot younger than `maxAgeMs`.
@@ -165,6 +184,7 @@ object ExpireSnapshots {
         (deadFiles.size.toLong, deadFiles.map(_._2).sum)
       } else {
         val deleted = deleteListed(t.spark, t.root, deadFiles)
+        deleteEmptiedDirs(t.root, deadFiles.map(_._1))
         deadManifests.foreach(mf =>
           Files.deleteIfExists(MetaIO.metadataDir(t.root).resolve(mf)))
         deleted
@@ -212,14 +232,14 @@ object ExpireSnapshots {
           // min-age guard alone must not be their only protection
           // (orphanMinAgeMs=0 is a supported single-writer mode).
           val freshLive = listedPaths(t.root, t.meta.snapshots.flatMap(_.manifests).distinct)
-          orphans = deleteListed(t.spark, t.root,
-            onDisk.filterNot(freshLive.contains).map(_ -> 0L))._1
+          val swept = onDisk.filterNot(freshLive.contains)
+          orphans = deleteListed(t.spark, t.root, swept.map(_ -> 0L))._1
+          deleteEmptiedDirs(t.root, swept)
         }
       }
     }
 
-    graft.lineage.Metrics.recordJob(t.root, "expire",
-      (System.nanoTime() - jobT0) / 1000000, Map(
+    graft.lineage.Metrics.recordJob(t.root, "expire", jobT0, Map(
       "expired" -> (known -- retainSet).size.toString,
       "deleted-files" -> deletedFiles.toString,
       "deleted-bytes" -> deletedBytes.toString,

@@ -120,8 +120,7 @@ object Ingest {
     if (out.isEmpty) return Result(None, filesScanned, 0, 0, 0)
     val rows = out.map(_.rowCount).sum
     val snap = t.commit("append", out, Set.empty, Map("ingest-dir" -> dir))
-    graft.lineage.Metrics.recordJob(t.root, "ingest",
-      (System.nanoTime() - jobT0) / 1000000, Map(
+    graft.lineage.Metrics.recordJob(t.root, "ingest", jobT0, Map(
       "dir" -> dir, "files-scanned" -> filesScanned.toString,
       "files-written" -> out.size.toString,
       "skipped" -> (filesScanned - rows).toString,

@@ -74,12 +74,14 @@ object MergeInto {
     // per-row guess: a 200k-row source carrying 1 MB images would pass a
     // rows*256 estimate and then broadcast 200 GB. One aggregate action
     // returns rows + actual bytes/caption volume + the source's key range
-    // (for stats pruning below) together.
+    // (for stats pruning below) + the rows carrying a payload (only those
+    // can be inserts) together.
     val srcStats = src.agg(
       count(lit(1)).as("n"),
       coalesce(sum(length(col("src_bytes"))), lit(0L)).as("payload"),
       coalesce(sum(length(col("src_caption"))), lit(0L)).as("cap"),
-      min(col("image_id")).as("klo"), max(col("image_id")).as("khi")).head()
+      min(col("image_id")).as("klo"), max(col("image_id")).as("khi"),
+      count(col("src_bytes")).as("payloadRows")).head()
     val srcCount = srcStats.getLong(0)
     val estBytes = srcCount * 64L + srcStats.getLong(1) + srcStats.getLong(2)
     val useBroadcast = estBytes <= broadcastThresholdBytes
@@ -155,9 +157,11 @@ object MergeInto {
     // Written with the anti-join's natural distribution — NOT coalesce(1),
     // which would funnel a bulk-insert batch through a single task/file. AQE
     // partition coalescing keeps small batches to few files; empty
-    // partitions produce no files, and footerStats drops zero-row ones, so
-    // no pre-count action is needed (the write IS the emptiness check).
-    (affected, updatedFilesMeta, t.writeDataFiles(inserts))
+    // partitions produce no files, and footerStats drops zero-row ones. A
+    // source with no payload (caption-only) has nothing to insert and skips
+    // the write, which would leave an orphan zero-row file behind.
+    val insertFiles = if (srcStats.getLong(5) == 0) Nil else t.writeDataFiles(inserts)
+    (affected, updatedFilesMeta, insertFiles)
     } finally { keyScan.unpersist(); () }
     val insertedRows = insertFiles.map(_.rowCount).sum
 

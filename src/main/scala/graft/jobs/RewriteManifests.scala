@@ -71,8 +71,7 @@ object RewriteManifests {
       }
     }
     if (!result.skippedUnchanged)
-      graft.lineage.Metrics.recordJob(t.root, "rewrite-manifests",
-        (System.nanoTime() - jobT0) / 1000000, Map(
+      graft.lineage.Metrics.recordJob(t.root, "rewrite-manifests", jobT0, Map(
         "before" -> result.manifestsBefore.toString,
         "after" -> result.manifestsAfter.toString,
         "files" -> result.files.toString))

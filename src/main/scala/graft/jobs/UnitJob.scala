@@ -95,7 +95,7 @@ final class UnitJob(root: String, val jobId: String, startNs: Long) {
     val added = done.values.flatMap(_.filesOut).toSeq.sortBy(_.path)
     val snap = t.commit(operation, added, removed, summary)
     markCommitted(snap.snapshotId)
-    Metrics.recordJob(root, name, (System.nanoTime() - startNs) / 1000000, detail(added))
+    Metrics.recordJob(root, name, startNs, detail(added))
     (snap, added)
   }
 }

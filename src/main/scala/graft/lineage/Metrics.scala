@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -39,6 +41,16 @@ object Metrics {
       bytesWritten: Option[Long],
       detail: Map[String, String])
 
+  /** A table read done on the driver (`GraftTable.scanWhere` below its
+    * cutoff): the absolute table root and the bytes of the files read. */
+  case class DriverRead(root: String, bytes: Long)
+
+  /** Tags the `LocalRelation` of a driver read, which names no file path. */
+  val DriverReadTag: TreeNodeTag[DriverRead] = TreeNodeTag[DriverRead]("graft.driverRead")
+
+  private def driverReads(qe: QueryExecution): Seq[DriverRead] =
+    qe.analyzed.collect { case lr: LocalRelation => lr.getTagValue(DriverReadTag) }.flatten
+
   def dir(root: String): Path = Paths.get(root, "lineage", "_metrics")
 
   private def file(root: String): Path =
@@ -54,11 +66,13 @@ object Metrics {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  /** One summary row per finished maintenance job (compact/cluster/...). */
-  def recordJob(root: String, name: String, durationMs: Long,
+  /** One summary row per finished maintenance job (compact/cluster/...),
+    * timed from `startNs` (a `System.nanoTime()` reading) in whole
+    * milliseconds rounded up, so a job that ran never records 0 ms. */
+  def recordJob(root: String, name: String, startNs: Long,
       detail: Map[String, String] = Map.empty): Unit =
     append(root, QueryEvent(System.currentTimeMillis(), "job", name,
-      durationMs, None, None, None, detail))
+      (System.nanoTime() - startNs + 999999) / 1000000, None, None, None, detail))
 
   // One listener PER SESSION, shared by every installed table root, routing
   // each event only to the roots whose paths the plan actually read or
@@ -86,7 +100,8 @@ object Metrics {
 
   /** Absolute-path table roots whose data/metadata participate in `qe`:
     * read paths from the analyzed plan's file-source relations (pre-AQE, so
-    * reliable), write paths from the physical write command. */
+    * reliable) and driver-read relations, write paths from the physical
+    * write command. */
   private def touchedRoots(spark: SparkSession, qe: QueryExecution): Seq[String] = {
     val roots = sessionRoots.get(spark)
     if (roots == null || roots.isEmpty) return Nil
@@ -98,6 +113,7 @@ object Metrics {
             h.location.rootPaths.foreach(p => paths += p.toString)
           case _ => ()
         }
+      case lr: LocalRelation => lr.getTagValue(DriverReadTag).foreach(paths += _.root)
       case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
         paths += c.outputPath.toString
       case _ => ()
@@ -166,7 +182,9 @@ object Metrics {
             val ev = QueryEvent(System.currentTimeMillis(), "query", funcName,
               durationNs / 1000000,
               rows,
-              metricSum(qe, Set("bytesRead", "filesSize")),
+              // A driver read has no scan metric: its file bytes stand in.
+              (metricSum(qe, Set("bytesRead", "filesSize")) ++
+                driverReads(qe).map(_.bytes)).reduceOption(_ + _),
               metricSum(qe, Set("bytesWritten", "numOutputBytes")),
               Map.empty)
             targets.foreach(append(_, ev))

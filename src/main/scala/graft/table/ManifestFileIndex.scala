@@ -54,6 +54,6 @@ object ManifestFileIndex {
 
   /** `p` made absolute and qualified against the local file system, with no
     * file-system call: the same `file:/...` path `DataSource` derives. */
-  private def qualify(p: String): Path =
+  private[table] def qualify(p: String): Path =
     new Path(Paths.get(p).toAbsolutePath.toString).makeQualified(LocalFs, null)
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalacheck.{Gen, Prop, Test}
 
-import graft.jobs.{Compact, ExpireSnapshots, RewriteManifests}
+import graft.jobs.{Cluster, Compact, ExpireSnapshots, RewriteManifests}
 import graft.table.{DataFileMeta, GraftTable}
 
 /** Refcount-cascade fixtures (FIXTURES.md §2; reference behavior:
@@ -48,6 +48,19 @@ class ExpireSnapshotsSpec extends GraftSuite {
     }
     // The retained snapshot still reads perfectly.
     assert(t.scan().count() == TestFixtures.BaseRows + 50)
+  }
+
+  test("expire deletes the commit directories its dead files leave without data") {
+    val t = TestFixtures.freshTable("expire-empty-dirs")
+    Compact.run(t, targetBytes = 4L * 1024 * 1024)
+    Cluster.run(t, "zorder", targetBytes = 256L * 1024)
+    ExpireSnapshots.run(t, retain = Seq(t.currentSnapshot.snapshotId), orphanMinAgeMs = 0L)
+    val dirs = graft.util.Fs.list(Paths.get(t.root, "data"))
+    assert(dirs.nonEmpty && dirs.forall(Files.isDirectory(_)))
+    val empty = dirs.filterNot(d =>
+      graft.util.Fs.list(d).exists(_.getFileName.toString.endsWith(".parquet")))
+    assert(empty.isEmpty, s"commit directories without a data file: $empty")
+    assert(t.scan().count() == TestFixtures.BaseRows)
   }
 
   test("expire refuses to drop the current snapshot") {

@@ -287,12 +287,14 @@ class IvfIndexSpec extends GraftSuite {
     assert(inPlan == union,
       s"InLong must plan the union of per-bucket files: $inPlan vs $union")
     assert(inPlan.size < t.currentFiles.size, "and still prune the third bucket")
-    // Plan-level: the probe DataFrame holds exactly one parquet scan node
-    // (nprobe branches used to union nprobe separate scans).
+    // Plan-level: the probe DataFrame holds exactly one scan node — a
+    // parquet scan, or the local scan of a read done on the driver (nprobe
+    // branches used to union nprobe separate scans).
     val probeDf = BuildIvf.probe(t, Array(7.0, 7.0, 0.0, 0.0), nprobe = 2,
       topK = 200)
     val scans = probeDf.queryExecution.sparkPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      case s: org.apache.spark.sql.execution.LocalTableScanExec => s
     }
     assert(scans.size == 1, s"probe must plan one scan, found ${scans.size}")
     // And the results are the same rows the per-bucket union produced.

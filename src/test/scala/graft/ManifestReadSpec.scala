@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.input_file_name
 
 import graft.jobs.Compact
-import graft.table.EqLong
+import graft.table.{EqLong, EqString, GraftTable}
 
 /** Table reads plan from manifest entries (`graft.table.ManifestFileIndex`):
   * no path listing or existence check at plan time, the same path strings a
@@ -18,13 +18,25 @@ class ManifestReadSpec extends GraftSuite {
   test("a point lookup over more than 32 files starts exactly one Spark job") {
     val t = TestFixtures.baseTable
     // A phash value some row holds; phash is spread over every file, so the
-    // lookup keeps more files than Spark's serial path-listing limit (32).
+    // lookup keeps more files than Spark's serial path-listing limit (32)
+    // and than the driver-read cutoff, so the read is distributed.
     val key = t.currentFiles.head.stats("phash").min.get.toLong
     val filters = Seq(EqLong("phash", key))
-    assert(t.planFiles(filters).size > 32)
+    assert(t.planFiles(filters).size > math.max(32, GraftTable.DriverReadMaxFiles))
     val (rows, jobs) = sparkJobsDuring(t.scanWhere(filters).collect())
     assert(rows.nonEmpty && rows.forall(_.getAs[Long]("phash") == key))
     assert(jobs.size == 1, s"expected one Spark job, got: $jobs")
+  }
+
+  test("a point lookup at or below the driver-read cutoff starts no Spark job") {
+    val t = TestFixtures.baseTable
+    val filters = Seq(EqString("image_id", "img-000000000007"))
+    val kept = t.planFiles(filters)
+    assert(kept.nonEmpty && kept.size <= GraftTable.DriverReadMaxFiles &&
+      kept.map(_.fileSizeBytes).sum <= GraftTable.DriverReadMaxBytes)
+    val (rows, jobs) = sparkJobsDuring(t.scanWhere(filters).collect())
+    assert(rows.map(_.getAs[String]("image_id")).toSeq == Seq("img-000000000007"))
+    assert(jobs.isEmpty, s"expected no Spark job, got: $jobs")
   }
 
   test("a data file deleted behind a retained snapshot fails that snapshot's scan") {

@@ -38,6 +38,26 @@ class MergeDedupSpec extends GraftSuite {
     assert(canon(t.scan().filter(col("image_id") === "img-000000000500")).nonEmpty)
   }
 
+  test("a caption-only merge writes no insert file under data/") {
+    import spark.implicits._
+    val t = TestFixtures.freshTable("merge-caption-only")
+    val dataDir = java.nio.file.Paths.get(t.root, "data")
+    def entries = graft.util.Fs.list(dataDir).map(_.getFileName.toString).toSet
+    val before = entries
+    // No key matches and no row carries bytes: nothing to rewrite or insert.
+    val none = MergeInto.run(t, Seq(("img-zzz-absent", "no payload")).toDF("image_id", "caption"))
+    assert(none.snapshot.isEmpty && none.insertedRows == 0)
+    assert(entries == before, s"added under data/: ${entries -- before}")
+    // One match: only the rewritten file's commit directory appears.
+    val one = MergeInto.run(t, Seq(("img-000000000003", "caption only"),
+      ("img-zzz-absent", "no payload")).toDF("image_id", "caption"))
+    assert(one.updatedFiles == 1 && one.insertedRows == 0)
+    val added = entries -- before
+    assert(added.size == 1, s"added under data/: $added")
+    assert(graft.util.Fs.list(dataDir.resolve(added.head))
+      .exists(_.getFileName.toString.endsWith(".parquet")))
+  }
+
   test("merge inserts unmatched source rows with computed w/h/phash") {
     import spark.implicits._
     val t = TestFixtures.freshTable("merge-inserts")
@@ -110,9 +130,14 @@ class MergeDedupSpec extends GraftSuite {
     }
     spark.listenerManager.register(listener)
     try {
+      // The matched payload row gives the source something it could
+      // insert, so the insert anti-join runs (a merge with no payload row
+      // skips it).
+      val png = ImageCodec.encodePng(ImageGen.drawBase(16, 16, new scala.util.Random(9)))
       val src = Seq(
-        ("img-000000000011", "one-scan caption"),
-        ("img-zzz-new-key", "insert probe")).toDF("image_id", "caption")
+        ("img-000000000011", "one-scan caption", null: Array[Byte]),
+        ("img-000000000012", null: String, png),
+        ("img-zzz-new-key", "insert probe", null: Array[Byte])).toDF("image_id", "caption", "bytes")
       val res = MergeInto.run(t, src)
       // Listener events are async on the bus; poll until they land.
       val deadline = System.currentTimeMillis() + 15000

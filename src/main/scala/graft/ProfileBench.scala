@@ -10,7 +10,7 @@ import graft.table.GraftTable
  * Fixed-cost profiler for the scaling protocol: one staged trial (same body
  * as [[ScalingBench]]) at a chosen parallelism, followed by a dump of the
  * job-level metrics rows — the breakdown of where the non-scaling driver
- * seconds go (wave exec vs footer stats vs commit vs lineage).
+ * seconds go (wave exec and write vs commit vs lineage).
  *
  *   sbt "runMain graft.ProfileBench <srcDir> <workDir> <cpus> [targetMB]"
  */

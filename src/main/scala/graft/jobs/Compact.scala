@@ -54,8 +54,9 @@ object Compact {
 
   /** Execute bins grouped into WAVES: each wave is ONE Spark job built as a
     * union of per-bin coalesce(1) children, so partition i of the wave reads
-    * exactly bin i's files and writes exactly one ~target-size output file
-    * (part-i, positionally mapped back to the bin for per-bin lineage).
+    * exactly bin i's files and writes exactly one ~target-size output file,
+    * mapped back to bin i by the partition index its task reports (per-bin
+    * lineage).
     * Rationale: one Spark job per bin has a serial scheduling floor
     * (measured ~30-50ms/job on the DAGScheduler event loop — dominates when
     * bins are small); one job per WAVE amortizes it while keeping bin-level
@@ -99,8 +100,8 @@ object Compact {
       // Each child plans from its bin's manifest entries: no file-system
       // call, so a wave of many small bins is cheap to build.
       val children = wave.map(b => t.readFiles(bins(b), sch).coalesce(1))
-      val out = t.writeDataFiles(children.reduce(_ unionAll _)) // sorted by path = part index order
-      wave.zip(out).map { case (b, f) => (bins(b).map(_.path), Seq(f)) }
+      val out = t.writePartitions(children.reduce(_ unionAll _)).toMap
+      wave.zipWithIndex.map { case (b, j) => (bins(b).map(_.path), out.get(j).toSeq) }
     }
     val (snap, added) = job.finish(t, bins.size, "compact", removed, Map(
       "job-id" -> job.jobId,

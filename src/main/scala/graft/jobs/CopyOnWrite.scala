@@ -50,8 +50,8 @@ final class CopyOnWrite(t: GraftTable, job: String) {
   }
 
   /** Read `affected`, transform their rows with `rows`, and write the result
-    * in the table's layout. Zero-row output files are dropped by the write's
-    * footer stats, so a rewrite that keeps no row needs no emptiness check.
+    * in the table's layout. A write task with no rows writes no file, so a
+    * rewrite that keeps no row needs no emptiness check.
     * `partitionMayChange`: the job can rewrite the partition column (see
     * [[Cluster.shapeForCurve]]). */
   def rewrite(affected: Seq[DataFileMeta], targetBytes: Long,

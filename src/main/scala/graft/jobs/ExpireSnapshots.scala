@@ -83,22 +83,16 @@ object ExpireSnapshots {
   }
 
   /** Delete each commit directory holding one of `paths` (root-relative
-    * data files just deleted) once only Spark's `_SUCCESS` marker and `.crc`
-    * checksums remain in it. A commit directory belongs to one write, so no
-    * writer can still be adding to one whose data files are dead. */
+    * data files just deleted) once no `.parquet` file is left in it, with
+    * whatever else remains (markers of older writers). A commit directory
+    * belongs to one write, so no writer can still be adding to one whose
+    * data files are dead. */
   private def deleteEmptiedDirs(root: String, paths: Seq[String]): Unit = {
     val dataDir = Paths.get(root, "data").toAbsolutePath
     paths.map(p => Paths.get(root, p).toAbsolutePath.getParent).distinct
-      .filter(_.getParent == dataDir).foreach { d =>
-        val left = Fs.list(d)
-        if (left.forall { e =>
-              val n = e.getFileName.toString
-              n == "_SUCCESS" || n.endsWith(".crc")
-            }) {
-          left.foreach(Files.deleteIfExists(_))
-          Files.deleteIfExists(d)
-        }
-      }
+      .filter(_.getParent == dataDir)
+      .filterNot(Fs.list(_).exists(_.getFileName.toString.endsWith(".parquet")))
+      .foreach(Fs.deleteRecursively)
   }
 
   /** Retain set from a declarative policy (Iceberg's retain-last /

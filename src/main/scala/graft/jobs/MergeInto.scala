@@ -157,9 +157,9 @@ object MergeInto {
     // Written with the anti-join's natural distribution — NOT coalesce(1),
     // which would funnel a bulk-insert batch through a single task/file. AQE
     // partition coalescing keeps small batches to few files; empty
-    // partitions produce no files, and footerStats drops zero-row ones. A
-    // source with no payload (caption-only) has nothing to insert and skips
-    // the write, which would leave an orphan zero-row file behind.
+    // partitions produce no files. A source with no payload (caption-only)
+    // has nothing to insert and skips the write, and with it the anti-join
+    // job.
     val insertFiles = if (srcStats.getLong(5) == 0) Nil else t.writeDataFiles(inserts)
     (affected, updatedFilesMeta, insertFiles)
     } finally { keyScan.unpersist(); () }

@@ -100,8 +100,10 @@ object Metrics {
 
   /** Absolute-path table roots whose data/metadata participate in `qe`:
     * read paths from the analyzed plan's file-source relations (pre-AQE, so
-    * reliable) and driver-read relations, write paths from the physical
-    * write command. */
+    * reliable) and driver-read relations. A table write (the named
+    * `writeDataFiles` execution) is attributed by the table files its plan
+    * reads; one of rows from elsewhere leaves only its `write-data-files`
+    * job record. */
   private def touchedRoots(spark: SparkSession, qe: QueryExecution): Seq[String] = {
     val roots = sessionRoots.get(spark)
     if (roots == null || roots.isEmpty) return Nil
@@ -114,17 +116,6 @@ object Metrics {
           case _ => ()
         }
       case lr: LocalRelation => lr.getTagValue(DriverReadTag).foreach(paths += _.root)
-      case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
-        paths += c.outputPath.toString
-      case _ => ()
-    }
-    qe.executedPlan.foreach {
-      case w: org.apache.spark.sql.execution.command.DataWritingCommandExec =>
-        w.cmd match {
-          case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
-            paths += c.outputPath.toString
-          case _ => ()
-        }
       case _ => ()
     }
     import scala.jdk.CollectionConverters._

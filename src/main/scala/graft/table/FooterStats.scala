@@ -1,123 +1,64 @@
 package graft.table
 
-import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.conf.PlainParquetConfiguration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.io.LocalInputFile
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.types._
 
 /**
- * Per-file column stats straight from Parquet footers — no data scan, no
- * extra Spark job. This is how writer-side stats reach the manifests in real
- * table formats (the writer already computed them); the previous
- * implementation ran a groupBy(input_file_name) aggregation job per write,
- * which doubled the per-bin job count during compaction and dominated small
- * rewrites (measured: ~2x fewer Spark jobs after the switch).
+ * Per-file column stats from the footer the writer itself returns — no data
+ * scan, no extra Spark job, no footer re-read. This is how writer-side stats
+ * reach the manifests in real table formats.
  *
- * String maxima that hit the footer truncation length are DROPPED (the file
- * becomes unbounded above on that column), so pruning stays sound even on
- * truncated statistics. All string extrema comparisons here and downstream
- * ([[Utf8Ord]]) use unsigned UTF-8 byte order — Parquet's and Spark's own.
+ * Row groups merge through Parquet's own `Statistics.mergeStatistics`, which
+ * orders strings in unsigned byte order, as does every downstream comparison
+ * ([[Utf8Ord]]) — Parquet's and Spark's own order.
  */
 object FooterStats {
 
-  private val TruncationGuard = 4000 // bytes; parquet-mr may truncate beyond this
+  /** parquet-mr keeps no min/max on disk for a chunk whose min and max
+    * together reach this many bytes (`ParquetMetadataConverter`); such a
+    * column is left unbounded here too, which also keeps long strings out of
+    * the manifests. */
+  private val MaxStatsBytes = 4096
 
-  def read(absPath: String, schema: StructType): Option[DataFileMeta] = {
-    // Pure-NIO input file and a plain (non-Hadoop) configuration: a Hadoop
-    // `Configuration` parses core-default.xml again for every footer
-    // (measured 17.9 ms CPU per footer, 0.43 ms without one), and the
-    // default read options build one.
-    val p = java.nio.file.Paths.get(absPath)
-    val reader = ParquetFileReader.open(new LocalInputFile(p),
-      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks
-      var rows = 0L
-      val mins = scala.collection.mutable.Map[String, Any]()
-      val maxs = scala.collection.mutable.Map[String, Any]()
-      val nulls = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
-      // Once ANY row group lacks stats for a column, the column is unbounded
-      // for this whole file: a later row group's stats must not re-populate
-      // min/max (they would not cover the statless group's rows, and pruning
-      // on such bounds silently drops matching rows).
-      val unbounded = scala.collection.mutable.Set[String]()
-      val statCols = schema.fields.filterNot(_.dataType == BinaryType).map(_.name).toSet
-      val it = blocks.iterator()
-      while (it.hasNext) {
-        val b = it.next()
-        rows += b.getRowCount
-        val cit = b.getColumns.iterator()
-        while (cit.hasNext) {
-          val c = cit.next()
-          val name = c.getPath.toDotString
-          if (statCols.contains(name) && !unbounded.contains(name)) {
-            val st: org.apache.parquet.column.statistics.Statistics[_] =
-              c.getStatistics
-            if (st != null && !st.isEmpty) {
-              nulls(name) = nulls(name) + st.getNumNulls
-              if (st.hasNonNullValue) {
-                val tpe = c.getPrimitiveType.getPrimitiveTypeName
-                val mn: Any = st.genericGetMin
-                val mx: Any = st.genericGetMax
-                mins(name) = mins.get(name).map(combine(_, mn, tpe, min = true)).getOrElse(mn)
-                maxs(name) = maxs.get(name).map(combine(_, mx, tpe, min = false)).getOrElse(mx)
-              }
-            } else {
-              unbounded += name
-              mins.remove(name); maxs.remove(name); nulls.remove(name)
-            }
-          }
-        }
-      }
-      if (rows == 0) return None
-      val stats = statCols.map { c =>
-        if (unbounded.contains(c)) c -> ColStats(None, None, 0L)
-        else {
-          val mn = mins.get(c).map(render)
-          val mx = maxs.get(c).map(render).flatMap(dropIfTruncated)
-          c -> ColStats(mn, mx, nulls.getOrElse(c, 0L))
-        }
-      }.toMap
-      Some(DataFileMeta(path = absPath,
-        fileSizeBytes = java.nio.file.Files.size(p),
-        rowCount = rows, stats = stats))
-    } finally reader.close()
-  }
-
-  private def combine(a: Any, b: Any, t: PrimitiveTypeName, min: Boolean): Any = {
-    def pick[T](x: T, y: T)(implicit o: Ordering[T]): T =
-      if (min) o.min(x, y) else o.max(x, y)
-    (a, b) match {
-      case (x: java.lang.Integer, y: java.lang.Integer) => pick(x.intValue, y.intValue)
-      case (x: java.lang.Long, y: java.lang.Long) => pick(x.longValue, y.longValue)
-      case (x: java.lang.Double, y: java.lang.Double) => pick(x.doubleValue, y.doubleValue)
-      case (x: java.lang.Float, y: java.lang.Float) => pick(x.floatValue, y.floatValue)
-      case (x: Binary, y: Binary) =>
-        // Pick in unsigned UTF-8 byte order — the SAME ordering Parquet used
-        // for its per-block extrema and PruneFilter.mayMatch (via Utf8Ord)
-        // now uses for manifest comparisons, so the stack is sound for ALL
-        // of Unicode. (The earlier rendered-UTF-16 pick agreed only on BMP
-        // strings; supplementary-plane keys could be unsoundly pruned.)
-        if ((Utf8Ord.cmpBytes(x.getBytes, y.getBytes) <= 0) == min) x else y
-      case (x, _) => x
+  /** The metadata of the file at root-relative `path`, from the footer its
+    * writer returned (`ParquetWriter.getFooter`, whose stats are exact:
+    * parquet-mr truncates only what it writes to disk). Min/max cover the
+    * non-binary columns of `schema`. */
+  def of(path: String, fileSizeBytes: Long, footer: ParquetMetadata,
+      schema: StructType): DataFileMeta = {
+    val statCols = schema.fields.filterNot(_.dataType == BinaryType).map(_.name).toSet
+    // Per column, its row groups' stats merged; None once ANY row group
+    // lacks usable stats: a later group's stats must not re-populate
+    // min/max (they would not cover the statless group's rows, and pruning
+    // on such bounds silently drops matching rows).
+    val merged = scala.collection.mutable.Map[String, Option[Statistics[_]]]()
+    for (b <- footer.getBlocks.asScala; c <- b.getColumns.asScala) {
+      val name = c.getPath.toDotString
+      val st: Statistics[_] = c.getStatistics
+      if (statCols.contains(name) && !merged.get(name).contains(None))
+        merged(name) =
+          if (st == null || st.isEmpty || !st.isSmallerThan(MaxStatsBytes)) None
+          else Some(merged.get(name).flatten.fold[Statistics[_]](st.copy()) { m =>
+            m.mergeStatistics(st); m
+          })
     }
+    val stats = statCols.map { c => c -> (merged.get(c).flatten match {
+      case Some(s) if s.hasNonNullValue =>
+        ColStats(Some(render(s.genericGetMin)), Some(render(s.genericGetMax)), s.getNumNulls)
+      case Some(s) => ColStats(None, None, s.getNumNulls)
+      case None => ColStats(None, None, 0L)
+    })}.toMap
+    DataFileMeta(path = path, fileSizeBytes = fileSizeBytes,
+      rowCount = footer.getBlocks.asScala.map(_.getRowCount).sum, stats = stats)
   }
 
   private def render(v: Any): String = v match {
     case b: Binary => b.toStringUsingUTF8
     case other => other.toString
   }
-
-  /** A max that hit the footer truncation length is a PREFIX of the real
-    * maximum and therefore not an upper bound — drop it (unbounded above;
-    * PruneFilter treats one-sided stats as open on the missing side). The
-    * earlier widen-by-appending-U+FFFF was unsound in byte order, where
-    * supplementary-plane code points sort ABOVE U+FFFF. */
-  private def dropIfTruncated(s: String): Option[String] =
-    if (s.getBytes("UTF-8").length >= TruncationGuard) None else Some(s)
 }

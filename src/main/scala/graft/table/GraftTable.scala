@@ -5,16 +5,23 @@ import java.nio.file.{Files, Paths}
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /**
  * File-level prune predicates evaluated against per-file min/max stats in the
@@ -55,21 +62,9 @@ object Utf8Ord {
   // UTF8String.fromString does, so this stays sign-identical to Spark even
   // on malformed input — worth two small allocations on the (metadata-only)
   // planning path. Utf8OrdSpec pins the agreement with 20k sampled pairs.
-  def cmp(a: String, b: String): Int =
-    cmpBytes(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  /** Unsigned lexicographic byte comparison — also the cross-block pick
-    * order for Parquet footer extrema (FooterStats). */
-  def cmpBytes(x: Array[Byte], y: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
+  def cmp(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
+    a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+    b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   def leq(a: String, b: String): Boolean = cmp(a, b) <= 0
   def geq(a: String, b: String): Boolean = cmp(a, b) >= 0
 }
@@ -90,8 +85,8 @@ object PruneFilter {
 
   /** Can `file` possibly contain rows matching `f`? Missing stats => keep.
     * String bounds compare in unsigned UTF-8 byte order ([[Utf8Ord]]) —
-    * the same ordering that produced both sides. One-sided stats (the
-    * truncation guard drops an untrustworthy max) leave the missing side
+    * the same ordering that produced both sides. One-sided stats (older
+    * manifests dropped an untrustworthy truncated max) leave the missing side
     * unbounded rather than falling through to the all-null check. */
   def mayMatch(file: DataFileMeta, f: PruneFilter): Boolean = {
     val st = file.stats.get(f.col)
@@ -296,47 +291,49 @@ class GraftTable(val root: String, val spark: SparkSession) {
 
   // --------------------------------------------------------------- writes
 
-  /** Write `df` as new data files (one commit dir), collect per-file stats,
-    * and return the new files' metadata. Does NOT commit a snapshot. */
+  /** Write `df` as new data files (one commit dir) and return their
+    * metadata. Does NOT commit a snapshot. */
   def writeDataFiles(df: DataFrame, targetFiles: Option[Int] = None,
       sortWithin: Seq[String] = Nil): Seq[DataFileMeta] = {
-    val commitId = UUID.randomUUID().toString.take(12)
-    val rel = s"data/$commitId"
-    val dir = s"$root/$rel"
     val shaped0 = targetFiles.map(n => df.repartition(n)).getOrElse(df)
     val shaped = if (sortWithin.nonEmpty)
       shaped0.sortWithinPartitions(sortWithin.map(col): _*) else shaped0
-    val t0 = System.nanoTime()
-    shaped.write.mode("errorifexists").parquet(dir)
-    val t1 = System.nanoTime()
-    val out = footerStats(rel)
-    graft.lineage.Metrics.recordJob(root, "write-data-files", t0, Map(
-        "write-ms" -> ((t1 - t0) / 1000000).toString,
-        "stats-ms" -> ((System.nanoTime() - t1) / 1000000).toString,
-        "files" -> out.size.toString))
-    out
+    writePartitions(shaped).map(_._2)
   }
 
-  /** Per-file stats from Parquet footers (no data re-scan, no extra Spark
-    * job — the writer already computed them). Zero-row files are dropped.
-    * Footers are independent; read them on a bounded parallel pool. */
-  def footerStats(relDir: String): Seq[DataFileMeta] = {
-    val dir = Paths.get(s"$root/$relDir")
+  /** The table's one writer of data files: each non-empty partition of `df`
+    * is written by its task straight to its final path
+    * `data/<commit>/part-<index>-<uuid>.parquet` (attempt-unique) and comes
+    * back as (partition index, metadata), in index order, with stats from
+    * the writer's own footer. No staging, rename, marker or listing: a file
+    * becomes visible only when a commit names it, and a failed attempt
+    * leaves an unreferenced file for the orphan sweep. The write runs as a
+    * NAMED SQL execution: its end event completes `Observation`s on `df`
+    * and feeds `lineage/_metrics`. */
+  private[graft] def writePartitions(df: DataFrame): Seq[(Int, DataFileMeta)] = {
+    val t0 = System.nanoTime()
+    val rel = s"data/${UUID.randomUUID().toString.take(12)}"
+    // Executors may run in other working directories: tasks get the
+    // absolute root.
+    val rootAbs = Paths.get(root).toAbsolutePath.toString
     val sch = schema
-    val rootAbs = Paths.get(root).toAbsolutePath
-    val paths = graft.util.Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, paths.size)))
-    try {
-      val futures = paths.map { p =>
-        pool.submit(new java.util.concurrent.Callable[Option[DataFileMeta]] {
-          def call(): Option[DataFileMeta] =
-            FooterStats.read(p.toAbsolutePath.toString, sch)
-              .map(m => m.copy(path = rootAbs.relativize(p.toAbsolutePath).toString))
-        })
-      }
-      futures.flatMap(_.get()).sortBy(_.path)
-    } finally pool.shutdown()
+    // Spark's own Parquet write settings (codec, row metadata, encodings),
+    // prepared once on the driver.
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, df.schema)
+    val conf = new SerializableConfiguration(job.getConfiguration)
+    val qe = df.queryExecution
+    val out = SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
+      qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
+        if (!rows.hasNext) Iterator.empty
+        else Iterator(i -> writeFile(rootAbs,
+          f"$rel/part-$i%05d-${UUID.randomUUID()}.parquet", conf.value, rows, sch))
+      }.collect().toSeq
+    }
+    graft.lineage.Metrics.recordJob(root, "write-data-files", t0, Map(
+        "write-ms" -> ((System.nanoTime() - t0) / 1000000).toString,
+        "files" -> out.size.toString))
+    out
   }
 
   /** Per-file stats of `files` in one distributed pass (the reference the
@@ -494,6 +491,36 @@ object GraftTable {
   def load(root: String, spark: SparkSession): GraftTable = {
     require(MetaIO.currentVersion(root).isDefined, s"no table at $root")
     new GraftTable(root, spark)
+  }
+
+  /** Parquet writer of Spark rows through Spark's `ParquetWriteSupport`. */
+  private class RowWriterBuilder(file: LocalOutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
+  }
+
+  /** Write `rows` to `<rootAbs>/<rel>` with the settings in `conf` (as
+    * prepared by `ParquetFileFormat.prepareWrite`) and return the file's
+    * metadata. A failed write deletes its partial file. */
+  private def writeFile(rootAbs: String, rel: String, conf: Configuration,
+      rows: Iterator[InternalRow], sch: StructType): DataFileMeta = {
+    val p = Paths.get(rootAbs, rel)
+    Files.createDirectories(p.getParent)
+    val w = new RowWriterBuilder(new LocalOutputFile(p)).withConf(conf)
+      .withCompressionCodec(ParquetOutputFormat.getCompression(conf))
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(ParquetOutputFormat.getPageSize(conf))
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+      .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+      .build()
+    try { rows.foreach(w.write); w.close() }
+    catch { case e: Throwable =>
+      scala.util.Try(w.close()); Files.deleteIfExists(p); throw e
+    }
+    FooterStats.of(rel, Files.size(p), w.getFooter, sch)
   }
 
   /** Append rows as a new snapshot. */

@@ -13,7 +13,8 @@ import graft.util.Fs
  *
  * Layout under the table root:
  * {{{
- *   data/<commit-uuid>/part-*.parquet      immutable data files
+ *   data/<commit>/part-<i>-<uuid>.parquet  immutable data files, one per write task
+ *                                          (final path, no staging or markers)
  *   metadata/v<N>.metadata.json            table metadata versions (CAS via CREATE_NEW)
  *   metadata/manifest-<uuid>.json          immutable manifest files (shared across snapshots)
  *   metadata/version-hint.text             latest committed version (atomic rename)

@@ -54,6 +54,13 @@ class ExpireSnapshotsSpec extends GraftSuite {
     val t = TestFixtures.freshTable("expire-empty-dirs")
     Compact.run(t, targetBytes = 4L * 1024 * 1024)
     Cluster.run(t, "zorder", targetBytes = 256L * 1024)
+    // Leftovers of Spark's file-commit protocol, as in directories written
+    // by older versions: they go with the directory.
+    graft.util.Fs.list(Paths.get(t.root, "data")).foreach { d =>
+      Files.createDirectories(d.resolve("_temporary/0"))
+      Files.write(d.resolve("_SUCCESS"), Array.emptyByteArray)
+      Files.write(d.resolve(".part-00000.parquet.crc"), Array[Byte](1))
+    }
     ExpireSnapshots.run(t, retain = Seq(t.currentSnapshot.snapshotId), orphanMinAgeMs = 0L)
     val dirs = graft.util.Fs.list(Paths.get(t.root, "data"))
     assert(dirs.nonEmpty && dirs.forall(Files.isDirectory(_)))

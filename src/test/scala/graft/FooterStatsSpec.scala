@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
 
-import graft.table.GraftTable
+import graft.table.{ColStats, GraftTable, PruneFilter, EqString}
 
-/** Manifest stats come from Parquet footers ([[graft.table.FooterStats]]);
-  * the distributed `collectStats` aggregation is their reference. */
+/** Manifest stats come from the footer each write task's Parquet writer
+  * returns ([[graft.table.FooterStats]]); the distributed `collectStats`
+  * aggregation is their reference. */
 class FooterStatsSpec extends GraftSuite {
 
   test("footer stats equal the distributed stats pass: rows, sizes, min/max/nullCount") {
@@ -27,10 +25,23 @@ class FooterStatsSpec extends GraftSuite {
     // Partition 0 (rows 0-19) writes the all-null note file.
     val written = t.writeDataFiles(df)
     assert(written.size == 3)
-    val footer = t.footerStats(Paths.get(written.head.path).getParent.toString)
-    val distributed = t.collectStats(written)
-    assert(footer.map(_.rowCount).sum == rows.size)
-    assert(footer.exists(_.stats("note") == graft.table.ColStats(None, None, 20L)))
-    assert(footer == distributed)
+    assert(written.map(_.rowCount).sum == rows.size)
+    assert(written.exists(_.stats("note") == ColStats(None, None, 20L)))
+    assert(written.exists(_.stats("note").max.contains("😀")))
+    assert(written == t.collectStats(written))
+  }
+
+  test("a string column whose extrema reach 4 KiB carries no bounds, so lookups keep its file") {
+    val root = TestFixtures.workRoot.resolve("footer-stats-long").toString
+    val t = GraftTable.create(root, spark, schemaDdl = "id STRING, note STRING")
+    val long = "x" * 5000
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row("a", long), Row("b", "short")), 1), t.schema)
+    val Seq(f) = t.writeDataFiles(df)
+    assert(f.stats("note") == ColStats(None, None, 0L))
+    assert(f.stats("id") == ColStats(Some("a"), Some("b"), 0L))
+    assert(PruneFilter.mayMatch(f, EqString("note", long)))
+    t.commit("append", Seq(f), Set.empty)
+    assert(t.scanWhere(Seq(EqString("note", long))).count() == 1)
   }
 }

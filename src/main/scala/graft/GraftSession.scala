@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Canonical SparkSession config for the engine: AQE with skew-join
@@ -14,9 +15,14 @@ import org.apache.spark.sql.SparkSession
   * false default was the prime suspect for round 3's unexplained 2.8x
   * q18_minhash_bands regression. */
 object GraftSession {
+  /** The configured master, if any: spark-submit passes `--master` to the
+    * driver as the system property `spark.master`, which a builder option
+    * would override. Without one, sessions are `local[cores]`. */
+  def configuredMaster: Option[String] = new SparkConf().getOption("spark.master")
+
   def builder(cores: Int, shuffleCompress: Boolean = false): SparkSession.Builder =
     SparkSession.builder()
-      .master(s"local[$cores]")
+      .master(configuredMaster.getOrElse(s"local[$cores]"))
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")

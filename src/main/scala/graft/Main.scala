@@ -14,11 +14,11 @@ import graft.table._
  *   spark-submit --class graft.Main flowragspark.jar <verb> --root DIR [args]
  */
 object Main {
-  private def arg(args: Array[String], name: String): Option[String] = {
+  private[graft] def arg(args: Array[String], name: String): Option[String] = {
     val i = args.indexOf(s"--$name")
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
-  private def req(args: Array[String], name: String): String =
+  private[graft] def req(args: Array[String], name: String): String =
     arg(args, name).getOrElse(sys.error(s"missing --$name"))
 
   def main(argv: Array[String]): Unit = {

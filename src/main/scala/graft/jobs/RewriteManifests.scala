@@ -19,11 +19,9 @@ object RewriteManifests {
       skippedUnchanged: Boolean,
       manifestsBefore: Int,
       manifestsAfter: Int,
-      files: Int,
-      statsRecomputed: Int)
+      files: Int)
 
-  def run(t: GraftTable, targetFilesPerManifest: Int = 1000,
-      recomputeStats: Boolean = false): Result = {
+  def run(t: GraftTable, targetFilesPerManifest: Int = 1000): Result = {
     val jobT0 = System.nanoTime()
     // The whole derive-and-commit is retried from a FRESH base on CAS loss:
     // committing manifests built from a stale file set would silently drop
@@ -33,24 +31,15 @@ object RewriteManifests {
     var result: Result = null
     MetaIO.casRetry(t.root, "rewrite-manifests") { (_, m) =>
       val base = m.currentSnapshot.get
-      val files0 = t.snapshotFiles(base)
+      val files = t.snapshotFiles(base)
       val before = base.manifests.size
 
       // Skip-unchanged gate: the current snapshot is already this job's
       // output (a snapshot's manifest list never changes after commit).
       if (base.operation == "rewrite-manifests") {
-        result = Result(None, skippedUnchanged = true, before, before, files0.size, 0)
+        result = Result(None, skippedUnchanged = true, before, before, files.size)
         None
       } else {
-        // Optionally recompute stats by re-scanning stats columns (used when
-        // files were produced by a writer without stats).
-        var recomputed = 0
-        val files =
-          if (recomputeStats) {
-            val fresh = t.collectStats(files0).map(f => f.path -> f).toMap
-            files0.map { f => fresh.get(f.path).map { nf => recomputed += 1; nf }.getOrElse(f) }
-          } else files0
-
         // Partitioned tables: group by partition value FIRST (one manifest
         // chain per value, so manifest-level partition pruning survives the
         // rewrite), then phash-sort + size-group within each partition.
@@ -66,7 +55,7 @@ object RewriteManifests {
           "manifests-before" -> before.toString,
           "manifests-after" -> manifests.size.toString))
         result = Result(nm.currentSnapshot, skippedUnchanged = false, before,
-          manifests.size, files.size, recomputed)
+          manifests.size, files.size)
         Some(nm)
       }
     }

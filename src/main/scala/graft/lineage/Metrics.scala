@@ -48,6 +48,11 @@ object Metrics {
   /** Tags the `LocalRelation` of a driver read, which names no file path. */
   val DriverReadTag: TreeNodeTag[DriverRead] = TreeNodeTag[DriverRead]("graft.driverRead")
 
+  /** Tags the executed plan of a `GraftTable.writeDataFiles` execution with
+    * the absolute root of the table it writes: rows from outside the table
+    * name none of its paths. */
+  val WriteTag: TreeNodeTag[String] = TreeNodeTag[String]("graft.write")
+
   private def driverReads(qe: QueryExecution): Seq[DriverRead] =
     qe.analyzed.collect { case lr: LocalRelation => lr.getTagValue(DriverReadTag) }.flatten
 
@@ -100,10 +105,8 @@ object Metrics {
 
   /** Absolute-path table roots whose data/metadata participate in `qe`:
     * read paths from the analyzed plan's file-source relations (pre-AQE, so
-    * reliable) and driver-read relations. A table write (the named
-    * `writeDataFiles` execution) is attributed by the table files its plan
-    * reads; one of rows from elsewhere leaves only its `write-data-files`
-    * job record. */
+    * reliable) and driver-read relations, and the table a `writeDataFiles`
+    * execution writes. */
   private def touchedRoots(spark: SparkSession, qe: QueryExecution): Seq[String] = {
     val roots = sessionRoots.get(spark)
     if (roots == null || roots.isEmpty) return Nil
@@ -118,6 +121,8 @@ object Metrics {
       case lr: LocalRelation => lr.getTagValue(DriverReadTag).foreach(paths += _.root)
       case _ => ()
     }
+    // A query that failed in planning has no executed plan to read.
+    scala.util.Try(qe.executedPlan.getTagValue(WriteTag)).foreach(_.foreach(paths += _))
     import scala.jdk.CollectionConverters._
     // Match on a path-COMPONENT boundary after URI normalization: a plain
     // substring test attributed '/w/tbl2' events to a sibling root '/w/tbl'.

@@ -293,13 +293,8 @@ class GraftTable(val root: String, val spark: SparkSession) {
 
   /** Write `df` as new data files (one commit dir) and return their
     * metadata. Does NOT commit a snapshot. */
-  def writeDataFiles(df: DataFrame, targetFiles: Option[Int] = None,
-      sortWithin: Seq[String] = Nil): Seq[DataFileMeta] = {
-    val shaped0 = targetFiles.map(n => df.repartition(n)).getOrElse(df)
-    val shaped = if (sortWithin.nonEmpty)
-      shaped0.sortWithinPartitions(sortWithin.map(col): _*) else shaped0
-    writePartitions(shaped).map(_._2)
-  }
+  def writeDataFiles(df: DataFrame, targetFiles: Option[Int] = None): Seq[DataFileMeta] =
+    writePartitions(targetFiles.map(n => df.repartition(n)).getOrElse(df)).map(_._2)
 
   /** The table's one writer of data files: each non-empty partition of `df`
     * is written by its task straight to its final path
@@ -309,7 +304,8 @@ class GraftTable(val root: String, val spark: SparkSession) {
     * becomes visible only when a commit names it, and a failed attempt
     * leaves an unreferenced file for the orphan sweep. The write runs as a
     * NAMED SQL execution: its end event completes `Observation`s on `df`
-    * and feeds `lineage/_metrics`. */
+    * and, tagged with the table, leaves one `writeDataFiles` query event in
+    * its `lineage/_metrics`. */
   private[graft] def writePartitions(df: DataFrame): Seq[(Int, DataFileMeta)] = {
     val t0 = System.nanoTime()
     val rel = s"data/${UUID.randomUUID().toString.take(12)}"
@@ -323,6 +319,7 @@ class GraftTable(val root: String, val spark: SparkSession) {
     new ParquetFileFormat().prepareWrite(spark, job, Map.empty, df.schema)
     val conf = new SerializableConfiguration(job.getConfiguration)
     val qe = df.queryExecution
+    qe.executedPlan.setTagValue(graft.lineage.Metrics.WriteTag, rootAbs)
     val out = SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
       qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
         if (!rows.hasNext) Iterator.empty

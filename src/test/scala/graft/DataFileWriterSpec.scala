@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 
 import graft.images.ImageGen
 import graft.jobs.ExpireSnapshots
+import graft.lineage.Metrics
 import graft.table.GraftTable
 import graft.util.Fs
 
@@ -58,6 +59,17 @@ class DataFileWriterSpec extends GraftSuite {
     assert(names == Seq(Paths.get(f.path).getFileName.toString),
       s"commit directory holds $names")
     assert(!names.exists(n => n == "_SUCCESS" || n == "_temporary" || n.endsWith(".crc")))
+  }
+
+  test("an append of generated rows leaves one writeDataFiles query event, in its own table only") {
+    val a = GraftTable.create(TestFixtures.workRoot.resolve("writer-event-a").toString, spark)
+    val b = GraftTable.create(TestFixtures.workRoot.resolve("writer-event-b").toString, spark)
+    // The helper's marker job flushes the listener queue after the append.
+    sparkJobsDuring(GraftTable.append(a, ImageGen.df(spark, 6, seed = 6L, partitions = 2)))
+    def writes(t: GraftTable) =
+      Metrics.events(t.root).filter(e => e.kind == "query" && e.name == "writeDataFiles")
+    assert(writes(a).size == 1, s"table a: ${Metrics.events(a.root).map(_.name)}")
+    assert(writes(b).isEmpty)
   }
 
   test("parquet.block.size splits a file into row groups whose stats merge like the distributed pass") {

@@ -20,6 +20,22 @@ object GraftSession {
     * would override. Without one, sessions are `local[cores]`. */
   def configuredMaster: Option[String] = new SparkConf().getOption("spark.master")
 
+  private val Local = """local(?:\[\s*(\d+|\*)\s*(?:,\s*\d+\s*)?\])?""".r
+  private val LocalCluster = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*\d+\s*\]""".r
+
+  /** The cores a master runs tasks on: 1 for `local`, n for `local[n]` or
+    * `local[n,f]` (the machine's for `*`), n*c for `local-cluster[n,c,m]`. */
+  def masterCores(master: String): Int = master match {
+    case Local(null) => 1
+    case Local("*") => Runtime.getRuntime.availableProcessors()
+    case Local(n) => n.toInt
+    case LocalCluster(n, c) => n.toInt * c.toInt
+    case _ => sys.error(s"no core count in master $master: use local[n] or local-cluster[n,c,m]")
+  }
+
+  /** The cores of the configured master, else `unconfigured`. */
+  def cores(unconfigured: => Int): Int = configuredMaster.fold(unconfigured)(masterCores)
+
   def builder(cores: Int, shuffleCompress: Boolean = false): SparkSession.Builder =
     SparkSession.builder()
       .master(configuredMaster.getOrElse(s"local[$cores]"))

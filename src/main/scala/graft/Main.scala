@@ -31,7 +31,7 @@ object Main {
     val args = argv.tail
     val spark: SparkSession =
       if (sys.env.contains("SPARK_GRAFT_CPUS") || SparkSession.getActiveSession.isEmpty)
-        GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+        GraftSession.get(GraftSession.cores(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt))
       else SparkSession.active
     try {
       val root = req(args, "root")

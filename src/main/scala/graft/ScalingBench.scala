@@ -96,10 +96,7 @@ object ScalingBench {
     }
 
     def trial(spark: SparkSession, root: String, cores: Int, tr: Trial): Unit = {
-      // Stage: each fixture file becomes one tiny table file.
-      val t = GraftTable.create(root, spark)
-      val in = spark.read.schema(t.schema).parquet(s.src)
-      GraftTable.append(t, in.repartition(in.inputFiles.length))
+      val t = stage(spark, s.src, root)
       val files = t.currentFiles
       tr.counts ++= Seq("rows" -> files.map(_.rowCount).sum,
         "bytes_in" -> files.map(_.fileSizeBytes).sum, "files_in" -> files.size.toLong)
@@ -126,6 +123,18 @@ object ScalingBench {
             "cluster_sec" -> l.secs("cluster"), "total_sec" -> l.total) ++ rates(l, "")
       }
     }
+  }
+
+  /** A new table at `root` holding the images fixture at `src`, one table
+    * file per fixture file. Rows go to files by a hash of `image_id`, in
+    * `image_id` order, so the staged files are the same whatever the read
+    * splits (which follow the session's parallelism). */
+  private[graft] def stage(spark: SparkSession, src: String, root: String): GraftTable = {
+    val t = GraftTable.create(root, spark)
+    val in = spark.read.schema(t.schema).parquet(src)
+    GraftTable.append(t, in.repartition(in.inputFiles.length, col("image_id"))
+      .sortWithinPartitions("image_id"))
+    t
   }
 
   private final class Ivf(s: Settings) extends Workload {
@@ -170,9 +179,6 @@ object ScalingBench {
     }
   }
 
-  private val LocalCluster = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*\d+\s*\]""".r
-  private val Local = """local\[(\d+)\]""".r
-
   private def json(fields: Seq[(String, Any)]): String = fields.map {
     case (k, v: String) => s""""$k":"$v""""
     case (k, v: Double) => f""""$k":$v%.4f"""
@@ -197,11 +203,7 @@ object ScalingBench {
       case None => arg(argv, "cpus").getOrElse("2,8").split(',').map(_.trim.toInt).toSeq
       case Some(m) =>
         require(arg(argv, "cpus").isEmpty, "spark-submit's --master sets the topology, not --cpus")
-        Seq(m match {
-          case LocalCluster(n, c) => n.toInt * c.toInt
-          case Local(n) => n.toInt
-          case _ => sys.error(s"no core count in master $m: use local[n] or local-cluster[n,c,m]")
-        })
+        Seq(GraftSession.masterCores(m))
     }
     require(levels.size == (if (submitted.isEmpty) 2 else 1), s"levels: $levels")
 

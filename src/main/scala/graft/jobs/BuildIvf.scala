@@ -3,7 +3,10 @@ package graft.jobs
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.expr.{functions => gf}
 import graft.lineage.{Lineage, Metrics}
@@ -447,13 +450,36 @@ object BuildIvf {
       .sorted.take(math.max(1, nprobe)).map(_._2)
     val scanned = t.scanWhere(Seq(InLong("bucket", probes)))
     val qNorm = math.sqrt(query.map(x => x * x).sum)
-    scanned
+    val scored = scanned
       // One codegen'd pass per row (dot + norm together, expr.CosineSim) —
       // the serving hot loop; the composed zip_with/aggregate form paid
       // three interpreted higher-order traversals per scanned vector.
       .withColumn("cos", gf.cosine_sim(col("embedding"), query, qNorm))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(topK)
       .select(col("vec_id"), col("bucket"), col("cos"))
+    // Probed buckets read on the driver (small enough for scanWhere's
+    // driver-read cutoff) are scored by the optimizer, which folds the
+    // projection into the local rows with the same CosineSim kernel; their
+    // top k is taken here too, and no Spark job runs.
+    scored.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Bridge.ofRows(t.spark, topOnDriver(l, topK,
+        scanned.queryExecution.analyzed.collectFirst {
+          case r: LocalRelation => r.getTagValue(Metrics.DriverReadTag)
+        }.flatten))
+      case _ => scored.orderBy(col("cos").desc, col("vec_id").asc).limit(topK)
+    }
+  }
+
+  /** The first `topK` rows of scored `l` in the distributed probe's order,
+    * `cos DESC, vec_id ASC`, compared by Spark's own row ordering (NaN
+    * above every number, nulls last), as a local relation that carries the
+    * driver read's metrics tag, `read`. */
+  private def topOnDriver(l: LocalRelation, topK: Int,
+      read: Option[Metrics.DriverRead]): LocalRelation = {
+    val a = l.output.map(x => x.name -> x).toMap
+    val ord = RowOrdering.create(
+      Seq(SortOrder(a("cos"), Descending), SortOrder(a("vec_id"), Ascending)), l.output)
+    val top = l.copy(data = l.data.sorted(ord).take(topK))
+    read.foreach(top.setTagValue(Metrics.DriverReadTag, _))
+    top
   }
 }

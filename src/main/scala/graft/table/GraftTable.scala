@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.Job
 import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
@@ -313,11 +315,7 @@ class GraftTable(val root: String, val spark: SparkSession) {
     // absolute root.
     val rootAbs = Paths.get(root).toAbsolutePath.toString
     val sch = schema
-    // Spark's own Parquet write settings (codec, row metadata, encodings),
-    // prepared once on the driver.
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, df.schema)
-    val conf = new SerializableConfiguration(job.getConfiguration)
+    val conf = new SerializableConfiguration(writerConf(df.schema))
     val qe = df.queryExecution
     qe.executedPlan.setTagValue(graft.lineage.Metrics.WriteTag, rootAbs)
     val out = SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
@@ -331,6 +329,23 @@ class GraftTable(val root: String, val spark: SparkSession) {
         "write-ms" -> ((System.nanoTime() - t0) / 1000000).toString,
         "files" -> out.size.toString))
     out
+  }
+
+  /** The settings a write task gets: Spark's own Parquet write settings
+    * (codec, row metadata, encodings, sizes) for rows of `dataSchema`,
+    * prepared on the driver by `ParquetFileFormat.prepareWrite` from the
+    * session's current configuration, keeping only the keys under
+    * [[WriterKeyPrefixes]]. The full Hadoop configuration (over a thousand
+    * keys, ~115 KB serialized) would be serialized into every write's tasks
+    * and read back by each. */
+  private[graft] def writerConf(dataSchema: StructType): Configuration = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+    val prepared = job.getConfiguration
+    val conf = new Configuration(false)
+    prepared.asScala.map(_.getKey).filter(k => WriterKeyPrefixes.exists(k.startsWith))
+      .foreach(k => conf.set(k, prepared.get(k)))
+    conf
   }
 
   /** Per-file stats of `files` in one distributed pass (the reference the
@@ -448,6 +463,12 @@ object GraftTable {
     * on 4 vCPUs: ~60 files of 10 KB, ~6.5 MB in 4 files (CHANGES.md). */
   val DriverReadMaxFiles = 48
   val DriverReadMaxBytes: Long = 6L * 1024 * 1024
+
+  /** Key prefixes of every setting the Parquet writer reads: parquet-mr's
+    * own (`parquet.*`) and those of Spark's `ParquetWriteSupport`
+    * (`spark.sql.parquet.*` and the `org.apache.spark.sql.parquet.*` row
+    * schema). */
+  val WriterKeyPrefixes: Seq[String] = Seq("parquet.", "spark.", "org.apache.spark.")
 
   /** The engine's fixed row schema (BASELINE.json input_hint). */
   val ImageSchemaDdl: String =

@@ -9,6 +9,7 @@ import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.functions._
 
 import graft.images.ImageGen
@@ -49,6 +50,51 @@ class DataFileWriterSpec extends GraftSuite {
     val meta = ours.getFileMetaData.getKeyValueMetaData.asScala
     assert(meta.get(key).exists(_.nonEmpty))
     assert(meta.get(key) == theirs.getFileMetaData.getKeyValueMetaData.asScala.get(key))
+  }
+
+  test("non-default session write settings reach the file as they reach Spark's own write") {
+    val settings = Seq(
+      "spark.sql.parquet.compression.codec" -> "snappy",
+      "spark.sql.parquet.writeLegacyFormat" -> "true",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "parquet.page.size" -> "2048",
+      "parquet.enable.dictionary" -> "false",
+      "parquet.writer.version" -> "v2")
+    val t = GraftTable.create(TestFixtures.workRoot.resolve("writer-settings").toString, spark,
+      schemaDdl = "id BIGINT, ts TIMESTAMP, d DECIMAL(9,2), tags ARRAY<STRING>, s STRING")
+    val df = spark.range(0, 400, 1, 1).select(col("id"),
+      timestamp_seconds(col("id") * 3600).as("ts"),
+      (col("id") / 7).cast("decimal(9,2)").as("d"),
+      array(lit("a"), (col("id") % 5).cast("string")).as("tags"),
+      concat(lit("row-"), col("id").cast("string")).as("s"))
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (f, shipped) = try {
+      val Seq(f) = t.writeDataFiles(df)
+      val ref = TestFixtures.workRoot.resolve("writer-settings-ref").toString
+      df.write.parquet(ref)
+      (f, t.writerConf(df.schema))
+    } finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+    val Seq(refFile) = Fs.listParquet(TestFixtures.workRoot.resolve("writer-settings-ref").toString)
+    val (ours, theirs) = (footer(s"${t.root}/${f.path}"), footer(refFile))
+    assert(ours.getFileMetaData.getSchema == theirs.getFileMetaData.getSchema)
+    def chunks(m: ParquetMetadata) = m.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      .map(c => (c.getPath.toDotString, c.getCodec, c.getEncodings.asScala.toSet))
+    assert(chunks(ours) == chunks(theirs))
+    // The settings took effect: they are not both sides' defaults.
+    assert(chunks(ours).forall(_._2 == CompressionCodecName.SNAPPY), chunks(ours))
+    assert(!chunks(ours).exists(_._3.exists(_.usesDictionary)), chunks(ours))
+    val ts = ours.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType
+    assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64, ts)
+    val key = "org.apache.spark.sql.parquet.row.metadata"
+    assert(ours.getFileMetaData.getKeyValueMetaData.asScala.get(key) ==
+      theirs.getFileMetaData.getKeyValueMetaData.asScala.get(key))
+    // A task gets only the writer's settings, not the session's whole
+    // Hadoop configuration.
+    val keys = shipped.asScala.map(_.getKey).toSeq
+    assert(keys.nonEmpty && keys.forall(k => GraftTable.WriterKeyPrefixes.exists(k.startsWith)),
+      keys.filterNot(k => GraftTable.WriterKeyPrefixes.exists(k.startsWith)))
+    assert(keys.size < spark.sessionState.newHadoopConf().size / 10, keys.size)
+    assert(shipped.get("parquet.writer.version") == "v2")
   }
 
   test("a three-row write leaves one parquet file and no marker, staging or checksum file") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.expr.{functions => gf}
 import graft.jobs.BuildIvf
 import graft.operators.KMeans
 
@@ -304,5 +305,29 @@ class IvfIndexSpec extends GraftSuite {
         .select("vec_id", "bucket").collect()
         .map(r => (r.getLong(0), r.getLong(1)))).toSet
     assert(got == ref, "single-scan probe rows must equal the per-bucket union")
+  }
+
+  test("probe: the driver top-k equals the distributed order and limit, ties and NaN included, in no Spark job") {
+    val root = TestFixtures.workRoot.resolve("ivf-probe-driver").toString
+    val base = fixture(2)
+    // Every vector twice, under a second id: equal cos, ordered by vec_id.
+    val df = base.union(base.select((col("vec_id") + 1000).as("vec_id"), col("embedding")))
+    val t = BuildIvf.run(spark, df, "vec_id", "embedding", root,
+      initIds = Seq(1L, 61L, 121L)).table
+    // The zero-norm query scores every vector NaN, Spark's largest double.
+    val queries = Seq(Array(10.0, 0.0, 0.0, 0.0), Array(7.0, 7.0, 0.0, 0.0), Array(0.0, 0.0, 0.0, 0.0))
+    for (query <- queries; k <- Seq(1, 7, 500)) {
+      val (got, jobs) = sparkJobsDuring(BuildIvf.probe(t, query, nprobe = 3, topK = k).collect().toSeq)
+      assert(jobs.isEmpty, s"a driver-read probe starts no Spark job: $jobs")
+      val qNorm = math.sqrt(query.map(x => x * x).sum)
+      val want = t.readFiles(t.currentFiles)
+        .withColumn("cos", gf.cosine_sim(col("embedding"), query, qNorm))
+        .orderBy(col("cos").desc, col("vec_id").asc).limit(k)
+        .select(col("vec_id"), col("bucket"), col("cos")).collect().toSeq
+      assert(got.size == math.min(k, 360))
+      assert(got == want, s"query ${query.toSeq} k=$k")
+    }
+    val nan = BuildIvf.probe(t, queries(2), nprobe = 3, topK = 4).collect()
+    assert(nan.forall(_.getDouble(2).isNaN) && nan.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L))
   }
 }

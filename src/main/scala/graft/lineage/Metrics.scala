@@ -42,8 +42,20 @@ object Metrics {
       detail: Map[String, String])
 
   /** A table read done on the driver (`GraftTable.scanWhere` below its
-    * cutoff): the absolute table root and the bytes of the files read. */
-  case class DriverRead(root: String, bytes: Long)
+    * cutoff): the absolute table root, the bytes of the files read, and its
+    * pruning: the manifest entries considered, those the min/max stats kept,
+    * and how many of those the `image_id` sketch dropped. */
+  case class DriverRead(root: String, bytes: Long, filesConsidered: Int,
+      filesKeptByStats: Int, filesDroppedBySketch: Int)
+
+  /** A query event's `detail` for its driver reads: their pruning counts,
+    * summed (as their bytes are), or nothing if it made none. */
+  private def pruneDetail(reads: Seq[DriverRead]): Map[String, String] =
+    if (reads.isEmpty) Map.empty
+    else Map(
+      "files-considered" -> reads.map(_.filesConsidered).sum.toString,
+      "files-kept-by-stats" -> reads.map(_.filesKeptByStats).sum.toString,
+      "files-dropped-by-sketch" -> reads.map(_.filesDroppedBySketch).sum.toString)
 
   /** Tags the `LocalRelation` of a driver read, which names no file path. */
   val DriverReadTag: TreeNodeTag[DriverRead] = TreeNodeTag[DriverRead]("graft.driverRead")
@@ -175,14 +187,15 @@ object Metrics {
               qe.executedPlan.metrics.get("numOutputRows").foreach(m => last = Some(m.value))
               last
             }
+            val reads = driverReads(qe)
             val ev = QueryEvent(System.currentTimeMillis(), "query", funcName,
               durationNs / 1000000,
               rows,
               // A driver read has no scan metric: its file bytes stand in.
               (metricSum(qe, Set("bytesRead", "filesSize")) ++
-                driverReads(qe).map(_.bytes)).reduceOption(_ + _),
+                reads.map(_.bytes)).reduceOption(_ + _),
               metricSum(qe, Set("bytesWritten", "numOutputBytes")),
-              Map.empty)
+              pruneDetail(reads))
             targets.foreach(append(_, ev))
           }
         } catch { case _: Throwable => () } // observability never fails the query

@@ -85,12 +85,17 @@ object PruneFilter {
     case LeLong(c, h)         => col(c) <= lit(h)
   }
 
-  /** Can `file` possibly contain rows matching `f`? Missing stats => keep.
-    * String bounds compare in unsigned UTF-8 byte order ([[Utf8Ord]]) —
+  /** Can `file` possibly contain rows matching `f`? Its min/max stats
+    * first, then, for an `image_id` lookup they keep, its sketch. */
+  def mayMatch(file: DataFileMeta, f: PruneFilter): Boolean =
+    statsMayMatch(file, f) && sketchMayMatch(file, f)
+
+  /** Do `file`'s min/max stats admit rows matching `f`? Missing stats =>
+    * keep. String bounds compare in unsigned UTF-8 byte order ([[Utf8Ord]]) —
     * the same ordering that produced both sides. One-sided stats (older
     * manifests dropped an untrustworthy truncated max) leave the missing side
     * unbounded rather than falling through to the all-null check. */
-  def mayMatch(file: DataFileMeta, f: PruneFilter): Boolean = {
+  def statsMayMatch(file: DataFileMeta, f: PruneFilter): Boolean = {
     val st = file.stats.get(f.col)
     st match {
       case None => true
@@ -115,6 +120,13 @@ object PruneFilter {
           }
         }
     }
+  }
+
+  /** Does `file`'s [[IdSketch]] admit `f`? Only an equality on `image_id`
+    * consults it; a file without a sketch may match. */
+  def sketchMayMatch(file: DataFileMeta, f: PruneFilter): Boolean = f match {
+    case EqString(IdSketch.Column, v) => file.idSketch.forall(_.mayContain(v))
+    case _ => true
   }
 }
 
@@ -217,16 +229,20 @@ class GraftTable(val root: String, val spark: SparkSession) {
   }
 
   /** Files a pruned scan of `m` opens: manifests refuted by the partition
-    * spec are skipped, then files whose min/max stats refute a filter. */
-  private def planFiles(m: TableMetadata, filters: Seq[PruneFilter],
-      snapshotId: Option[Long]): Seq[DataFileMeta] =
-    planManifests(m, filters, snapshotId)
+    * spec are skipped, then files whose min/max stats refute a filter, then
+    * files whose sketch refutes an `image_id` lookup. */
+  private def plan(m: TableMetadata, filters: Seq[PruneFilter],
+      snapshotId: Option[Long]): FilePlan = {
+    val considered = planManifests(m, filters, snapshotId)
       .flatMap(n => MetaIO.readManifest(root, n).files)
-      .filter(f => filters.forall(PruneFilter.mayMatch(f, _)))
+    val byStats = considered.filter(f => filters.forall(PruneFilter.statsMayMatch(f, _)))
+    FilePlan(byStats.filter(f => filters.forall(PruneFilter.sketchMayMatch(f, _))),
+      considered.size, byStats.size)
+  }
 
   /** Pruned scan: skip whole manifests via the partition spec, then drop
-    * files whose min/max stats refute the filters, then apply the filters
-    * row-level. One metadata load plans the whole read.
+    * files whose min/max stats or `image_id` sketch refute the filters, then
+    * apply the filters row-level. One metadata load plans the whole read.
     *
     * Kept files at or below [[GraftTable.DriverReadMaxFiles]] files and
     * [[GraftTable.DriverReadMaxBytes]] bytes (a point lookup) are read
@@ -237,17 +253,17 @@ class GraftTable(val root: String, val spark: SparkSession) {
     * lazily through [[readFiles]], a distributed scan. */
   def scanWhere(filters: Seq[PruneFilter], snapshotId: Option[Long] = None): DataFrame = {
     val m = meta
-    val files = planFiles(m, filters, snapshotId)
+    val p = plan(m, filters, snapshotId)
     val df =
-      if (files.size <= DriverReadMaxFiles &&
-          files.map(_.fileSizeBytes).sum <= DriverReadMaxBytes)
-        readOnDriver(files, schemaOf(m))
-      else readFiles(files, schemaOf(m))
+      if (p.files.size <= DriverReadMaxFiles &&
+          p.files.map(_.fileSizeBytes).sum <= DriverReadMaxBytes)
+        readOnDriver(p, schemaOf(m))
+      else readFiles(p.files, schemaOf(m))
     filters.foldLeft(df)((d, f) => d.filter(PruneFilter.toColumn(f)))
   }
 
-  /** How many files a pruned scan would open (observability for tests/bench). */
-  def planFiles(filters: Seq[PruneFilter]): Seq[DataFileMeta] = planFiles(meta, filters, None)
+  /** The files a pruned scan would open (observability for tests/bench). */
+  def planFiles(filters: Seq[PruneFilter]): Seq[DataFileMeta] = plan(meta, filters, None).files
 
   /** The table's one reader of data files: a Parquet relation over a
     * [[ManifestFileIndex]] of `files`, planned from their manifest entries
@@ -264,11 +280,12 @@ class GraftTable(val root: String, val spark: SparkSession) {
   private val driverReaders =
     new ConcurrentHashMap[StructType, PartitionedFile => Iterator[InternalRow]]()
 
-  /** `files` read on the driver with the reader a distributed scan uses (the
-    * same decoding, null-filled evolved columns and nullable schema), with
-    * no pushed filters, as a DataFrame over a `LocalRelation` tagged for the
-    * table's query metrics. */
-  private def readOnDriver(files: Seq[DataFileMeta], sch: StructType): DataFrame = {
+  /** `p`'s files read on the driver with the reader a distributed scan uses
+    * (the same decoding, null-filled evolved columns and nullable schema),
+    * with no pushed filters, as a DataFrame over a `LocalRelation` tagged
+    * for the table's query metrics with the plan's pruning counts. */
+  private def readOnDriver(p: FilePlan, sch: StructType): DataFrame = {
+    val files = p.files
     val s = sch.toNullable
     val read = driverReaders.computeIfAbsent(s, _ =>
       new ParquetFileFormat().buildReaderWithPartitionValues(spark, s, new StructType(), s,
@@ -287,7 +304,8 @@ class GraftTable(val root: String, val spark: SparkSession) {
     }
     val rel = LocalRelation(DataTypeUtils.toAttributes(s), rows)
     rel.setTagValue(graft.lineage.Metrics.DriverReadTag, graft.lineage.Metrics.DriverRead(
-      Paths.get(root).toAbsolutePath.toString, files.map(_.fileSizeBytes).sum))
+      Paths.get(root).toAbsolutePath.toString, files.map(_.fileSizeBytes).sum,
+      p.considered, p.keptByStats, p.keptByStats - files.size))
     Bridge.ofRows(spark, rel)
   }
 
@@ -316,13 +334,14 @@ class GraftTable(val root: String, val spark: SparkSession) {
     val rootAbs = Paths.get(root).toAbsolutePath.toString
     val sch = schema
     val conf = new SerializableConfiguration(writerConf(df.schema))
+    val idIndex = sketchIndex(df.schema)
     val qe = df.queryExecution
     qe.executedPlan.setTagValue(graft.lineage.Metrics.WriteTag, rootAbs)
     val out = SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
       qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
         if (!rows.hasNext) Iterator.empty
         else Iterator(i -> writeFile(rootAbs,
-          f"$rel/part-$i%05d-${UUID.randomUUID()}.parquet", conf.value, rows, sch))
+          f"$rel/part-$i%05d-${UUID.randomUUID()}.parquet", conf.value, rows, sch, idIndex))
       }.collect().toSeq
     }
     graft.lineage.Metrics.recordJob(root, "write-data-files", t0, Map(
@@ -346,38 +365,6 @@ class GraftTable(val root: String, val spark: SparkSession) {
     prepared.asScala.map(_.getKey).filter(k => WriterKeyPrefixes.exists(k.startsWith))
       .foreach(k => conf.set(k, prepared.get(k)))
     conf
-  }
-
-  /** Per-file stats of `files` in one distributed pass (the reference the
-    * footer stats are tested against). Reads only the stats columns
-    * (binary payload column skipped via Parquet column pruning), groups by
-    * input_file_name — file-level metadata only comes back to the driver.
-    * Zero-row files yield no entry. */
-  def collectStats(files: Seq[DataFileMeta]): Seq[DataFileMeta] = {
-    val sch = schema
-    val statCols = sch.fields.filterNot(_.dataType == BinaryType).map(_.name)
-    val aggs = statCols.flatMap { c =>
-      Seq(min(col(c)).cast(StringType).as(s"min_$c"),
-          max(col(c)).cast(StringType).as(s"max_$c"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
-    }
-    val rows = readFiles(files, sch)
-      .groupBy(input_file_name().as("__file"))
-      .agg(count(lit(1)).as("__rows"), aggs.toIndexedSeq: _*)
-      .collect()
-    val prefix = "file:" // input_file_name returns a URI on local FS
-    rows.toSeq.map { r =>
-      val uri = r.getAs[String]("__file")
-      val p = Paths.get(java.net.URI.create(
-        if (uri.startsWith(prefix)) uri else s"file:$uri"))
-      val relPath = Paths.get(root).toAbsolutePath.relativize(p.toAbsolutePath).toString
-      val stats = statCols.map { c =>
-        c -> ColStats(Option(r.getAs[String](s"min_$c")),
-                      Option(r.getAs[String](s"max_$c")),
-                      r.getAs[Long](s"nulls_$c"))
-      }.toMap
-      DataFileMeta(relPath, Files.size(p), r.getAs[Long]("__rows"), stats)
-    }.sortBy(_.path)
   }
 
   /** Evolve the table schema to `newDdl`. Additive changes (appended columns,
@@ -470,6 +457,11 @@ object GraftTable {
     * schema). */
   val WriterKeyPrefixes: Seq[String] = Seq("parquet.", "spark.", "org.apache.spark.")
 
+  /** A pruned scan's file plan: the `files` it opens, the entries of the
+    * manifests it opened (`considered`) and how many of those the min/max
+    * stats kept (`keptByStats`); the sketch dropped the difference. */
+  private case class FilePlan(files: Seq[DataFileMeta], considered: Int, keptByStats: Int)
+
   /** The engine's fixed row schema (BASELINE.json input_hint). */
   val ImageSchemaDdl: String =
     "image_id STRING, bytes BINARY, w INT, h INT, fmt STRING, caption STRING, phash BIGINT"
@@ -519,11 +511,18 @@ object GraftTable {
       new ParquetWriteSupport()
   }
 
+  /** The position of a string `image_id` in rows of `dataSchema`, if any:
+    * the column a written file's [[IdSketch]] covers. */
+  private def sketchIndex(dataSchema: StructType): Option[Int] =
+    Some(dataSchema.fields.indexWhere(f =>
+      f.name == IdSketch.Column && f.dataType == StringType)).filter(_ >= 0)
+
   /** Write `rows` to `<rootAbs>/<rel>` with the settings in `conf` (as
     * prepared by `ParquetFileFormat.prepareWrite`) and return the file's
-    * metadata. A failed write deletes its partial file. */
+    * metadata, with an [[IdSketch]] of the row field at `idIndex` if given.
+    * A failed write deletes its partial file. */
   private def writeFile(rootAbs: String, rel: String, conf: Configuration,
-      rows: Iterator[InternalRow], sch: StructType): DataFileMeta = {
+      rows: Iterator[InternalRow], sch: StructType, idIndex: Option[Int]): DataFileMeta = {
     val p = Paths.get(rootAbs, rel)
     Files.createDirectories(p.getParent)
     val w = new RowWriterBuilder(new LocalOutputFile(p)).withConf(conf)
@@ -534,11 +533,21 @@ object GraftTable {
       .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
       .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
       .build()
-    try { rows.foreach(w.write); w.close() }
-    catch { case e: Throwable =>
+    val sketch = idIndex.map(i => (i, new IdSketch.Builder))
+    try {
+      rows.foreach { r =>
+        sketch match {
+          case Some((i, b)) if !r.isNullAt(i) => b.add(r.getUTF8String(i))
+          case _ => ()
+        }
+        w.write(r)
+      }
+      w.close()
+    } catch { case e: Throwable =>
       scala.util.Try(w.close()); Files.deleteIfExists(p); throw e
     }
     FooterStats.of(rel, Files.size(p), w.getFooter, sch)
+      .copy(idSketch = sketch.flatMap(_._2.result()))
   }
 
   /** Append rows as a new snapshot. */

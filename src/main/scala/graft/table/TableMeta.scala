@@ -16,7 +16,9 @@ import graft.util.Fs
  *   data/<commit>/part-<i>-<uuid>.parquet  immutable data files, one per write task
  *                                          (final path, no staging or markers)
  *   metadata/v<N>.metadata.json            table metadata versions (CAS via CREATE_NEW)
- *   metadata/manifest-<uuid>.json          immutable manifest files (shared across snapshots)
+ *   metadata/manifest-<uuid>.json          immutable manifest files (shared across snapshots):
+ *                                          one entry per data file, with min/max stats
+ *                                          and an image_id Bloom sketch
  *   metadata/version-hint.text             latest committed version (atomic rename)
  *   lineage/<job-id>/part-<k>.json         per-partition job lineage (resume)
  * }}}
@@ -28,7 +30,7 @@ import graft.util.Fs
  * small-file data plane the maintenance jobs operate on.
  */
 object TableJson {
-  implicit val formats: Formats = DefaultFormats
+  implicit val formats: Formats = DefaultFormats + IdSketch.Json
   def write[A <: AnyRef](a: A): String = Serialization.write(a)
   def read[A](s: String)(implicit m: Manifest[A]): A = Serialization.read[A](s)
 }
@@ -146,12 +148,16 @@ object PartitionSpec {
   }
 }
 
-/** One immutable data file. `path` is relative to the table root. */
+/** One immutable data file. `path` is relative to the table root. `idSketch`
+  * is the file's Bloom filter over `image_id` (manifest JSON: base64); an
+  * entry without one (no such column, over the size cap, or written before
+  * sketches existed) may match any key. */
 case class DataFileMeta(
     path: String,
     fileSizeBytes: Long,
     rowCount: Long,
-    stats: Map[String, ColStats]) {
+    stats: Map[String, ColStats],
+    idSketch: Option[IdSketch] = None) {
   def absPath(root: String): String = s"$root/$path"
 }
 

@@ -126,7 +126,7 @@ class DataFileWriterSpec extends GraftSuite {
     val Seq(f) = try t.writeDataFiles(df) finally spark.conf.unset("parquet.block.size")
     assert(footer(s"${t.root}/${f.path}").getBlocks.size > 1)
     assert(f.stats("caption").nullCount > 0)
-    assert(Seq(f) == t.collectStats(Seq(f)))
+    assert(footerFields(Seq(f)) == footerFields(collectStats(t, Seq(f))))
   }
 
   test("a write whose last task fails throws, commits nothing and leaves only sweepable files") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.images.ImageGen
-import graft.table.GraftTable
+import graft.table.{ColStats, DataFileMeta, GraftTable}
 
 /** One SparkSession for the whole forked test JVM. */
 object TestSpark {
@@ -125,4 +125,39 @@ abstract class GraftSuite extends AnyFunSuite {
 
   def snapshotReplay(t: GraftTable): Map[String, Seq[String]] =
     replayQueries(t).map { case (k, df) => k -> canon(df) }
+
+  /** Per-file stats of `files` in one distributed pass: the reference the
+    * footer stats are tested against. Reads only the non-binary columns,
+    * grouped by `input_file_name`. Zero-row files yield no entry. */
+  def collectStats(t: GraftTable, files: Seq[DataFileMeta]): Seq[DataFileMeta] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val sch = t.schema
+    val statCols = sch.fields.filterNot(_.dataType == BinaryType).map(_.name)
+    val aggs = statCols.flatMap { c =>
+      Seq(min(col(c)).cast(StringType).as(s"min_$c"),
+          max(col(c)).cast(StringType).as(s"max_$c"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
+    }
+    val rows = t.readFiles(files, sch)
+      .groupBy(input_file_name().as("__file"))
+      .agg(count(lit(1)).as("__rows"), aggs.toIndexedSeq: _*)
+      .collect()
+    val root = Paths.get(t.root).toAbsolutePath
+    rows.toSeq.map { r =>
+      val uri = r.getAs[String]("__file") // a URI on the local file system
+      val p = Paths.get(java.net.URI.create(if (uri.startsWith("file:")) uri else s"file:$uri"))
+      val stats = statCols.map { c =>
+        c -> ColStats(Option(r.getAs[String](s"min_$c")),
+                      Option(r.getAs[String](s"max_$c")),
+                      r.getAs[Long](s"nulls_$c"))
+      }.toMap
+      DataFileMeta(root.relativize(p).toString, Files.size(p), r.getAs[Long]("__rows"), stats)
+    }.sortBy(_.path)
+  }
+
+  /** What the footer stats and [[collectStats]] both describe: path, size,
+    * row count and column stats (not the sketch). */
+  def footerFields(fs: Seq[DataFileMeta]): Seq[(String, Long, Long, Map[String, ColStats])] =
+    fs.map(f => (f.path, f.fileSizeBytes, f.rowCount, f.stats)).sortBy(_._1)
 }

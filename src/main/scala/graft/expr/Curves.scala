@@ -42,7 +42,6 @@ object Curves {
   }
 
   def zorder3(a: Long, b: Long, c: Long): Long = zorder(Array(a, b, c))
-  def zorder2(a: Long, b: Long): Long = zorder(Array(a, b))
 
   /**
    * Hilbert index of an n-dimensional point, `bits` bits per dimension.
@@ -134,10 +133,4 @@ object Curves {
 
   def hilbert3(a: Long, b: Long, c: Long): Long =
     hilbertIndex(Array(a, b, c), 21)
-  def hilbert2(a: Long, b: Long): Long =
-    hilbertIndex(Array(a, b), 31)
-
-  /** Quantize a signed long (e.g. phash, which is a bit pattern) into the top
-    * `bits` bits of its unsigned value, preserving unsigned order. */
-  @inline def quantizeTop(v: Long, bits: Int): Long = v >>> (64 - bits)
 }

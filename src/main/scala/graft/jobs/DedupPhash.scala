@@ -27,8 +27,10 @@ import graft.table.{GraftTable, Snapshot}
  * Near-dup mode (hamming <= t): LSH banding on four 16-bit phash bands —
  * exact-equal collapse runs first so band buckets stay small, then the band
  * self-join emits candidate pairs, hamming-filtered, and connected
- * components are resolved by iterative min-canonical propagation (the same
- * frontier-loop shape as [[graft.operators.GraphOps.traverse]]).
+ * components are resolved by iterative min-label propagation: every row
+ * starts labelled with its own id, each round lowers a row's label to the
+ * smallest among its own and its candidate-pair neighbours', and the loop
+ * stops when a round changes no label (at most 20 rounds).
  */
 object DedupPhash {
 

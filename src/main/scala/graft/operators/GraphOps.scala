@@ -1,110 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Graph operators over (nodes, edges) DataFrames, restating the reference's
- * GraphStorage surface (core/src/interfaces/storage.ts:34-44) Spark-first.
+ * Graph operator over (nodes, edges) DataFrames: the reference's entity
+ * merge, Spark-first (the query surface's q38 calls it).
  * Nodes: (id, ...attrs); edges: (src, dst, ...attrs).
  */
 object GraphOps {
-
-  /** G1/G2: depth-limited traversal with cycle guard — iterative frontier
-    * expansion; `direction` out|in|both; `edgeTypes` restricts the walk to
-    * edges whose `type` column is in the set (reference's optional
-    * relationship-type filter, sqlite-graph-storage.ts:201-226;
-    * querying/pipeline.ts:64-85). */
-  def traverse(spark: SparkSession, edges: DataFrame, startIds: Seq[String],
-      maxDepth: Int, direction: String = "out",
-      edgeTypes: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    val typed =
-      if (edgeTypes.isEmpty) edges
-      else {
-        require(edges.columns.contains("type"),
-          "edgeTypes filter requires a 'type' column on the edges frame")
-        edges.filter(col("type").isin(edgeTypes.map(lit(_)): _*))
-      }
-    val e = direction match {
-      case "out" => typed.select(col("src"), col("dst"))
-      case "in" => typed.select(col("dst").as("src"), col("src").as("dst"))
-      case "both" => typed.select(col("src"), col("dst"))
-        .union(typed.select(col("dst").as("src"), col("src").as("dst")))
-      case other => throw new IllegalArgumentException(s"direction: $other")
-    }
-    var visited = startIds.toDF("id").withColumn("depth", lit(0L))
-      .localCheckpoint(true)
-    var frontier = visited
-    var d = 0
-    while (d < maxDepth && !frontier.isEmpty) {
-      d += 1
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .select(e("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("depth", lit(d.toLong))
-        .localCheckpoint(true)
-      visited = visited.union(next).localCheckpoint(true)
-      frontier = next
-    }
-    visited
-  }
-
-  /** G3: shortest path between two nodes (BFS with parent pointers;
-    * reference findPath, sqlite-graph-storage.ts:228-254, maxDepth 5).
-    * Returns the node sequence, or None. */
-  def findPath(spark: SparkSession, edges: DataFrame, from: String, to: String,
-      maxDepth: Int = 5): Option[Seq[String]] =
-    findPathEdges(spark, edges, from, to, maxDepth)
-      .map(es => if (es.isEmpty) Seq(from) else es.head._1 +: es.map(_._2))
-
-  /** G3, reference-faithful form: the EDGE sequence (src, dst, attrs-json)
-    * along the shortest path — the reference returns Relation objects, not
-    * node ids. Non-(src,dst) edge columns are carried as a JSON blob per hop.
-    * The bounded parent walk collects only parent pointers of VISITED nodes
-    * (<= maxDepth frontier rounds), never the full edge set. */
-  def findPathEdges(spark: SparkSession, edges: DataFrame, from: String, to: String,
-      maxDepth: Int = 5): Option[Seq[(String, String, String)]] = {
-    import spark.implicits._
-    val attrCols = edges.columns.filterNot(c => c == "src" || c == "dst")
-    val attrs = if (attrCols.isEmpty) lit("{}")
-      else to_json(struct(attrCols.toIndexedSeq.map(col): _*))
-    val e = edges.select(col("src"), col("dst"), attrs.as("eattrs"))
-    var parents = Seq((from, "", "")).toDF("id", "parent", "eattrs").localCheckpoint(true)
-    var frontier = parents.select(col("id"))
-    var d = 0
-    var found = from == to
-    while (!found && d < maxDepth && !frontier.isEmpty) {
-      d += 1
-      // One parent per newly reached node; min(src) tie-break, with the
-      // winning edge's attrs carried by min_by on the same key.
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .groupBy(e("dst").as("id"))
-        .agg(min(e("src")).as("parent"),
-          expr("min_by(eattrs, src)").as("eattrs"))
-        .join(parents, Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      parents = parents.union(next).localCheckpoint(true)
-      frontier = next.select(col("id"))
-      found = !frontier.filter(col("id") === to).isEmpty
-    }
-    if (!found) None
-    else {
-      // Backtrack with <= maxDepth single-node lookups against the
-      // (checkpointed) parents frame — one row per hop comes to the driver,
-      // never the full visited set (which on a dense graph can be the whole
-      // node population even at depth 5).
-      val hops = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-      var cur = to
-      while (cur != from) {
-        val r = parents.filter(col("id") === cur)
-          .select(col("parent"), col("eattrs")).head()
-        hops.prepend((r.getString(0), cur, r.getString(1)))
-        cur = r.getString(0)
-      }
-      Some(hops.toSeq)
-    }
-  }
 
   /** Entity merge with edge redirect (reference mergeEntities,
     * createFlowRAG.ts:51-119): the nodes whose id is in `sources` collapse
@@ -204,53 +108,5 @@ object GraphOps {
         "left_anti")
       .select(edges.columns.toIndexedSeq.map(col): _*)
     (outNodes, untouched.unionByName(dedupedNew))
-  }
-
-  /** G4-style cascade: edges incident to deleted nodes go too. */
-  def cascadeDelete(nodes: DataFrame, edges: DataFrame, deleteIds: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val keptNodes = nodes.join(deleteIds.withColumnRenamed("id", "__d"),
-      nodes("id") === col("__d"), "left_anti")
-    val keptEdges = edges
-      .join(deleteIds.withColumnRenamed("id", "__d"), edges("src") === col("__d"), "left_anti")
-      .join(deleteIds.withColumnRenamed("id", "__d"), edges("dst") === col("__d"), "left_anti")
-    (keptNodes, keptEdges)
-  }
-
-  /** S10: export sinks — json/csv via Spark writers (quote-escaping
-    * built-in, unlike the reference's hand-rolled CSV,
-    * createFlowRAG.ts:151-157); DOT digraph is a bounded driver render. */
-  def exportJson(nodes: DataFrame, edges: DataFrame, dir: String): Unit = {
-    nodes.write.mode("overwrite").json(s"$dir/nodes")
-    edges.write.mode("overwrite").json(s"$dir/edges")
-  }
-
-  def exportCsv(nodes: DataFrame, edges: DataFrame, dir: String): Unit = {
-    nodes.write.mode("overwrite").option("header", "true").csv(s"$dir/nodes")
-    edges.write.mode("overwrite").option("header", "true").csv(s"$dir/edges")
-  }
-
-  def exportDot(nodes: DataFrame, edges: DataFrame, maxNodes: Int = 10000): String = {
-    val ns = nodes.select("id").limit(maxNodes).collect().map(_.getString(0))
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    // Filter edges to the bounded node set BEFORE collecting — an unbounded
-    // edges.collect() would pull the whole (data-scale) edge set to the
-    // driver just to render a capped preview.
-    val nsDf = ns.toSeq.toDF("__n")
-    val es = edges.select("src", "dst")
-      .join(nsDf.withColumnRenamed("__n", "src"), Seq("src"), "left_semi")
-      .join(nsDf.withColumnRenamed("__n", "dst"), Seq("dst"), "left_semi")
-      .select("src", "dst")
-      // Deterministic truncation: an un-ordered limit picks whichever
-      // partitions answer first, so two exports of the same graph would
-      // diff spuriously.
-      .orderBy("src", "dst")
-      .limit(maxNodes * 4)
-      .collect()
-    val sb = new StringBuilder("digraph G {\n")
-    ns.foreach(n => sb.append(s"""  "$n";\n"""))
-    es.foreach(r => sb.append(s"""  "${r.getString(0)}" -> "${r.getString(1)}";\n"""))
-    sb.append("}\n").toString
   }
 }

@@ -16,13 +16,6 @@ object TextOps {
     concat(lit("doc:"),
       regexp_replace(translate(base64(path.cast("binary")), "+/", "-_"), "=+$", ""))
 
-  def docIdToPath(id: Column): Column = {
-    val b64 = translate(regexp_replace(id, "^doc:", ""), "-_", "+/")
-    // Re-pad to a multiple of 4 before unbase64.
-    val pad = (lit(4) - length(b64) % 4) % 4
-    unbase64(concat(b64, substring(lit("==="), lit(1), pad))).cast("string")
-  }
-
   /** C3: sliding-window chunker (reference: indexing/chunker.ts:13-46):
     * tokens -> windows of `size` stepping `size - overlap`; emits
     * (doc pk, chunk_index, chunk_text, start_token, end_token).
@@ -163,18 +156,5 @@ object TextOps {
          |
          |Focus on technical entities and their relationships. Be precise and avoid duplicates.$fieldsInstruction""".stripMargin
     (prefix, suffix)
-  }
-
-  /** F8: entity resolution chain — exact id, then case-insensitive, then
-    * substring (reference: mcp/src/resolve.ts:3-19). Returns matches with
-    * the rank of the rule that matched (1 best), best-first. */
-  def resolve(df: DataFrame, nameCol: String, q: String): DataFrame = {
-    df.withColumn("__rule",
-        when(col(nameCol) === q, 1)
-          .when(lower(col(nameCol)) === q.toLowerCase, 2)
-          .when(lower(col(nameCol)).contains(q.toLowerCase), 3))
-      .filter(col("__rule").isNotNull)
-      .withColumn("match_rule", col("__rule").cast("long")).drop("__rule")
-      .orderBy(col("match_rule"), col(nameCol))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.table.GraftTable
@@ -11,14 +10,12 @@ import graft.table.GraftTable
  * its incrementality is batch-diff — the lakehouse-native streaming analog is
  * micro-batch append with exactly-once table commits).
  *
- *  - [[appendStream]]: readStream -> foreachBatch -> snapshot-committed
- *    appends. Each micro-batch becomes one atomic snapshot; the table's
- *    commit protocol makes replayed batches idempotent at the snapshot level
- *    (re-grounding I2 hash-after-success ordering,
- *    indexing/pipeline.ts:93-94).
- *  - [[windowedEventStats]]: watermarked event-time windowed aggregation —
- *    the progress-event statistics surface (I6,
- *    pipeline/src/types.ts:86-101) as a streaming query.
+ * One entry point, [[appendStreamWithUpkeep]]: readStream -> foreachBatch ->
+ * snapshot-committed appends, with inline compaction and incremental
+ * clustering once small files accumulate. Each micro-batch becomes one
+ * atomic snapshot; the per-checkpoint batch watermark makes replayed batches
+ * idempotent at the snapshot level (re-grounding I2 hash-after-success
+ * ordering, indexing/pipeline.ts:93-94).
  */
 object StreamingIngest {
 
@@ -67,20 +64,6 @@ object StreamingIngest {
     }
   }
 
-  /** Micro-batch append of a streaming DataFrame (table schema) into the
-    * table. Returns the started query; caller owns lifecycle. */
-  def appendStream(t: GraftTable, stream: DataFrame, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Each delivered batch becomes one atomic snapshot, idempotent per
-        // (checkpoint, batchId) so at-least-once delivery never duplicates.
-        if (!batch.isEmpty) idempotentAppend(t, batch, checkpointDir, batchId): Unit
-      }
-      .start()
-
   /** Micro-batch append with INLINE table upkeep: after each committed
     * batch, if the small-file population crossed `maintainEveryFiles`, run a
     * compaction and fold the newly compacted files into the clustered layout
@@ -112,16 +95,4 @@ object StreamingIngest {
         }
       }
       .start()
-
-  /** Watermark + sliding window aggregation over an event stream
-    * (ts, event_type, value). */
-  def windowedEventStats(events: DataFrame,
-      window_ : String = "5 minutes", slide: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("n"), col("total_value"))
 }

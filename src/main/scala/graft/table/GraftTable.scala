@@ -189,8 +189,6 @@ class GraftTable(val root: String, val spark: SparkSession) {
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot at or before $tsMs (earliest: ${meta.snapshots.map(_.timestampMs).minOption.getOrElse(-1L)})"))
 
-  def scanAsOf(tsMs: Long): DataFrame = scan(Some(snapshotAsOf(tsMs).snapshotId))
-
   /** Roll the current pointer back (or forward) to an existing snapshot.
     * Metadata-only CAS; no snapshot is created or destroyed, so the rolled-
     * past snapshots stay time-travelable until expired — Iceberg's

@@ -44,6 +44,25 @@ class StreamingUpkeepSpec extends GraftSuite {
       s"expected upkeep to shrink the file count, got ${t.currentFiles.size} (small=$small)")
   }
 
+  test("streaming micro-batch append commits snapshots") {
+    // Ingest: stream the image fixture into a fresh table via AvailableNow;
+    // 3 small files stay under the upkeep threshold, so the last commit is
+    // the append itself.
+    val work = TestFixtures.workRoot.resolve("stream-ingest")
+    val srcDir = work.resolve("src").toString
+    graft.images.ImageGen.df(spark, 60, seed = 7L, partitions = 3)
+      .write.parquet(srcDir)
+    val t = GraftTable.create(work.resolve("tbl").toString, spark)
+    val stream = spark.readStream.schema(t.schema).parquet(srcDir)
+    val q = StreamingIngest.appendStreamWithUpkeep(t, stream,
+      checkpointDir = work.resolve("ckpt").toString,
+      trigger = Trigger.AvailableNow())
+    q.awaitTermination(120000)
+    assert(t.scan().count() == 60)
+    assert(t.meta.snapshots.nonEmpty)
+    assert(t.currentSnapshot.operation == "append")
+  }
+
   test("streaming append is idempotent per (checkpoint, batchId): a re-delivered batch is skipped") {
     val work = TestFixtures.workRoot.resolve("stream-idem")
     val t = GraftTable.create(work.resolve("tbl").toString, spark)

@@ -22,8 +22,10 @@ class TimeTravelSpec extends GraftSuite {
     assert(t.snapshotAsOf(s1.timestampMs).snapshotId == s1.snapshotId)
     assert(t.snapshotAsOf(s2.timestampMs).snapshotId == s2.snapshotId)
     assert(t.snapshotAsOf(System.currentTimeMillis()).snapshotId == s2.snapshotId)
-    assert(t.scanAsOf(s1.timestampMs).count() == TestFixtures.BaseRows)
-    assert(t.scanAsOf(s2.timestampMs).count() == TestFixtures.BaseRows + 10)
+    assert(t.scan(Some(t.snapshotAsOf(s1.timestampMs).snapshotId)).count() ==
+      TestFixtures.BaseRows)
+    assert(t.scan(Some(t.snapshotAsOf(s2.timestampMs).snapshotId)).count() ==
+      TestFixtures.BaseRows + 10)
     intercept[IllegalArgumentException] { t.snapshotAsOf(s1.timestampMs - 100000) }
   }
 

@@ -30,9 +30,8 @@ import graft.table.{DataFileMeta, GraftTable, InLong, MetaIO, PartitionSpec}
  * snapshot-versioned with its data, and time travel applies to the index
  * like any other table. RETRAIN CONTRACT: a re-run against a committed
  * index with different parameters (or different data) REFUSES
- * ([[preTrainingGuard]]/[[attachTable]]) — retraining today means delete
- * and rebuild; [[append]] extends the lists under the FROZEN stored
- * quantizer. Note the job identity is the parameter signature plus the
+ * ([[preTrainingGuard]]/[[attachTable]]) — retraining means delete and
+ * rebuild. Note the job identity is the parameter signature plus the
  * input FILE LIST: identical root+params+files is treated as the same
  * completed job (the COMMITTED marker short-circuits), so a non-file
  * source whose contents changed, or the same files re-filtered through a
@@ -60,10 +59,9 @@ import graft.table.{DataFileMeta, GraftTable, InLong, MetaIO, PartitionSpec}
  *        on a bounded pool. Cross-unit parallelism doubles as the
  *        sub-bucket split: with unit capacity ~ k x targetBytes each
  *        unit's per-bucket slice is ~one target-sized file.
- *      * [[run]] (arbitrary DataFrames): units are LPT-balanced bucket
- *        WAVES; each wave re-scans the (column-pruned) input to keep its
- *        slice, so waves trade resume granularity for read amplification
- *        — default 1 wave; prefer runFiles whenever the source is files.
+ *      * [[run]] (arbitrary DataFrames): one unit routes the whole input,
+ *        so a killed run resumes from the persisted fit but rewrites every
+ *        bucket; prefer runFiles whenever the source is files.
  */
 object BuildIvf {
 
@@ -165,7 +163,7 @@ object BuildIvf {
           s.summary.get("added-rows").map(_.toLong).getOrElse(0L),
           s.summary.get("added-files").map(_.toInt).getOrElse(0))
         case None =>
-          val units = job.resumed.values
+          val units = Lineage.committedUnits(root, job.jobId).values
           Result(t, k, units.map(_.rows).sum, units.map(_.filesOut.size).sum)
       }
     }
@@ -245,11 +243,10 @@ object BuildIvf {
 
   /** Final phase: fold every committed unit's files into ONE snapshot,
     * mark the job done, record metrics. */
-  private def finish(t: GraftTable, job: UnitJob, units: Int, k: Int,
-      detail: Map[String, String]): Result = {
+  private def finish(t: GraftTable, job: UnitJob, units: Int, k: Int): Result = {
     val (_, added) = job.finish(t, units, "append", Set.empty,
       Map("job" -> "build-ivf", "job-id" -> job.jobId), "build-ivf") { added =>
-      detail ++ Map("k" -> k.toString, "files" -> added.size.toString,
+      Map("units" -> units.toString, "k" -> k.toString, "files" -> added.size.toString,
         "rows" -> added.map(_.rowCount).sum.toString) }
     Result(t, k, added.map(_.rowCount).sum, added.size)
   }
@@ -260,20 +257,20 @@ object BuildIvf {
     * id, vecCol: float/double array). Deterministic end-to-end: the
     * fixed-point fit plus value-routed salted writes make a rebuild of the
     * same data byte-comparable. Resumable: re-invoking with identical
-    * arguments after a kill reuses the persisted fit and every committed
-    * wave. Prefer [[runFiles]] for file-backed sources (its units avoid
-    * re-scanning the input). */
+    * arguments after a kill reuses the persisted fit; the routed write is
+    * one unit. Prefer [[runFiles]] for file-backed sources (its units
+    * resume at file-group granularity). */
   def run(spark: SparkSession, vectors: DataFrame, idCol: String,
       vecCol: String, root: String, initIds: Seq[Long],
       iters: Int = 3, targetBytes: Long = 8L * 1024 * 1024,
-      waves: Int = 1, failAfterUnits: Option[Int] = None): Result = {
+      failAfterUnits: Option[Int] = None): Result = {
     val jobT0 = System.nanoTime()
     // Input files (when the source is file-backed) pin the job identity the
     // same way Compact's input list does; a non-file source falls back to
     // the parameter signature alone.
     val inputs = scala.util.Try(vectors.inputFiles.toSeq).getOrElse(Nil)
     val job = new UnitJob(root, UnitJob.id("build-ivf", 0L,
-      s"$idCol|$vecCol|${initIds.sorted.mkString(",")}|$iters|$targetBytes|$waves",
+      s"$idCol|$vecCol|${initIds.sorted.mkString(",")}|$iters|$targetBytes",
       inputs), jobT0)
     completedResult(spark, root, job).foreach(r => return r)
     Files.createDirectories(Paths.get(root))
@@ -288,46 +285,23 @@ object BuildIvf {
       case Right(tbl) => tbl
     }
 
-    // Phase 3: routed writes in bucket waves (LPT-balanced by cluster size,
-    // deterministic tie-break), each an independently resumable unit. Waves
-    // run SEQUENTIALLY — unlike runFiles' units they all scan the same
-    // input, so overlapping them multiplies concurrent input reads without
-    // adding task-slot work.
-    val waveSets: Seq[Seq[Long]] = {
-      val w = math.max(1, math.min(waves, k))
-      if (w == 1) Seq(sorted.map(_._1))
-      else {
-        val load = Array.fill(w)(0L)
-        val out = Array.fill(w)(List.empty[Long])
-        sorted.map(_._1).sortBy(c => (-sizes.getOrElse(c, 0L), c)).foreach { cid =>
-          val i = load.indices.minBy(j => (load(j), j))
-          load(i) += math.max(1L, sizes.getOrElse(cid, 0L))
-          out(i) = cid :: out(i)
-        }
-        out.toSeq.map(_.sorted)
-      }
+    // Phase 3: one routed write of every bucket, the job's one unit.
+    job.run(1, poolSize = 1, failAfterUnits) { _ =>
+      Seq((Nil, t.writeDataFiles(route(assign(vectors, idCol, vecCol, sorted),
+        sorted.map(_._1).toArray, sub))))
     }
-    job.run(waveSets.size, poolSize = 1, failAfterUnits) { _.map { wi =>
-      val waveCids = waveSets(wi)
-      val a = assign(vectors, idCol, vecCol, sorted)
-      val waveDf =
-        if (waveSets.size == 1) a
-        else a.filter(col("bucket").isin(waveCids.map(Long.box): _*))
-      (Nil, t.writeDataFiles(route(waveDf, waveCids.toArray, sub)))
-    } }
-    finish(t, job, waveSets.size, k, Map("waves" -> waveSets.size.toString))
+    finish(t, job, 1, k)
   }
 
   /** File-group-resumable build — the production 100 TB path for
     * file-backed vector sources (and the CLI's). Units are FFD-packed
     * groups of the input files, each read EXACTLY ONCE by its own unit
-    * (zero read amplification — the Compact/Cluster unit shape, unlike
-    * [[run]]'s waves which re-scan), routed bucket-pure and committed to
-    * lineage, overlapped on a bounded pool. Unit capacity is
-    * k x targetBytes, so each unit's expected per-bucket slice is one
-    * ~target-sized file and cross-unit parallelism doubles as the
-    * sub-bucket split; a skewed bucket's per-unit slice is still bounded
-    * by the unit size. Training still scans everything (that is the fit),
+    * (zero read amplification — the Compact/Cluster unit shape), routed
+    * bucket-pure and committed to lineage, overlapped on a bounded pool.
+    * Unit capacity is k x targetBytes, so each unit's expected per-bucket
+    * slice is one ~target-sized file and cross-unit parallelism doubles as
+    * the sub-bucket split; a skewed bucket's per-unit slice is still
+    * bounded by the unit size. Training still scans everything (that is the fit),
     * and resumes from the persisted artifact like run(). */
   def runFiles(spark: SparkSession, srcFiles: Seq[String], idCol: String,
       vecCol: String, root: String, initIds: Seq[Long], iters: Int = 3,
@@ -387,36 +361,7 @@ object BuildIvf {
       (g.map(_.path), t.writeDataFiles(route(assign(src, idCol, vecCol, sorted),
         sorted.map(_._1).toArray, unitSub(g.map(_.fileSizeBytes).sum))))
     } }
-    finish(t, job, groups.size, k, Map("units" -> groups.size.toString))
-  }
-
-  /** Incremental index maintenance: assign NEW vectors with the STORED
-    * centroids and append bucket-pure files — one snapshot, no retrain.
-    * The steady-state 10^12-row path: continuous ingest appends into the
-    * lists; the assignment stays consistent because the quantizer is
-    * frozen in table properties (a periodic [[run]] rebuild re-trains when
-    * drift warrants it, as reference backends re-index). The batch is
-    * scanned twice — a map-side partial count (<= k rows to the driver)
-    * sizes the sub-buckets, then the routed write — deliberately NOT
-    * persisted: caching an arbitrary-size batch trades bounded extra CPU
-    * for unbounded executor memory. Appended sub-bucket files are
-    * target-sized; the standard compaction job folds small ones, and
-    * partition-pure bins keep every output file single-bucket. */
-  def append(t: GraftTable, vectors: DataFrame, idCol: String,
-      vecCol: String, targetBytes: Long = 8L * 1024 * 1024): Long = {
-    val t0 = System.nanoTime()
-    val cents = centroidsOf(t).sortBy(_._1)
-    val a = assign(vectors, idCol, vecCol, cents)
-    val counts = a.groupBy(col("bucket")).count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val sub = subBucketCounts(cents, counts, targetBytes)
-    val snap = GraftTable.append(t, route(a, cents.map(_._1).toArray, sub),
-      summary = Map("job" -> "ivf-append"))
-    val addedRows = snap.summary.get("added-rows").map(_.toLong).getOrElse(0L)
-    Metrics.recordJob(t.root, "ivf-append", t0,
-      Map("rows" -> addedRows.toString,
-        "files" -> snap.summary.getOrElse("added-files", "0")))
-    addedRows
+    finish(t, job, groups.size, k)
   }
 
   /** nprobe-pruned cosine top-k over the index table. Probe lists are

@@ -51,14 +51,13 @@ object Cluster {
     * a fully non-overlapping layout if range overlap accumulates. */
   def runIncremental(t: GraftTable,
       curve: String = "zorder",
-      targetBytes: Long = 8L * 1024 * 1024,
-      maxConcurrentGroups: Int = 8): Result = {
+      targetBytes: Long = 8L * 1024 * 1024): Result = {
     val clustered: Set[String] = t.meta.snapshots
       .filter(_.operation == "cluster")
       .sortBy(_.snapshotId).lastOption
       .map(s => t.snapshotFiles(s).map(_.path).toSet)
       .getOrElse(Set.empty)
-    run(t, curve, "groups", targetBytes, maxConcurrentGroups,
+    run(t, curve, "groups", targetBytes,
       only = Some(t.currentFiles.filterNot(f => clustered.contains(f.path))))
   }
 

@@ -1,9 +1,7 @@
 package graft.jobs
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.SparkSession
 
 import graft.table.{GraftTable, MetaIO, TableMetadata}
 import graft.util.Fs
@@ -23,11 +21,11 @@ import graft.util.Fs
  * Scale design: liveness is plain set work on the driver over manifests read
  * through the [[MetaIO.readManifest]] cache. That is the same O(live file
  * entries) driver walk every [[GraftTable.commit]] (and every scan plan)
- * already does, so expire adds no new driver-scale bound. The one step that
- * is distributed is physical deletion above [[DriverDeleteMax]] files
- * (executor-side foreachPartition — the natural place for object-store
- * bulk-DELETE batches); smaller lists are deleted in a driver loop that
- * starts no Spark job.
+ * already does, so expire adds no new driver-scale bound. Every deletion is
+ * a driver loop that starts no Spark job: the table lives on a local file
+ * system (`java.nio`), where an executor would unlink on the same disk at
+ * the same few microseconds per file, and Apache Iceberg's Spark expire
+ * action likewise deletes from the driver.
  */
 object ExpireSnapshots {
 
@@ -43,44 +41,13 @@ object ExpireSnapshots {
   private def listedPaths(root: String, manifests: Iterable[String]): Set[String] =
     manifests.iterator.flatMap(mf => MetaIO.readManifest(root, mf).files.map(_.path)).toSet
 
-  /** Driver-loop cutoff: deletion lists at or below this are deleted in a
-    * driver loop (no Spark job); above it, deletes run executor-side via
-    * foreachPartition. */
-  val DriverDeleteMax = 512
-
-  /** Physically delete `files` (root-relative path, fileSizeBytes),
-    * returning (deletedCount, deletedBytes). A small list (<= DriverDeleteMax)
-    * is a driver loop; a larger one is distributed: each executor partition
-    * deletes its slice (on object storage this is where the bulk DELETE
-    * batch call goes), counts flow back via accumulators. At 10^7 dead files
-    * the driver-serial alternative is hours of wall clock. */
-  private[graft] def deleteListed(spark: SparkSession, root: String,
-      files: Seq[(String, Long)]): (Long, Long) = {
-    // Absolutized ON THE DRIVER before the closure captures it: executor JVMs
-    // under local-cluster have different working directories, so a relative
-    // root would make executor-side deleteIfExists silently no-op.
-    val rootAbs = Paths.get(root).toAbsolutePath.toString
-    if (files.size <= DriverDeleteMax) {
-      var cnt = 0L; var bytes = 0L
-      files.foreach { case (p, b) =>
-        if (Files.deleteIfExists(Paths.get(rootAbs, p))) { cnt += 1; bytes += b }
-      }
-      (cnt, bytes)
-    } else {
-      import spark.implicits._
-      val cnt = spark.sparkContext.longAccumulator("expire.deletedFiles")
-      val bytes = spark.sparkContext.longAccumulator("expire.deletedBytes")
-      files.toDF("path", "fileSizeBytes").foreachPartition {
-        it: Iterator[org.apache.spark.sql.Row] =>
-          it.foreach { r =>
-            if (Files.deleteIfExists(Paths.get(rootAbs, r.getString(0)))) {
-              cnt.add(1); bytes.add(r.getLong(1))
-            }
-          }
-      }
-      (cnt.value, bytes.value)
+  /** Delete `files` (path relative to `dir`, size) in one driver loop and
+    * return (deleted count, deleted bytes). A file already gone counts for
+    * nothing, so a re-run deletes and reports nothing. */
+  private[graft] def deleteListed(dir: Path, files: Seq[(String, Long)]): (Long, Long) =
+    files.foldLeft((0L, 0L)) { case ((n, bytes), (p, size)) =>
+      if (Files.deleteIfExists(dir.resolve(p))) (n + 1, bytes + size) else (n, bytes)
     }
-  }
 
   /** Delete each commit directory holding one of `paths` (root-relative
     * data files just deleted) once no `.parquet` file is left in it, with
@@ -110,8 +77,8 @@ object ExpireSnapshots {
     (byLast ++ byAge ++ m.currentSnapshotId.toSeq).distinct.sorted
   }
 
-  def run(t: GraftTable, retain: Seq[Long], deleteFiles: Boolean = true,
-      sweepOrphans: Boolean = true, orphanMinAgeMs: Long = 60L * 60 * 1000): Result = {
+  def run(t: GraftTable, retain: Seq[Long],
+      orphanMinAgeMs: Long = 60L * 60 * 1000): Result = {
     val jobT0 = System.nanoTime()
     val m = t.meta
     val retainSet = retain.toSet
@@ -172,66 +139,40 @@ object ExpireSnapshots {
       Some(cur.copy(snapshots = keep, properties = cur.properties ++ legacyWm))
     }
 
-    val (deletedFiles, deletedBytes) =
-      if (!deleteFiles) {
-        // Dry run: report the PLANNED reclamation so callers can preview.
-        (deadFiles.size.toLong, deadFiles.map(_._2).sum)
-      } else {
-        val deleted = deleteListed(t.spark, t.root, deadFiles)
-        deleteEmptiedDirs(t.root, deadFiles.map(_._1))
-        deadManifests.foreach(mf =>
-          Files.deleteIfExists(MetaIO.metadataDir(t.root).resolve(mf)))
-        deleted
-      }
+    val rootDir = Paths.get(t.root)
+    val metaDir = MetaIO.metadataDir(t.root)
+    val (deletedFiles, deletedBytes) = deleteListed(rootDir, deadFiles)
+    deleteEmptiedDirs(t.root, deadFiles.map(_._1))
+    deleteListed(metaDir, deadManifests.map(_ -> 0L))
 
-    // Manifest-orphan sweep: manifest files on disk referenced by no
-    // snapshot at all (lost CAS attempts write manifests first) — metadata
-    // scale, age-guarded like data orphans. Gated on sweepOrphans: that
-    // flag exists precisely to protect in-flight writers' not-yet-committed
-    // artifacts, and a pre-CAS manifest is exactly such an artifact.
-    if (sweepOrphans && deleteFiles) {
-      val referenced = t.meta.snapshots.flatMap(_.manifests).toSet
-      val now = System.currentTimeMillis()
-      Fs.list(MetaIO.metadataDir(t.root))
-        .filter(p => p.getFileName.toString.startsWith("manifest-") &&
-          !referenced.contains(p.getFileName.toString) &&
-          now - Files.getLastModifiedTime(p).toMillis >= orphanMinAgeMs)
-        .foreach(Files.deleteIfExists(_))
+    // Orphan sweeps: manifests no snapshot lists (a lost CAS attempt writes
+    // its manifests first) and data files no manifest lists (outputs of
+    // killed, never-committed units). Min-age guard: an in-flight writer's
+    // outputs are in no snapshot yet, so only files old enough that no live
+    // writer can still be about to commit them go. Liveness is read from the
+    // FRESH post-CAS metadata, after the disk listing (arguments evaluate in
+    // order): a snapshot committed concurrently references files absent from
+    // the planning-time set, and the min-age guard alone must not be their
+    // only protection (orphanMinAgeMs = 0 is a supported single-writer mode).
+    val now = System.currentTimeMillis()
+    def unreferencedOld(dir: Path, onDisk: Seq[String], referenced: Set[String]): Seq[String] =
+      onDisk.filter(p => !referenced.contains(p) &&
+        now - Files.getLastModifiedTime(dir.resolve(p)).toMillis >= orphanMinAgeMs)
+    deleteListed(metaDir, unreferencedOld(metaDir,
+      Fs.list(metaDir).map(_.getFileName.toString).filter(_.startsWith("manifest-")),
+      t.meta.snapshots.flatMap(_.manifests).toSet).map(_ -> 0L))
+    val dataDir = rootDir.resolve("data")
+    val onDisk = if (!Files.exists(dataDir)) Nil else {
+      val walk = Files.walk(dataDir)
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+        .map(p => rootDir.relativize(p).toString).toVector
+      finally walk.close()
     }
-
-    // Orphan sweep: data files on disk referenced by NO manifest of any
-    // retained snapshot (e.g. outputs of killed, never-committed units).
-    // The disk listing is driver-side (a storage-API LIST).
-    var orphans = 0L
-    if (sweepOrphans && deleteFiles) {
-      val dataDir = Paths.get(t.root, "data")
-      if (Files.exists(dataDir)) {
-        val rootAbs = Paths.get(t.root).toAbsolutePath
-        val now = System.currentTimeMillis()
-        val walk = Files.walk(dataDir)
-        val onDisk = try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          .collect {
-            // Min-age guard: an in-flight job's just-written unit outputs are
-            // not yet in any manifest; only sweep files old enough that no
-            // live writer can still be about to commit them.
-            case p if now - Files.getLastModifiedTime(p).toMillis >= orphanMinAgeMs =>
-              rootAbs.relativize(p.toAbsolutePath).toString
-          }.toSeq
-        finally walk.close()
-        if (onDisk.nonEmpty) {
-          // Liveness against FRESH post-CAS metadata, not the planning-time
-          // set: a snapshot committed concurrently between planning and the
-          // sweep references files absent from the old live set, and the
-          // min-age guard alone must not be their only protection
-          // (orphanMinAgeMs=0 is a supported single-writer mode).
-          val freshLive = listedPaths(t.root, t.meta.snapshots.flatMap(_.manifests).distinct)
-          val swept = onDisk.filterNot(freshLive.contains)
-          orphans = deleteListed(t.spark, t.root, swept.map(_ -> 0L))._1
-          deleteEmptiedDirs(t.root, swept)
-        }
-      }
-    }
+    val swept = unreferencedOld(rootDir, onDisk,
+      listedPaths(t.root, t.meta.snapshots.flatMap(_.manifests).distinct))
+    val (orphans, _) = deleteListed(rootDir, swept.map(_ -> 0L))
+    deleteEmptiedDirs(t.root, swept)
 
     graft.lineage.Metrics.recordJob(t.root, "expire", jobT0, Map(
       "expired" -> (known -- retainSet).size.toString,

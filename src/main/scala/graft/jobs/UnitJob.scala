@@ -1,5 +1,6 @@
 package graft.jobs
 
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
@@ -14,7 +15,8 @@ import graft.table.{DataFileMeta, GraftTable, Snapshot}
  * the hash marker only after success" ordering (see [[Lineage]]):
  *  1. a job whose COMMITTED marker exists reports that snapshot
  *     ([[committed]]);
- *  2. units a killed attempt committed are skipped ([[resumed]]);
+ *  2. units a killed attempt committed are skipped while their output files
+ *     exist ([[resumed]]);
  *  3. the rest run on a bounded pool, a batch of units per task (one Spark
  *     job per batch: Compact's waves); a pool of 1 runs them in order;
  *  4. each unit's lineage is written only after its output files are. The
@@ -33,8 +35,12 @@ final class UnitJob(root: String, val jobId: String, startNs: Long) {
   /** The snapshot an earlier attempt of this job committed, if any. */
   def committed: Option[Long] = Lineage.committedSnapshot(root, jobId)
 
-  /** Units an earlier, killed attempt finished. */
+  /** Units an earlier, killed attempt finished whose output files all still
+    * exist. Those outputs are in no snapshot, so an orphan sweep between the
+    * kill and this run may have deleted them; such a unit runs again and its
+    * lineage is replaced. */
   lazy val resumed: Map[Int, UnitLineage] = Lineage.committedUnits(root, jobId)
+    .filter { case (_, u) => u.filesOut.forall(f => Files.exists(Paths.get(root, f.path))) }
 
   /** Mark the job done at `snapshotId` (also used when a job finds its own
     * commit raced a kill before the marker was written). */

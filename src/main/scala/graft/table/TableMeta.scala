@@ -20,7 +20,10 @@ import graft.util.Fs
  *                                          one entry per data file, with min/max stats
  *                                          and an image_id Bloom sketch
  *   metadata/version-hint.text             latest committed version (atomic rename)
- *   lineage/<job-id>/part-<k>.json         per-partition job lineage (resume)
+ *   lineage/<job-id>/unit-<k>.json         one finished unit's lineage, k six digits (resume)
+ *   lineage/<job-id>/COMMITTED             the job's committed snapshot id
+ *   lineage/<job-id>/<artifact>            job artifacts, e.g. centroids.txt (IVF fit)
+ *   lineage/_metrics/metrics-<pid>.jsonl   job and query event records
  * }}}
  *
  * Re-grounds the reference's table-metadata file with config-hash change
@@ -166,10 +169,7 @@ case class DataFileMeta(
   * snapshot expiration a reference-counting/reachability problem
   * (reference analog: sourceChunkIds refcount lists, core/src/types.ts:34-41). */
 case class ManifestData(files: Seq[DataFileMeta],
-    partition: Option[String] = None) {
-  def totalBytes: Long = files.map(_.fileSizeBytes).sum
-  def totalRows: Long = files.map(_.rowCount).sum
-}
+    partition: Option[String] = None)
 
 case class Snapshot(
     snapshotId: Long,

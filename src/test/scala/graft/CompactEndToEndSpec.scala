@@ -1,6 +1,8 @@
 package graft
 
-import graft.jobs.Compact
+import java.nio.file.{Files, Paths}
+
+import graft.jobs.{Compact, ExpireSnapshots}
 import graft.table.{EqString, GeLong, GraftTable}
 
 /** SURVEY.md §7.3 minimum end-to-end slice: tiny-file table -> Compact ->
@@ -80,6 +82,25 @@ class CompactEndToEndSpec extends GraftSuite {
     // Running again on the new base is a fresh (smaller or empty) plan and
     // must preserve results either way.
     Compact.run(t, targetBytes = binBytes)
+    assert(snapshotReplay(t) == before)
+  }
+
+  test("resume after an orphan sweep re-runs the units whose outputs were swept") {
+    val t = TestFixtures.freshTable("compact-resume-swept")
+    val before = snapshotReplay(t)
+    val binBytes = 192L * 1024
+    intercept[Exception] {
+      Compact.run(t, targetBytes = binBytes, maxConcurrentBins = 1,
+        failAfterUnits = Some(1), waveSize = 3)
+    }
+    // The killed run's outputs are in no snapshot: a sweep with no min-age
+    // deletes them all, the finished unit's output included.
+    val swept = ExpireSnapshots.run(t, Seq(t.currentSnapshot.snapshotId), orphanMinAgeMs = 0L)
+    assert(swept.orphansSwept >= 1)
+    val res = Compact.run(t, targetBytes = binBytes, maxConcurrentBins = 1, waveSize = 3)
+    assert(t.scan().count() == TestFixtures.BaseRows)
+    assert(res.binsResumed == 0 && res.binsExecuted == res.binsPlanned, res.toString)
+    assert(t.currentFiles.forall(f => Files.exists(Paths.get(t.root, f.path))))
     assert(snapshotReplay(t) == before)
   }
 

@@ -119,34 +119,37 @@ class ExpireSnapshotsSpec extends GraftSuite {
     assert(t.meta.snapshots.map(_.snapshotId) == Seq(s3))
   }
 
-  test("physical deletes above the driver cutoff run distributed across partitions") {
-    val root = TestFixtures.workRoot.resolve("expire-dist-del")
-    Files.createDirectories(root.resolve("data"))
-    // Strictly above DriverDeleteMax so the executor-side foreachPartition
-    // branch is the one exercised: it must start a Spark job.
-    val n = ExpireSnapshots.DriverDeleteMax + 48
-    val listed = (0 until n).map { i =>
-      val rel = s"data/f$i.parquet"
-      Files.write(root.resolve(rel), Array[Byte](1, 2, 3))
-      rel -> 3L
+  test("a 600-file deletion runs in the driver loop and starts no Spark job") {
+    val t = GraftTable.create(TestFixtures.workRoot.resolve("expire-600").toString, spark)
+    val n = 600
+    Files.createDirectories(Paths.get(t.root, "data", "d0"))
+    val files = (0 until n).map { i =>
+      val rel = s"data/d0/f$i.parquet"
+      Files.write(Paths.get(t.root, rel), Array[Byte](1, 2, 3))
+      DataFileMeta(rel, 3L, 1L, Map.empty)
     }
-    val ((cnt, bytes), jobs) = sparkJobsDuring(
-      ExpireSnapshots.deleteListed(spark, root.toString, listed))
-    assert(jobs.nonEmpty, "above the cutoff deletion must run executor-side")
-    assert(cnt == n.toLong, s"expected $n deletions, got $cnt")
-    assert(bytes == 3L * n)
-    assert(listed.forall { case (r, _) => !Files.exists(root.resolve(r)) })
+    t.commit("append", files, Set.empty)
+    t.commit("delete", Nil, files.map(_.path).toSet)
+    val (res, jobs) = sparkJobsDuring(ExpireSnapshots.run(t,
+      retain = Seq(t.currentSnapshot.snapshotId)))
+    assert(jobs.isEmpty, s"expire started Spark jobs: $jobs")
+    assert(res.deletedDataFiles == n.toLong && res.deletedBytes == 3L * n, res.toString)
+    assert(files.forall(f => !Files.exists(Paths.get(t.root, f.path))))
+    assert(!Files.exists(Paths.get(t.root, "data", "d0")), "the emptied directory goes too")
     // Idempotent on re-run: nothing left to delete.
-    assert(ExpireSnapshots.deleteListed(spark, root.toString, listed) == ((0L, 0L)))
+    assert(ExpireSnapshots.deleteListed(Paths.get(t.root), files.map(f => f.path -> 3L)) ==
+      ((0L, 0L)))
+    val again = ExpireSnapshots.run(t, retain = Seq(t.currentSnapshot.snapshotId))
+    assert(again.expiredSnapshots.isEmpty && again.deletedDataFiles == 0L)
   }
 
-  test("expire starts no Spark job when the deletion list is within the driver cutoff") {
+  test("expire starts no Spark job") {
     val t = TestFixtures.freshTable("expire-no-jobs")
     t.writeDataFiles(graft.images.ImageGen.df(spark, 20, seed = 5L, partitions = 1))
     Compact.run(t, targetBytes = 4L * 1024 * 1024)
     val (res, jobs) = sparkJobsDuring(ExpireSnapshots.run(t,
       retain = Seq(t.currentSnapshot.snapshotId), orphanMinAgeMs = 0L))
-    assert(res.deletedDataFiles > 0 && res.deletedDataFiles <= ExpireSnapshots.DriverDeleteMax)
+    assert(res.deletedDataFiles > 0)
     assert(res.orphansSwept > 0, "the uncommitted files go through the sweep")
     assert(jobs.isEmpty, s"expire started Spark jobs: $jobs")
   }

@@ -59,34 +59,6 @@ class IvfIndexSpec extends GraftSuite {
     assert(t.scan().select("vec_id").distinct().count() == 180)
   }
 
-  test("incremental append: stored-centroid assignment keeps files bucket-pure and probes current") {
-    val root = TestFixtures.workRoot.resolve("ivf-append").toString
-    val base = fixture(4).filter(col("vec_id") <= 150)
-    val more = fixture(4).filter(col("vec_id") > 150) // 30 late arrivals
-    val r = BuildIvf.run(spark, base, "vec_id", "embedding", root,
-      initIds = Seq(1L, 61L, 121L))
-    assert(r.rows == 150)
-    val centsBefore = BuildIvf.centroidsOf(r.table).map { case (c, v) => (c, v.toSeq) }
-    val added = BuildIvf.append(r.table, more, "vec_id", "embedding")
-    assert(added == 30)
-    val t = r.table
-    // No retrain: the quantizer is frozen in properties.
-    assert(BuildIvf.centroidsOf(t).map { case (c, v) => (c, v.toSeq) } == centsBefore)
-    // Appended files are bucket-pure too; manifests stay valued.
-    t.currentFiles.foreach { f =>
-      val st = f.stats("bucket")
-      assert(st.min.isDefined && st.min == st.max, s"mixed-bucket file: $f")
-    }
-    val snap = t.currentSnapshot
-    assert(snap.manifests.flatMap(snap.partitionOfManifest).size == snap.manifests.size)
-    // A probe near cluster 3's center (ids 121..180 — the appended rows
-    // land here too) sees the late arrivals.
-    val got = BuildIvf.probe(t, Array(0.0, 0.0, 10.0, 0.0), nprobe = 1,
-      topK = 60).collect()
-    assert(got.map(_.getLong(0)).toSet == (121L to 180L).toSet,
-      "probe must see appended vectors in their inverted list")
-  }
-
   test("salted sub-bucket routing: oversized buckets split into multiple " +
       "bucket-pure files written in parallel; probes open only their bucket") {
     val root = TestFixtures.workRoot.resolve("ivf-salted").toString
@@ -135,16 +107,15 @@ class IvfIndexSpec extends GraftSuite {
     assert(e2.getMessage.contains("dims"), e2.getMessage)
   }
 
-  test("kill mid-build resumes from lineage without retraining or rewriting finished waves") {
+  test("kill mid-build resumes from the persisted fit without retraining") {
     import scala.jdk.CollectionConverters._
     val root = TestFixtures.workRoot.resolve("ivf-resume").toString
     val df = fixture(4)
     def build(fail: Option[Int]) = BuildIvf.run(spark, df, "vec_id",
-      "embedding", root, initIds = Seq(1L, 61L, 121L), waves = 3,
-      failAfterUnits = fail)
-    intercept[RuntimeException] { build(fail = Some(1)) }
-    // The kill left: persisted fit artifact + exactly one committed wave,
-    // and NO published snapshot (readers never see a partial index).
+      "embedding", root, initIds = Seq(1L, 61L, 121L), failAfterUnits = fail)
+    intercept[RuntimeException] { build(fail = Some(0)) }
+    // The kill left the persisted fit, no committed unit, and NO published
+    // snapshot (readers never see a partial index).
     val jdir = java.nio.file.Files.list(java.nio.file.Paths.get(root, "lineage"))
       .iterator().asScala
       .filter(p => java.nio.file.Files.isDirectory(p) &&
@@ -153,23 +124,19 @@ class IvfIndexSpec extends GraftSuite {
       case other => fail(s"expected one lineage job dir, got $other")
     }
     assert(java.nio.file.Files.exists(jdir.resolve("centroids.txt")),
-      "trained centroids persisted before any wave ran")
+      "trained centroids persisted before the routed write ran")
     val jid = jdir.getFileName.toString
-    assert(graft.lineage.Lineage.committedUnits(root, jid).keySet == Set(0))
+    assert(graft.lineage.Lineage.committedUnits(root, jid).isEmpty)
     assert(graft.table.MetaIO.load(root).get._2.currentSnapshotId.isEmpty,
       "no snapshot published by the killed build")
-    // Resume: completes the remaining waves, reuses wave 0's files, and
-    // does NOT retrain (exactly one kmeans-fit metrics row ever).
+    // Resume: writes the unit and does NOT retrain (exactly one kmeans-fit
+    // metrics row ever).
     val r = build(fail = None)
     assert(r.rows == 180 && r.k == 3 && r.table.currentSnapshot.operation == "append")
     val fits = graft.lineage.Metrics.events(root)
       .count(e => e.kind == "job" && e.name == "kmeans-fit")
     assert(fits == 1, s"resume must not retrain: $fits fit runs recorded")
-    val units = graft.lineage.Lineage.committedUnits(root, jid)
-    assert(units.keySet == Set(0, 1, 2))
-    val current = r.table.currentFiles.map(_.path).toSet
-    assert(units(0).filesOut.map(_.path).toSet.subsetOf(current),
-      "wave-0 outputs written before the kill are reused, not rewritten")
+    assert(graft.lineage.Lineage.committedUnits(root, jid).keySet == Set(0))
     // The resumed index is correct end-to-end.
     val got = BuildIvf.probe(r.table, Array(0.0, 10.0, 0.0, 0.0), nprobe = 1,
       topK = 60).collect()
@@ -222,6 +189,9 @@ class IvfIndexSpec extends GraftSuite {
     val units = graft.lineage.Lineage.committedUnits(root, jid)
     assert(units.values.flatMap(_.filesIn).toSeq.sorted == files.sorted,
       "every input file covered by exactly one unit")
+    val current = r.table.currentFiles.map(_.path).toSet
+    assert(unitsAfterKill.values.flatMap(_.filesOut.map(_.path)).toSet.subsetOf(current),
+      "outputs of units finished before the kill are reused, not rewritten")
     // Bucket purity + valued manifests survive the file-group shape.
     r.table.currentFiles.foreach { f =>
       val st = f.stats("bucket")

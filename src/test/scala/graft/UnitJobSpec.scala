@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
 import scala.jdk.CollectionConverters._
@@ -51,7 +51,12 @@ class UnitJobSpec extends AnyFunSuite {
     def attempt(fail: Option[Int]) = {
       val job = new UnitJob(root, "kill", System.nanoTime())
       (job, job.run(units = 4, poolSize = 1, failAfterUnits = fail) { _.map { u =>
-        written.add(u); output(u)
+        written.add(u)
+        // A real unit's output file exists before its lineage: resume
+        // re-runs a finished unit whose file is gone.
+        Files.createDirectories(Paths.get(root, "data"))
+        Files.write(Paths.get(root, s"data/out-$u.parquet"), Array[Byte](1))
+        output(u)
       } })
     }
     intercept[RuntimeException] { attempt(Some(2)) }

@@ -96,41 +96,6 @@ object Curves {
     out
   }
 
-  /** Inverse: scalar index -> axes (for property tests / bijectivity). */
-  def hilbertAxes(index: Long, n: Int, bits: Int): Array[Long] = {
-    val x = new Array[Long](n)
-    // de-interleave
-    var pos = n * bits - 1
-    var b = bits - 1
-    while (b >= 0) {
-      var i = 0
-      while (i < n) {
-        x(i) |= ((index >>> pos) & 1L) << b
-        pos -= 1
-        i += 1
-      }
-      b -= 1
-    }
-    // TransposetoAxes (Gray decode + undo excess work), per Skilling 2004.
-    var t = x(n - 1) >>> 1
-    var i = n - 1
-    while (i > 0) { x(i) ^= x(i - 1); i -= 1 }
-    x(0) ^= t
-    var m = 2L
-    while (m != (1L << bits)) {
-      val q = m
-      val p = q - 1
-      i = n - 1
-      while (i >= 0) {
-        if ((x(i) & q) != 0) x(0) ^= p
-        else { val tt = (x(0) ^ x(i)) & p; x(0) ^= tt; x(i) ^= tt }
-        i -= 1
-      }
-      m <<= 1
-    }
-    x
-  }
-
   def hilbert3(a: Long, b: Long, c: Long): Long =
     hilbertIndex(Array(a, b, c), 21)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.Bridge
 import graft.expr.{functions => gf}
 import graft.lineage.{Lineage, Metrics}
 import graft.operators.KMeans
-import graft.table.{DataFileMeta, GraftTable, InLong, MetaIO, PartitionSpec}
+import graft.table.{DataFileMeta, GraftTable, InLong, MetaIO, PartitionSpec, Snapshot}
 
 /**
  * IVF ANN index BUILD as a lakehouse table-maintenance job — the batch
@@ -159,14 +159,17 @@ object BuildIvf {
       val t = GraftTable.load(root, spark)
       val k = t.meta.properties(KProp).toInt
       t.meta.snapshot(sid) match {
-        case Some(s) => Result(t, k,
-          s.summary.get("added-rows").map(_.toLong).getOrElse(0L),
-          s.summary.get("added-files").map(_.toInt).getOrElse(0))
+        case Some(s) => summaryResult(t, k, s)
         case None =>
           val units = Lineage.committedUnits(root, job.jobId).values
           Result(t, k, units.map(_.rows).sum, units.map(_.filesOut.size).sum)
       }
     }
+
+  /** The result of the build that committed `s`, from `s`'s own summary. */
+  private def summaryResult(t: GraftTable, k: Int, s: Snapshot): Result =
+    Result(t, k, s.summary.get("added-rows").map(_.toLong).getOrElse(0L),
+      s.summary.get("added-files").map(_.toInt).getOrElse(0))
 
   /** Cheap pre-training refusal: a table at root that already has a
     * committed snapshot, with NO fit artifact for this jobId, is either a
@@ -220,9 +223,7 @@ object BuildIvf {
       ex.meta.currentSnapshot
         .filter(_.summary.get("job-id").contains(job.jobId)).foreach { s =>
           job.markCommitted(s.snapshotId)
-          return Left(Result(ex, k,
-            s.summary.get("added-rows").map(_.toLong).getOrElse(0L),
-            s.summary.get("added-files").map(_.toInt).getOrElse(0)))
+          return Left(summaryResult(ex, k, s))
         }
       // Any OTHER committed snapshot means the index was already built by
       // a run with DIFFERENT parameters (the fit is deterministic, so

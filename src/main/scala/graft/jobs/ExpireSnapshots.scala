@@ -50,10 +50,9 @@ object ExpireSnapshots {
     }
 
   /** Delete each commit directory holding one of `paths` (root-relative
-    * data files just deleted) once no `.parquet` file is left in it, with
-    * whatever else remains (markers of older writers). A commit directory
-    * belongs to one write, so no writer can still be adding to one whose
-    * data files are dead. */
+    * data files just deleted) once no `.parquet` file is left in it. A
+    * commit directory belongs to one write, so no writer can still be
+    * adding to one whose data files are dead. */
   private def deleteEmptiedDirs(root: String, paths: Seq[String]): Unit = {
     val dataDir = Paths.get(root, "data").toAbsolutePath
     paths.map(p => Paths.get(root, p).toAbsolutePath.getParent).distinct
@@ -113,30 +112,7 @@ object ExpireSnapshots {
         retainSet.contains(s.snapshotId) || !known.contains(s.snapshotId))
       require(cur.currentSnapshotId.forall(id => keep.exists(_.snapshotId == id)),
         "concurrent commit moved the current snapshot to an id this expire would drop")
-      // Legacy streaming idempotence markers live ONLY in snapshot
-      // summaries on tables written before the properties watermark;
-      // deleting those snapshots would reopen the duplicate window for a
-      // batch redelivered across the upgrade boundary. Fold the max batch
-      // id per checkpoint into the watermark properties in the SAME CAS
-      // (properties survive expiry; StreamingIngest checks them first).
-      // The fold covers ALL snapshots' markers — kept AND dropped: folding
-      // only dropped ones could write a watermark BELOW a kept snapshot's
-      // marker (drop batch 5, keep batch 7 -> property 5), and
-      // alreadyCommitted short-circuits on the property when present, so a
-      // redelivery of batch 7 would re-append duplicate rows. The property
-      // is a running max over committed batches, so folding kept markers
-      // early is always sound.
-      val legacyWm: Map[String, String] = cur.snapshots
-        .flatMap(s => for {
-          ck <- s.summary.get(graft.streaming.StreamingIngest.CheckpointKey)
-          bid <- s.summary.get(graft.streaming.StreamingIngest.BatchIdKey)
-        } yield (graft.streaming.StreamingIngest.watermarkKey(ck), bid.toLong))
-        .groupBy(_._1)
-        .map { case (k, vs) =>
-          k -> math.max(vs.map(_._2).max,
-            cur.properties.get(k).map(_.toLong).getOrElse(Long.MinValue)).toString
-        }
-      Some(cur.copy(snapshots = keep, properties = cur.properties ++ legacyWm))
+      Some(cur.copy(snapshots = keep))
     }
 
     val rootDir = Paths.get(t.root)

@@ -47,7 +47,7 @@ object RewriteManifests {
           fs.sortBy(f =>
             (f.stats.get("phash").flatMap(_.min).map(_.toLong).getOrElse(Long.MinValue), f.path))
             .grouped(math.max(1, targetFilesPerManifest))
-            .map(g => MetaIO.writeManifest(t.root, g, pv) -> pv)
+            .map(g => MetaIO.writeManifest(t.root, g) -> pv)
         }
         // Same files, new manifest organization — CAS'd against the exact
         // version the file set was derived from.

@@ -68,8 +68,7 @@ final class UnitJob(root: String, val jobId: String, startNs: Long) {
           if (finished.incrementAndGet() > k)
             throw new RuntimeException(s"injected failure after $k units")
         }
-        Lineage.commitUnit(root, UnitLineage(jobId, u, in, out,
-          out.map(_.rowCount).sum, out.map(_.fileSizeBytes).sum, ms))
+        Lineage.commitUnit(root, UnitLineage(jobId, u, in, out, ms))
       }
     }
     val pool = Executors.newFixedThreadPool(math.max(1, poolSize))

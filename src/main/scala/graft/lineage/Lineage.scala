@@ -19,16 +19,18 @@ import graft.util.Fs
  * (pipeline.ts:63-72): a unit's lineage row is written only after its output
  * files are durable, so a restarted job diffs planned-units vs committed-units
  * and re-runs exactly the difference. Unit outputs are content-complete
- * (full DataFileMeta), so resume never re-reads the data.
+ * (full DataFileMeta), so resume never re-reads the data, and a unit's rows
+ * and bytes are sums over them.
  */
 case class UnitLineage(
     jobId: String,
     unit: Int,
     filesIn: Seq[String],
     filesOut: Seq[DataFileMeta],
-    rows: Long,
-    bytes: Long,
-    durationMs: Long)
+    durationMs: Long) {
+  def rows: Long = filesOut.map(_.rowCount).sum
+  def bytes: Long = filesOut.map(_.fileSizeBytes).sum
+}
 
 object Lineage {
   def dir(root: String, jobId: String): Path = Paths.get(root, "lineage", jobId)

@@ -19,11 +19,6 @@ import graft.table.GraftTable
  */
 object StreamingIngest {
 
-  // private[graft]: ExpireSnapshots folds these summary markers into the
-  // watermark properties before deleting pre-watermark-scheme snapshots.
-  private[graft] val BatchIdKey = "stream-batch-id"
-  private[graft] val CheckpointKey = "stream-checkpoint"
-
   private[graft] def watermarkKey(checkpointDir: String): String =
     s"stream.batch-watermark.$checkpointDir"
 
@@ -35,30 +30,17 @@ object StreamingIngest {
     * O(1) property lookup (not a scan of the ever-growing snapshot list),
     * and ExpireSnapshots can never delete the marker (properties survive
     * snapshot expiry). batchIds are monotonic per checkpoint (foreachBatch
-    * is serial), so <= watermark means already committed. */
+    * is serial), so <= watermark means already committed, and a checkpoint
+    * without the property has committed no batch. */
   private def alreadyCommitted(t: GraftTable, checkpointDir: String,
       batchId: Long): Boolean =
-    t.meta.properties.get(watermarkKey(checkpointDir)) match {
-      case Some(w) => w.toLong >= batchId
-      case None =>
-        // Upgrade path: tables whose streaming history predates the
-        // properties watermark carry only per-snapshot summary markers. A
-        // batch redelivered across that boundary must still be recognized,
-        // so fall back to the snapshot-summary scan (the next successful
-        // append writes the watermark property, and ExpireSnapshots
-        // backfills it from any summaries it deletes — the markers cannot
-        // be expired away).
-        t.meta.snapshots.exists(s =>
-          s.summary.get(CheckpointKey).contains(checkpointDir) &&
-            s.summary.get(BatchIdKey).exists(_.toLong >= batchId))
-    }
+    t.meta.properties.get(watermarkKey(checkpointDir)).exists(_.toLong >= batchId)
 
   private[graft] def idempotentAppend(t: GraftTable, batch: DataFrame,
       checkpointDir: String, batchId: Long): Boolean = {
     if (alreadyCommitted(t, checkpointDir, batchId)) false
     else {
       GraftTable.append(t, batch,
-        summary = Map(BatchIdKey -> batchId.toString, CheckpointKey -> checkpointDir),
         propertiesUpdate = Map(watermarkKey(checkpointDir) -> batchId.toString))
       true
     }
@@ -72,16 +54,16 @@ object StreamingIngest {
     * continuously instead of letting small files pile up for a nightly job;
     * both maintenance commits are snapshot-atomic, so concurrent readers
     * only ever see before/after states. Re-grounds the reference's
-    * index-after-ingest refresh (pipeline.ts:63-94) as table upkeep. */
+    * index-after-ingest refresh (pipeline.ts:63-94) as table upkeep. The
+    * query drains what is available now (`Trigger.AvailableNow`) and stops;
+    * clustering uses the z-order curve. */
   def appendStreamWithUpkeep(t: GraftTable, stream: DataFrame,
       checkpointDir: String,
       targetBytes: Long = 8L * 1024 * 1024,
-      maintainEveryFiles: Int = 64,
-      curve: String = "zorder",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      maintainEveryFiles: Int = 64): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           // Maintenance still runs when the batch itself was a replayed
@@ -90,7 +72,7 @@ object StreamingIngest {
           val small = t.currentFiles.count(graft.jobs.Compact.isSmall(_, targetBytes))
           if (small >= maintainEveryFiles) {
             graft.jobs.Compact.run(t, targetBytes)
-            graft.jobs.Cluster.runIncremental(t, curve, targetBytes): Unit
+            graft.jobs.Cluster.runIncremental(t, "zorder", targetBytes): Unit
           }
         }
       }

@@ -92,9 +92,10 @@ object PruneFilter {
 
   /** Do `file`'s min/max stats admit rows matching `f`? Missing stats =>
     * keep. String bounds compare in unsigned UTF-8 byte order ([[Utf8Ord]]) —
-    * the same ordering that produced both sides. One-sided stats (older
-    * manifests dropped an untrustworthy truncated max) leave the missing side
-    * unbounded rather than falling through to the all-null check. */
+    * the same ordering that produced both sides. [[FooterStats.of]] writes
+    * both bounds or neither; the `forall`s read a missing bound as
+    * unbounded, so an entry with one bound keeps rather than reaching the
+    * all-null check. */
   def statsMayMatch(file: DataFileMeta, f: PruneFilter): Boolean = {
     val st = file.stats.get(f.col)
     st match {
@@ -409,10 +410,10 @@ class GraftTable(val root: String, val spark: SparkSession) {
         val data = MetaIO.readManifest(root, name)
         // Removal never widens a manifest's value set, so the partition
         // value carries through rewrites unchanged.
-        val pv = parent.flatMap(_.partitionOfManifest(name)).orElse(data.partition)
+        val pv = parent.flatMap(_.partitionOfManifest(name))
         val files = data.files.filterNot(f => removedPaths.contains(f.path))
         if (files.size == data.files.size) Some(name -> pv)
-        else if (files.nonEmpty) Some(MetaIO.writeManifest(root, files, pv) -> pv)
+        else if (files.nonEmpty) Some(MetaIO.writeManifest(root, files) -> pv)
         else None // fully-removed manifest: dropped
       }
       // Added files GROUP BY partition value (one manifest per value) when a
@@ -420,7 +421,7 @@ class GraftTable(val root: String, val spark: SparkSession) {
       // real. Files that span partitions (or lack stats) go into one
       // unpartitioned manifest that every filtered scan still opens.
       val fresh = PartitionSpec.group(m.partitionSpec, added).map { case (pv, fs) =>
-        MetaIO.writeManifest(root, fs.sortBy(_.path), pv) -> pv
+        MetaIO.writeManifest(root, fs.sortBy(_.path)) -> pv
       }
       // propertiesUpdate rides the SAME CAS as the snapshot: a caller's
       // watermark (e.g. the streaming batch-id guard) and its data commit
@@ -550,9 +551,8 @@ object GraftTable {
 
   /** Append rows as a new snapshot. */
   def append(t: GraftTable, df: DataFrame, targetFiles: Option[Int] = None,
-      summary: Map[String, String] = Map.empty,
       propertiesUpdate: Map[String, String] = Map.empty): Snapshot = {
     val files = t.writeDataFiles(df, targetFiles)
-    t.commit("append", files, Set.empty, summary, propertiesUpdate)
+    t.commit("append", files, Set.empty, propertiesUpdate = propertiesUpdate)
   }
 }

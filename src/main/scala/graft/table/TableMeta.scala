@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 import org.json4s.{DefaultFormats, Formats}
@@ -15,7 +15,7 @@ import graft.util.Fs
  * {{{
  *   data/<commit>/part-<i>-<uuid>.parquet  immutable data files, one per write task
  *                                          (final path, no staging or markers)
- *   metadata/v<N>.metadata.json            table metadata versions (CAS via CREATE_NEW)
+ *   metadata/v<N>.metadata.json            table metadata versions (CAS: create-if-absent)
  *   metadata/manifest-<uuid>.json          immutable manifest files (shared across snapshots):
  *                                          one entry per data file, with min/max stats
  *                                          and an image_id Bloom sketch
@@ -167,9 +167,10 @@ case class DataFileMeta(
 /** An immutable manifest: a list of data files. Shared (by path) across
   * snapshots that did not touch its files — this sharing is what makes
   * snapshot expiration a reference-counting/reachability problem
-  * (reference analog: sourceChunkIds refcount lists, core/src/types.ts:34-41). */
-case class ManifestData(files: Seq[DataFileMeta],
-    partition: Option[String] = None)
+  * (reference analog: sourceChunkIds refcount lists, core/src/types.ts:34-41).
+  * Its partition value, if any, is stored only in the snapshots that list
+  * it ([[Snapshot.partitionValues]]). */
+case class ManifestData(files: Seq[DataFileMeta])
 
 case class Snapshot(
     snapshotId: Long,
@@ -179,9 +180,10 @@ case class Snapshot(
     manifests: Seq[String], // metadata-relative manifest file names
     summary: Map[String, String],
     // manifest name -> partition value, for manifests whose files all share
-    // one transform(column) value; resident in the snapshot so partition
-    // pruning decides per MANIFEST without opening any of them. Absent
-    // entries (or None, pre-partition-spec snapshots) always scan.
+    // one transform(column) value: the only copy of a manifest's value,
+    // resident in the snapshot so partition pruning decides per MANIFEST
+    // without opening any of them. Absent entries (None when no manifest
+    // has a value) always scan.
     partitionValues: Option[Map[String, String]] = None) {
   def partitionOfManifest(name: String): Option[String] =
     partitionValues.flatMap(_.get(name))
@@ -218,8 +220,8 @@ case class TableMetadata(
 }
 
 /** Filesystem-level metadata IO with an optimistic-CAS commit protocol:
-  * a new `v<N>.metadata.json` is created with CREATE_NEW (fails if a
-  * concurrent writer committed N first), then `version-hint.text` is swapped
+  * a new `v<N>.metadata.json` is created whole by [[Fs.createAtomic]] (fails
+  * if a concurrent writer committed N first), then `version-hint.text` is swapped
   * by atomic rename. Readers resolve the hint, falling back to a directory
   * scan. This replaces the reference's create-table race-guard promise
   * (storage-lancedb/src/lancedb-vector-storage.ts:79-92) with a durable
@@ -301,14 +303,8 @@ object MetaIO {
     * writer won the CAS. Only table creation calls it directly; every
     * mutation goes through [[casRetry]]. */
   private[table] def tryCommit(root: String, base: Int, meta: TableMetadata): Boolean = {
-    Files.createDirectories(metadataDir(root))
-    val target = versionFile(root, base + 1)
     val body = TableJson.write(meta).getBytes(StandardCharsets.UTF_8)
-    try {
-      Files.write(target, body, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => return false
-    }
+    if (!Fs.createAtomic(versionFile(root, base + 1), body)) return false
     metaCache.put((root, base + 1, body.length.toLong), meta)
     Fs.writeAtomic(hintFile(root), String.valueOf(base + 1))
     true
@@ -336,12 +332,13 @@ object MetaIO {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Write `files` as a new manifest carrying partition value `pv` and
-    * return its name — the one manifest writer. Manifests are immutable
-    * under a fresh name, so the parse is cached at write time. */
-  def writeManifest(root: String, files: Seq[DataFileMeta], pv: Option[String]): String = {
+  /** Write `files` as a new manifest and return its name — the one
+    * manifest writer. The caller hands the name and its partition value to
+    * [[TableMetadata.appendSnapshot]]. Manifests are immutable under a
+    * fresh name, so the parse is cached at write time. */
+  def writeManifest(root: String, files: Seq[DataFileMeta]): String = {
     val name = s"manifest-${UUID.randomUUID().toString.take(12)}.json"
-    val m = ManifestData(files, pv)
+    val m = ManifestData(files)
     Fs.writeAtomic(metadataDir(root).resolve(name), TableJson.write(m))
     manifestCache.put((root, name), m)
     name

@@ -1,7 +1,7 @@
 package graft.util
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption}
 import java.util.{Comparator, UUID}
 import scala.jdk.CollectionConverters._
 
@@ -35,12 +35,27 @@ object Fs {
     * file or the whole new one, never a torn write. Creates the parent
     * directory. Tmp names start with "." and so match no listing filter. */
   def writeAtomic(target: Path, content: String): Unit = {
-    val dir = target.getParent
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    val tmp = writeTmp(target, content.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Create `target` with `content` unless it exists, atomically: a tmp
+    * sibling is written, then hard-linked as `target` (link(2) fails if the
+    * name exists), so a reader sees no file or the whole one, never an
+    * empty or torn one. Returns false, writing nothing, if `target`
+    * already exists. */
+  def createAtomic(target: Path, content: Array[Byte]): Boolean = {
+    val tmp = writeTmp(target, content)
+    try { Files.createLink(target, tmp); true }
+    catch { case _: FileAlreadyExistsException => false }
+    finally Files.delete(tmp)
+  }
+
+  private def writeTmp(target: Path, content: Array[Byte]): Path = {
+    val dir = target.getParent
+    Files.createDirectories(dir)
+    Files.write(dir.resolve(s".${target.getFileName}.${UUID.randomUUID()}.tmp"), content)
   }
 
   /** Sorted *.parquet files directly under `dir`; a plain-file `dir` is

@@ -50,4 +50,23 @@ class MetaIOSpec extends GraftSuite {
     val m = MetaIO.load(root).get._2
     assert(m.snapshots.map(_.operation) == (1 to 21).map(i => s"rival-$i"))
   }
+
+  test("a concurrent reader never sees a version file before it is whole") {
+    val root = freshRoot("cas-torn-read")
+    // Large versions widen the window between a file's creation and its
+    // last byte, where a reader would parse an empty or cut JSON document.
+    val pad = "x" * (512 * 1024)
+    @volatile var done = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reader = new Thread(() =>
+      while (!done) try MetaIO.load(root) catch { case e: Throwable => errors.add(e) })
+    reader.start()
+    try (1 to 30).foreach { i =>
+      MetaIO.casRetry(root, "big") { (_, m) =>
+        Some(m.copy(properties = m.properties + ("pad" -> s"$i$pad")))
+      }
+    } finally { done = true; reader.join() }
+    assert(errors.isEmpty, s"${errors.size} failed loads, first: ${errors.peek()}")
+    assert(MetaIO.load(root).get._1 == 31)
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingIngest
 import graft.table.GraftTable
@@ -24,8 +23,7 @@ class StreamingUpkeepSpec extends GraftSuite {
     val q = StreamingIngest.appendStreamWithUpkeep(t, stream,
       checkpointDir = work.resolve("ckpt").toString,
       targetBytes = 4L * 1024 * 1024,
-      maintainEveryFiles = 8,
-      trigger = Trigger.AvailableNow())
+      maintainEveryFiles = 8)
     q.awaitTermination(120000)
     assert(!q.isActive)
 
@@ -55,8 +53,7 @@ class StreamingUpkeepSpec extends GraftSuite {
     val t = GraftTable.create(work.resolve("tbl").toString, spark)
     val stream = spark.readStream.schema(t.schema).parquet(srcDir)
     val q = StreamingIngest.appendStreamWithUpkeep(t, stream,
-      checkpointDir = work.resolve("ckpt").toString,
-      trigger = Trigger.AvailableNow())
+      checkpointDir = work.resolve("ckpt").toString)
     q.awaitTermination(120000)
     assert(t.scan().count() == 60)
     assert(t.meta.snapshots.nonEmpty)
@@ -76,6 +73,10 @@ class StreamingUpkeepSpec extends GraftSuite {
     assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 0L))
     assert(t.scan().count() == 20)
     assert(t.meta.snapshots.count(_.operation == "append") == 1)
+    // The property is the only record: the append's summary carries no
+    // per-batch marker.
+    assert(!t.currentSnapshot.summary.keys.exists(_.startsWith("stream-")),
+      s"summary: ${t.currentSnapshot.summary}")
     // A different batch id (or another checkpoint) is new work.
     assert(StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 1L))
     assert(t.scan().count() == 40)
@@ -84,88 +85,18 @@ class StreamingUpkeepSpec extends GraftSuite {
 
     // The guard is a per-checkpoint WATERMARK in table properties, committed
     // in the same CAS as the append — so it is O(1) to check and SURVIVES
-    // snapshot expiry (the old snapshot-summary markers were deleted with
-    // their snapshots, reopening the duplicate window on a late replay).
+    // snapshot expiry: once every snapshot that appended a batch is gone,
+    // the property alone still skips its replay.
     assert(t.meta.properties.get(StreamingIngest.watermarkKey(ckpt)).contains("1"))
     graft.jobs.ExpireSnapshots.run(t, Seq(t.currentSnapshot.snapshotId))
     assert(t.meta.snapshots.size == 1, "history expired to current only")
     assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 0L),
       "replay of an expired-snapshot batch must STILL be skipped")
     assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 1L))
+    // The kept snapshot (ckpt2's batch 1) has no marker either: only its
+    // property can skip the replay.
+    assert(!StreamingIngest.idempotentAppend(t, batch, work.resolve("ckpt2").toString, 1L))
     assert(t.scan().count() == 60)
-  }
-
-  test("legacy streaming table (summary markers, no watermark property): replay across the upgrade boundary is still skipped") {
-    val work = TestFixtures.workRoot.resolve("stream-legacy")
-    val t = GraftTable.create(work.resolve("tbl").toString, spark)
-    val batch = graft.images.ImageGen.df(spark, 15, seed = 91L, partitions = 2)
-    val ckpt = work.resolve("ckpt").toString
-    // Simulate a pre-watermark-scheme commit: batch markers live ONLY in the
-    // snapshot summary (what the old code wrote), no table property.
-    GraftTable.append(t, batch, summary = Map(
-      "stream-batch-id" -> "3", "stream-checkpoint" -> ckpt))
-    assert(t.meta.properties.get(StreamingIngest.watermarkKey(ckpt)).isEmpty)
-    // Redelivery of a legacy-committed batch must be recognized via the
-    // summary-scan fallback, not re-appended as duplicates.
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 3L))
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 2L))
-    assert(t.scan().count() == 15)
-    // A marker for a DIFFERENT checkpoint does not mask this one's batches.
-    assert(StreamingIngest.idempotentAppend(t, batch,
-      work.resolve("other-ckpt").toString, batchId = 3L))
-    // New batches append and write the watermark; from then on the O(1)
-    // property path covers the legacy ids too (monotonic batch ids).
-    assert(StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 4L))
-    assert(t.meta.properties.get(StreamingIngest.watermarkKey(ckpt)).contains("4"))
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 3L))
-    assert(t.scan().count() == 45)
-  }
-
-  test("expire backfills legacy stream markers into watermark properties (no reopened duplicate window)") {
-    val work = TestFixtures.workRoot.resolve("stream-legacy-expire")
-    val t = GraftTable.create(work.resolve("tbl").toString, spark)
-    val batch = graft.images.ImageGen.df(spark, 10, seed = 92L, partitions = 1)
-    val ckpt = work.resolve("ckpt").toString
-    // Legacy streaming commit (summary markers only), then an unrelated
-    // commit so the legacy snapshot is expirable.
-    GraftTable.append(t, batch, summary = Map(
-      "stream-batch-id" -> "5", "stream-checkpoint" -> ckpt))
-    GraftTable.append(t, batch)
-    graft.jobs.ExpireSnapshots.run(t, Seq(t.currentSnapshot.snapshotId))
-    assert(t.meta.snapshots.size == 1, "legacy snapshot expired")
-    // The expire folded the marker into the watermark property in the same
-    // CAS — a redelivery after routine upkeep must still be recognized.
-    assert(t.meta.properties.get(StreamingIngest.watermarkKey(ckpt)).contains("5"))
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 5L))
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 4L))
-    assert(t.scan().count() == 20)
-  }
-
-  test("expire dropping an OLDER legacy marker while keeping a newer one never regresses the watermark") {
-    val work = TestFixtures.workRoot.resolve("stream-legacy-two")
-    val t = GraftTable.create(work.resolve("tbl").toString, spark)
-    val batch = graft.images.ImageGen.df(spark, 10, seed = 93L, partitions = 1)
-    val ckpt = work.resolve("ckpt").toString
-    // Two legacy streaming commits (summary markers only, no property) for
-    // the SAME checkpoint: batch 5, then batch 7.
-    GraftTable.append(t, batch, summary = Map(
-      "stream-batch-id" -> "5", "stream-checkpoint" -> ckpt))
-    val newer = GraftTable.append(t, batch, summary = Map(
-      "stream-batch-id" -> "7", "stream-checkpoint" -> ckpt))
-    // Expire DROPS the batch-5 snapshot but KEEPS the batch-7 one. The
-    // backfilled property must fold markers from kept AND dropped
-    // snapshots: a property of 5 would make alreadyCommitted (which
-    // short-circuits on the property when present) re-append a redelivered
-    // batch 7 — the canonical restart-redelivery case — as duplicates,
-    // even though its marker snapshot is still live.
-    graft.jobs.ExpireSnapshots.run(t, Seq(newer.snapshotId))
-    assert(t.meta.snapshots.map(_.snapshotId) == Seq(newer.snapshotId))
-    assert(t.meta.properties.get(StreamingIngest.watermarkKey(ckpt)).contains("7"),
-      s"watermark must cover the KEPT legacy marker: ${t.meta.properties}")
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 7L),
-      "redelivery of the kept legacy batch must be skipped")
-    assert(!StreamingIngest.idempotentAppend(t, batch, ckpt, batchId = 5L))
-    assert(t.scan().count() == 20)
   }
 
   test("cluster exchange is skew-safe: a hot curve key collapses to one partition, rows survive") {

@@ -75,7 +75,7 @@ class UnitJobSpec extends AnyFunSuite {
     val fdDir = new java.io.File("/proc/self/fd")
     assume(fdDir.isDirectory, "needs /proc/self/fd")
     val root = freshRoot("unitjob-fds")
-    Lineage.commitUnit(root, UnitLineage("fds", 0, Seq("in-0"), output(0)._2, 1L, 10L, 0L))
+    Lineage.commitUnit(root, UnitLineage("fds", 0, Seq("in-0"), output(0)._2, 0L))
     def openFds(): Int = { System.gc(); fdDir.list().length }
     val before = openFds()
     (1 to 200).foreach(_ => assert(Lineage.committedUnits(root, "fds").size == 1))
